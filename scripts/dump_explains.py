@@ -1,11 +1,17 @@
-"""Dump the formatted physical plans of the flagship access-path plans
-to EXPLAINS.md — committed evidence for the claims the shape tests
-assert (partition pruning, pushed filters, zero-shuffle co-located
-joins, codes-only scans), readable without running Spark.
+"""Dump formatted physical plans.
+
+Without names, writes the flagship access-path plans to EXPLAINS.md —
+committed evidence for the claims the shape tests assert (partition
+pruning, pushed filters, zero-shuffle co-located joins, codes-only
+scans), readable without running Spark. With ``--tag`` and plan names,
+builds the prepared layouts and writes each named plan's full explain
+to ``<out-dir>/<name>_<tag>.txt``, for before/after plan diffs.
 
 Usage::
 
     python scripts/dump_explains.py [--sf /root/testdata/sf0.001]
+    python scripts/dump_explains.py --tag before [--sf SF_DIR] \
+        [--out-dir plans] NAME [NAME ...]
 """
 
 from __future__ import annotations
@@ -80,11 +86,37 @@ def _override_sf(base_sf: str, sibling: str) -> str:
     return cand if os.path.isdir(cand) else base_sf
 
 
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def capture(spark, plans, sf: str, tag: str, names: list[str], out_dir: str) -> None:
+    """Write ``<out_dir>/<name>_<tag>.txt`` for each named plan."""
+    from venus_spark.prepared import prepare_all
+
+    os.makedirs(out_dir, exist_ok=True)
+    prepare_all(spark, sf)
+    for name in names:
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(f"# {name} — explain('formatted') at {sf} [{tag}]\n\n")
+            f.write(_explain(plans[name].fn(spark, sf)))
+        print(f"wrote {path}")
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
     ap.add_argument("--out", default="EXPLAINS.md")
+    ap.add_argument("--tag", help="capture the named plans under this tag")
+    ap.add_argument("--out-dir", default="plans")
+    ap.add_argument("names", nargs="*", metavar="NAME")
     args = ap.parse_args()
+    if bool(args.tag) != bool(args.names):
+        ap.error("--tag and plan names go together")
 
     from venus_spark.plans import all_plans
     from venus_spark.session import get_spark
@@ -92,6 +124,12 @@ def main() -> int:
     spark = get_spark(cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
     plans = all_plans()
+    unknown = sorted(set(args.names) - set(plans))
+    if unknown:
+        ap.error(f"unknown plans: {unknown}")
+    if args.tag:
+        capture(spark, plans, args.sf, args.tag, args.names, args.out_dir)
+        return 0
     lines = [
         "# EXPLAINS — flagship physical plans",
         "",
@@ -106,11 +144,7 @@ def main() -> int:
         sf = args.sf
         if name in SF_OVERRIDE:
             sf = _override_sf(args.sf, SF_OVERRIDE[name])
-        df = plans[name].fn(spark, sf)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        text = buf.getvalue()
+        text = _explain(plans[name].fn(spark, sf))
         # Trim the per-node field dumps; keep the tree + scan details.
         tree, _, details = text.partition("\n\n")
         keep = [

@@ -226,3 +226,85 @@ def test_q17_window_davg_equals_grouped_davg_join(spark):
         assert struct.pack("<d", r["part_avg"]) == struct.pack(
             "<d", r["part_avg_g"]
         ), r
+
+
+def _ragged_rows(vecs: list[list[float]]) -> list[list[float] | None]:
+    """``vecs`` with one NULL vector, one 63-dim vector and one vector
+    holding a NULL element appended — the rows the kernels must answer
+    with NULL."""
+    return vecs + [None, vecs[5][:-1], vecs[6][:-1] + [None]]
+
+
+def test_pq_encoder_agrees_with_oracle_argmin_and_nulls_bad_rows(spark, rng):
+    """The Arrow PQ encoder's codes equal the oracle's per-subspace
+    ``ROW_NUMBER() OVER (ORDER BY d, cb_id)`` argmin on random vectors
+    (a duplicated codeword makes ties real), and NULL, short and
+    NULL-element vectors get NULL codes instead of a failed task."""
+    from venus_spark.functions.sqlgen import l2sq_sql
+    from venus_spark.operators import similarity as sim
+    from venus_spark.prepared import _pq_code_rows
+
+    vecs = _random_vectors(rng)
+    codebook = [vecs[i] for i in range(20, 20 + sim.PQ_KS)]
+    codebook[6] = codebook[5]  # identical codewords: the lower id wins
+    rows = _ragged_rows(vecs)
+    df = spark.createDataFrame(
+        [(i, v, 0) for i, v in enumerate(rows)],
+        "vec_id long, embedding array<float>, label int",
+    )
+    got = {r["vec_id"]: r["codes"] for r in _pq_code_rows(df, codebook).collect()}
+    assert [got[i] for i in range(len(vecs), len(rows))] == [None, None, None]
+
+    con = duckdb.connect()
+    con.register("v", pd.DataFrame({"vec_id": range(len(vecs)), "v": vecs}))
+    con.register("cb", pd.DataFrame({"cb_id": range(len(codebook)), "cv": codebook}))
+    d = sim.PQ_DSUB
+    sub = "{0}[(CAST(j AS INT) * %d + 1):(CAST(j AS INT) * %d + %d)]" % (d, d, d)
+    want = {}
+    for vec_id, j, cb_id in con.sql(f"""
+        SELECT vec_id, j, cb_id FROM (
+          SELECT vec_id, j, cb_id,
+                 {l2sq_sql(sub.format('v'), sub.format('cv'))} AS d
+          FROM v CROSS JOIN RANGE({sim.PQ_M}) t(j) CROSS JOIN cb)
+        QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id, j ORDER BY d, cb_id) = 1
+    """).fetchall():
+        want.setdefault(vec_id, [0] * sim.PQ_M)[j] = cb_id
+    assert {i: got[i] for i in range(len(vecs))} == want
+    assert not any(6 in c for c in want.values())
+
+
+def test_cosine_pair_kernel_agrees_bitwise_and_nulls_bad_rows(spark, rng):
+    """The Arrow pair-cosine kernel is bit-identical to the oracle's
+    cosine fold, and a pair with a NULL, short or NULL-element vector
+    gets a NULL similarity instead of a failed task."""
+    from venus_spark.functions.sqlgen import cosine_sql
+    from venus_spark.operators import vector_kernels
+
+    vecs = _random_vectors(rng)
+    rows = _ragged_rows(vecs)
+    pairs = [(i, i + 1, rows[i], rows[i + 1]) for i in range(len(rows) - 1)]
+    pairs.append((len(rows), len(rows) + 1, rows[-3], rows[-3]))  # NULL, NULL
+    df = spark.createDataFrame(
+        pairs, "id_a long, id_b long, va array<double>, vb array<double>"
+    )
+    got = {
+        r["id_a"]: r["sim_raw"]
+        for r in df.mapInArrow(
+            vector_kernels.cosine_pairs(), "id_a long, id_b long, sim_raw double"
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.register(
+        "p",
+        pd.DataFrame({
+            "id_a": range(len(vecs) - 1),
+            "va": vecs[:-1],
+            "vb": vecs[1:],
+        }),
+    )
+    want = dict(con.sql(f"SELECT id_a, {cosine_sql('va', 'vb')} FROM p").fetchall())
+    for i, w in want.items():
+        assert _bits(got[i]) == _bits(w), f"pair {i}: {got[i]!r} vs {w!r}"
+    bad = set(got) - set(want)
+    assert len(bad) == len(pairs) - len(want) == 4
+    assert all(got[i] is None for i in bad)

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from venus_spark.functions import cosine, dot, dround, lit_doubles
+from venus_spark.operators import vector_kernels
 
 
 def as_double(vec: Column) -> Column:
@@ -273,45 +274,6 @@ def _dlit(x: float) -> str:
     return f"{float(x)!r}D"
 
 
-def _l2sq_flat_sql(vname: str, offset: int, cw: list[float]) -> str:
-    """L2² of ``vname[offset+1 .. offset+len]`` against a literal
-    codeword as FLAT left-associated scalar arithmetic — bit-identical
-    to the shared left fold ((0+t0)+t1)+... but built as one SQL string.
-    The folded-lambda form (zip_with + aggregate) costs one py4j round
-    trip per node to BUILD and is interpreted per element to RUN; with
-    PQ_M * PQ_KS distance expressions per row, both costs dominate —
-    measured 6.9 s -> 0.9 s for the encode scan at sf0.1. Requires
-    fixed-dimension vectors (PQ needs that anyway): element_at past the
-    end would raise under ANSI mode."""
-    terms = []
-    for i, c in enumerate(cw):
-        e = f"(element_at({vname}, {offset + i + 1}) - {_dlit(c)})"
-        terms.append(f"{e} * {e}")
-    return "(" + " + ".join(terms) + ")"
-
-
-def pq_code_sql(vname: str, j: int, codebook: list[list[float]]) -> str:
-    """Code id of subspace ``j``: argmin over the codewords.
-    array_min on struct(d, c) breaks distance ties on the lower code
-    id, matching the oracle's ROW_NUMBER ORDER BY (d, cb_id)."""
-    cands = ", ".join(
-        f"named_struct('d', {_l2sq_flat_sql(vname, j * PQ_DSUB, pq_sub(c, j))}, "
-        f"'c', {ci})"
-        for ci, c in enumerate(codebook)
-    )
-    return f"array_min(array({cands})).c"
-
-
-def pq_codes_col(vname: str, codebook: list[list[float]]) -> Column:
-    """All PQ_M subspace codes as one array<int> column — the 8-byte
-    representation a PQ index persists per vector. ``vname`` is the
-    NAME of an array<double> column (the expression is generated as SQL
-    text; see _l2sq_flat_sql for why)."""
-    return F.expr(
-        "array(" + ", ".join(pq_code_sql(vname, j, codebook) for j in range(PQ_M)) + ")"
-    )
-
-
 def pq_lut(q: list[float], codebook: list[list[float]]) -> list[list[float]]:
     """ADC lookup tables: lut[j][c] = L2²(q_j, codeword_jc)."""
     return [
@@ -333,64 +295,6 @@ def pq_adc_dist(codes_name: str, lut: list[list[float]]) -> Column:
     return F.expr("(" + " + ".join(terms) + ")")
 
 
-def _cosine_pairs_arrow():
-    """Arrow-batched pair-cosine kernel (guide §4.2, r16 — the same
-    treatment as the PQ audit scan): for each candidate pair row
-    (id_a, id_b, va, vb), compute sim = dot(va,vb) / (‖va‖·‖vb‖) in
-    vectorized numpy with EXACTLY the JVM kernels' IEEE op order —
-    every dot is the zero-seeded left fold of x*y over the dimension
-    (sequential adds vectorized across rows), norms are sqrt of the
-    self-dot (recomputing a norm per pair yields the identical double:
-    the fold is deterministic), float32→float64 widening is exact, and
-    a zero denominator yields NULL (try_divide / DuckDB semantics).
-
-    Replaces an interpreted CodegenFallback fold per pair that
-    Catalyst re-inlined up to SIX times through dround's guarded CASE
-    (the r15 localCheckpoint barrier pinned it to one — this removes
-    the barrier AND the interpretation; flat JVM unrolling at dim 64
-    was measured 3-10x worse under janino's 64 KB method limit).
-    Raises on ragged or null vectors rather than diverging silently."""
-    import numpy as np
-    import pyarrow as pa
-
-    def _mat(arr, n):
-        if arr.null_count:
-            raise ValueError("cosine pair kernel: null vector")
-        lens = arr.value_lengths().to_numpy(zero_copy_only=False)
-        if n and (lens.min() != lens.max()):
-            raise ValueError("cosine pair kernel: ragged vectors")
-        return np.asarray(arr.flatten(), dtype=np.float64).reshape(n, -1)
-
-    def _fold_dot(x, y):
-        acc = np.zeros(x.shape[0], dtype=np.float64)  # the 0.0 seed
-        for i in range(x.shape[1]):
-            acc = acc + x[:, i] * y[:, i]
-        return acc
-
-    def score(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            va = _mat(b.column("va"), n)
-            vb = _mat(b.column("vb"), n)
-            num = _fold_dot(va, vb)
-            den = np.sqrt(_fold_dot(va, va)) * np.sqrt(_fold_dot(vb, vb))
-            zero = den == 0.0
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sim = num / den
-            yield pa.record_batch(
-                [
-                    b.column("id_a"),
-                    b.column("id_b"),
-                    pa.array(sim, mask=zero),
-                ],
-                names=["id_a", "id_b", "sim_raw"],
-            )
-
-    return score
-
-
 def cosine_pairs_in_buckets(
     df: DataFrame,
     bucket_col: str = "label",
@@ -403,12 +307,14 @@ def cosine_pairs_in_buckets(
     problem — buckets come from LSH, IVF, or a coarse label).
 
     The bucket self-join stays JVM-side; the per-pair cosine runs in
-    one Arrow-batched numpy pass (:func:`_cosine_pairs_arrow` — r16,
+    one Arrow-batched numpy pass (:func:`vector_kernels.cosine_pairs`,
     bit-identical fold order; the id columns must be integral, which
-    every caller's vec/doc ids are). Rounding and the threshold filter
-    apply JVM-side to the materialized ``sim_raw`` column — MapInArrow
-    is an optimizer barrier, so Catalyst can no longer re-inline the
-    kernel into the dround CASE or push the filter into the join."""
+    every caller's vec/doc ids are). A pair with a NULL or mismatched
+    vector gets a NULL similarity, which the threshold drops. Rounding
+    and the threshold filter apply JVM-side to the materialized
+    ``sim_raw`` column — MapInArrow is an optimizer barrier, so
+    Catalyst cannot re-inline the kernel into the dround CASE or push
+    the filter into the join."""
     t = df.select(
         F.col(id_col),
         F.col(bucket_col).alias("bucket"),
@@ -426,7 +332,7 @@ def cosine_pairs_in_buckets(
         F.col("b.v").alias("vb"),
     )
     scored = pairs.mapInArrow(
-        _cosine_pairs_arrow(), "id_a long, id_b long, sim_raw double"
+        vector_kernels.cosine_pairs(), "id_a long, id_b long, sim_raw double"
     )
     return scored.select(
         "id_a", "id_b", dround(F.col("sim_raw")).alias("cosine_sim")

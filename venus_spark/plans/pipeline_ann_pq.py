@@ -11,12 +11,13 @@ instead of dim multiplies (Jégou et al., "Product Quantization for
 Nearest Neighbor Search", TPAMI 2011 — public literature; the reference
 has no vector surface, SURVEY.md §2C).
 
-Kernel and constants live in :mod:`venus_spark.operators.similarity`
-(PQ_M/PQ_DSUB/PQ_KS/PQ_CB_MOD); the codebook is a deterministic coreset
-sample rather than offline k-means — Lloyd refinement is demonstrated
-separately by ``kmeans_refine``; sampling keeps the whole plan
-in-engine and parity-checkable while preserving the exact encode/ADC
-dataflow a trained codebook would use.
+Constants live in :mod:`venus_spark.operators.similarity`
+(PQ_M/PQ_DSUB/PQ_KS/PQ_CB_MOD), the encode and scoring kernels in
+:mod:`venus_spark.operators.vector_kernels`; the codebook is a
+deterministic coreset sample rather than offline k-means — Lloyd
+refinement is demonstrated separately by ``kmeans_refine``; sampling
+keeps the whole plan in-engine and parity-checkable while preserving
+the exact encode/ADC dataflow a trained codebook would use.
 
 Parity discipline: all distances are the shared left-fold L2² kernel
 (:func:`venus_spark.functions.l2sq` / ``l2sq_sql``) over doubles, ties
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 from venus_spark.functions import l2sq, dround, lit_doubles
 from venus_spark.functions.sqlgen import dround_sql, l2sq_sql
 from venus_spark.operators import similarity as sim
+from venus_spark.operators import vector_kernels
 from venus_spark.plans.registry import plan
 from venus_spark.sources import load_table
 
@@ -118,11 +120,11 @@ def _collect_codebook(cb_df: DataFrame) -> list[list[float]]:
 def _adc_topk(codes_df: DataFrame, lut: list[list[float]]) -> DataFrame:
     """The ADC scan + top-k tail over a codes relation — ONE copy so a
     parity-relevant change (tie-break, rounding) cannot diverge between
-    the prepared plan and its live twin (review r11 pass-4 #4)."""
+    the prepared plan, its live twin and the IVF-PQ plan. Rows without
+    codes (a NULL or wrong-length vector) are never ranked."""
     return (
-        codes_df.select(
-            "vec_id", sim.pq_adc_dist("codes", lut).alias("adist")
-        )
+        codes_df.filter(F.col("codes").isNotNull())
+        .select("vec_id", sim.pq_adc_dist("codes", lut).alias("adist"))
         .orderBy("adist", "vec_id")
         .limit(_PQ_K)
         .select("vec_id", dround("adist").alias("adc_l2sq"))
@@ -136,96 +138,32 @@ def _query_vec(df: DataFrame) -> list[float]:
     return [float(x) for x in qrow["embedding"]]
 
 
-def _pq_scores_arrow(q: list[float], codebook: list[list[float]],
-                     lut: list[list[float]]):
-    """Arrow-batched PQ encode + ADC + exact-distance kernel (guide §4.2
-    — hand whole batches to vectorized native code) for the recompute
-    audit plan. Every arithmetic step reproduces the JVM expression
-    kernels' IEEE-double op sequence EXACTLY, so the values are
-    bit-identical to the r15 expression form (and to the oracle):
-
-    - encode distance (``_l2sq_flat_sql``): left-associated sum of
-      ``(x-c)*(x-c)`` terms with no seed → accumulate sequentially over
-      the PQ_DSUB positions, vectorized across rows (each numpy
-      elementwise op is the same scalar IEEE binary64 op per lane);
-      argmin tie-break on the LOWER code id = ``np.argmin``'s
-      first-minimum rule;
-    - ADC (``pq_adc_dist``): LUT terms added left-to-right over the
-      PQ_M subspaces, no seed;
-    - exact L2² (``functions.l2sq``): zero-seeded left fold of
-      ``(x-y)*(x-y)`` over the full dimension (0.0 + t == t for the
-      non-negative first term, so the seed is exact too);
-    - the float32→float64 widening Spark's ``cast`` performs is the
-      same exact widening numpy does.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    dim = len(q)
-    cb = np.asarray(codebook, dtype=np.float64)  # (PQ_KS, dim)
-    qv = np.asarray(q, dtype=np.float64)
-    lut_np = np.asarray(lut, dtype=np.float64)  # (PQ_M, PQ_KS)
-
-    def score(batches):
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            v = np.asarray(
-                b.column("embedding").flatten(), dtype=np.float64
-            ).reshape(n, dim)
-            edist = np.zeros(n, dtype=np.float64)  # the fold's 0.0 seed
-            for i in range(dim):
-                t = v[:, i] - qv[i]
-                edist = edist + t * t
-            adist = None
-            for j in range(sim.PQ_M):
-                dists = np.empty((n, cb.shape[0]), dtype=np.float64)
-                for c in range(cb.shape[0]):
-                    acc = None
-                    for i in range(j * sim.PQ_DSUB, (j + 1) * sim.PQ_DSUB):
-                        t = v[:, i] - cb[c, i]
-                        tt = t * t
-                        acc = tt if acc is None else acc + tt
-                    dists[:, c] = acc
-                term = lut_np[j, np.argmin(dists, axis=1)]
-                adist = term if adist is None else adist + term
-            yield pa.record_batch(
-                [b.column("vec_id"), pa.array(adist), pa.array(edist)],
-                names=["vec_id", "adist", "edist"],
-            )
-
-    return score
-
-
 @plan("sim_pq_adc_topk", oracle=_pq_oracle())
 def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ encode + ADC top-k as ONE Arrow-batched scan pass.
 
     The codebook (<= 16 rows) and query vector are the only driver-side
     fetches — the same bounded pattern as the other query-vector plans.
-    r16 (guide §4.2, VERDICT r15 #1): the encode + ADC + exact-distance
-    arithmetic moved from ~16k generated expression nodes (the PQ_M×k_s
-    flat L2² forest — janino-hostile, seconds of plan/codegen overhead
-    per run, interpreted wherever the 64 KB method limit de-codegened a
-    stage) to a vectorized numpy kernel over Arrow batches
-    (:func:`_pq_scores_arrow` — bit-identical op order, see its
-    docstring). Only (vec_id, embedding) crosses the Python boundary
-    (§4.1: select exactly what the kernel reads); nothing wide ever
-    moves; the only exchange is the final TakeOrderedAndProject merge.
-    The exact_l2sq column is the per-row audit of how well ADC
-    approximates the true distance."""
+    Encode, ADC and exact distance run in one vectorized numpy kernel
+    over Arrow batches (:func:`vector_kernels.pq_scorer`, the encoder
+    the write paths use, bit-identical to the oracle's op order). Only
+    (vec_id, embedding) crosses the Python boundary; the only exchange
+    is the final TakeOrderedAndProject merge. A NULL or wrong-length
+    vector scores NULL and is never ranked. The exact_l2sq column is
+    the per-row audit of how well ADC approximates the true
+    distance."""
     emb = load_table(spark, sf_dir, "embeddings")
     codebook = sim.pq_codebook_rows(emb)
     q = _query_vec(emb)
     lut = sim.pq_lut(q, codebook)
 
     scored = emb.select("vec_id", "embedding").mapInArrow(
-        _pq_scores_arrow(q, codebook, lut),
+        vector_kernels.pq_scorer(q, codebook, lut, sim.PQ_M),
         "vec_id long, adist double, edist double",
     )
     return (
-        scored.orderBy("adist", "vec_id")
+        scored.filter(F.col("adist").isNotNull())
+        .orderBy("adist", "vec_id")
         .limit(_PQ_K)
         .select(
             "vec_id",
@@ -361,9 +299,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     codes_df, cb_df = embeddings_pq(spark, sf_dir)
     _, cents = embeddings_ivf(spark, sf_dir)
-    codebook = [
-        [float(x) for x in r["cv"]] for r in cb_df.orderBy("cb_id").collect()
-    ]
+    codebook = _collect_codebook(cb_df)
     q = _query_vec(load_table(spark, sf_dir, "embeddings"))
     lut = sim.pq_lut(q, codebook)
     qlit = lit_doubles(q)
@@ -379,12 +315,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = codes_df.filter(
         F.col("label").isin([r["cluster"] for r in probed])
     )
-    return (
-        pruned.select("vec_id", sim.pq_adc_dist("codes", lut).alias("adist"))
-        .orderBy("adist", "vec_id")
-        .limit(_PQ_K)
-        .select("vec_id", dround("adist").alias("adc_l2sq"))
-    )
+    return _adc_topk(pruned, lut)
 
 
 # --------------------------------------------------------------------------

@@ -31,6 +31,11 @@ from venus_spark.prepared.core import (  # noqa: F401
     _REPO_ROOT,
     PREPARED_ROOT,
     prepared_path,
+    _EVENT_COLS,
+    LAYOUT_SCHEMAS,
+    layout_schema,
+    read_layout,
+    layout_rows,
     _is_built,
     _stamp,
     _restamp_atomic,
@@ -121,6 +126,7 @@ from venus_spark.prepared.postings import (  # noqa: F401
     documents_postings,
     _build_postings_live,
     _postings_tables,
+    _read_postings_tables,
     _heal_postings_round_stamp,
     _postings_rows,
     _doclen_counters,
@@ -170,11 +176,16 @@ from venus_spark.prepared.events import (  # noqa: F401
 )
 from venus_spark.prepared.vectors import (  # noqa: F401
     _IVF_CENT_META,
+    _IVF,
+    _IVF_CENT,
+    _PQ_CODES,
+    _PQ_CODEBOOK,
     embeddings_ivf,
     _heal_ivf_centroids,
     embeddings_pq,
     append_embeddings,
     _pq_code_rows,
+    _codebook_rows,
     _pq_saturated_codebook,
     append_embeddings_batch,
     _VEC_TOMBSTONES,

@@ -5,6 +5,7 @@ by every index family."""
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -15,8 +16,10 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from venus_spark.sources import load_table
+from venus_spark.operators import dedup as _dedup
+from venus_spark.sources import load_table, read_parquet
 from venus_spark.prepared import docs as _docs
 
 _REPO_ROOT = os.path.dirname(
@@ -37,6 +40,80 @@ def prepared_path(sf_dir: str, name: str) -> str:
     return os.path.join(
         _pkg.PREPARED_ROOT, os.path.basename(os.path.normpath(sf_dir)), name
     )
+
+_EVENT_COLS = (
+    "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
+    "value double"
+)
+
+# Schema of every prepared layout, by its directory name, with the
+# partition columns last as Spark lists them. Reads declare it instead
+# of inferring it (a Spark job per read); writers check their rows
+# against it. A pending list ``<name>.pending`` is its index's schema
+# plus the ``_batch_id int`` partition column.
+LAYOUT_SCHEMAS = {
+    "documents_trgm.parquet": "doc_id bigint, text string, lang string, "
+    "source string, n_chars bigint, _trg array<string>, "
+    "_trg_bloom array<bigint>",
+    "documents_trgm_postings.parquet": "doc_id bigint, trg string",
+    "documents_minhash.parquet": "doc_id bigint, lang string, source string, "
+    "_sh array<string>, _sh_h array<bigint>, "
+    + ", ".join(f"mh_{i} bigint" for i in range(_dedup.N_PERM)),
+    "documents_postings.parquet": "term string, doc_id bigint, dl int, "
+    "tf bigint, pos array<int>",
+    "documents_dfreq.parquet": "term string, df bigint",
+    "documents_stats.parquet": "n_docs bigint, dl_sum bigint, avgdl double",
+    "documents_stats_counters.parquet": "doc_id bigint, dl bigint, _batch_id int",
+    "doc_tombstones.parquet": "doc_id bigint",
+    "embeddings_ivf.parquet": "vec_id bigint, embedding array<float>, label int",
+    "embeddings_ivf_centroids.parquet": "cluster int, centroid array<double>",
+    "embeddings_pq_codebook.parquet": "cb_id int, cv array<double>",
+    "embeddings_pq_codes.parquet": "vec_id bigint, codes array<int>, label int",
+    "vec_tombstones.parquet": "vec_id bigint",
+    "events_by_date.parquet": f"{_EVENT_COLS}, props string, date date",
+    "events_by_user.parquet": f"{_EVENT_COLS}, props string",
+    "events_zorder.parquet": f"{_EVENT_COLS}, props string",
+    "events_variant.parquet": f"{_EVENT_COLS}, props_v variant, data_v variant",
+    "events_daily_hll.parquet": "date date, event_type string, users_sk binary",
+    "events_hourly_rollup.parquet": "bucket_ts timestamp, n bigint, "
+    "sum_dec decimal(35,6)",
+    "events_kv_postings.parquet": "kv string, event_id bigint",
+    "events_kv_dfreq.parquet": "kv string, df bigint",
+}
+
+@functools.lru_cache(maxsize=None)
+def layout_schema(name: str) -> T.StructType:
+    """Declared schema of layout ``name`` (see :data:`LAYOUT_SCHEMAS`)."""
+    if name.endswith(".pending"):
+        return T.StructType.fromDDL(
+            f"{LAYOUT_SCHEMAS[name[: -len('.pending')]]}, _batch_id int"
+        )
+    return T.StructType.fromDDL(LAYOUT_SCHEMAS[name])
+
+def read_layout(spark: SparkSession, name: str, *paths: str) -> DataFrame:
+    """Read ``paths`` (the layout, a staged copy of it, or some of its
+    files) with layout ``name``'s declared schema — no Spark job."""
+    return read_parquet(spark, layout_schema(name), *paths)
+
+def layout_rows(df: DataFrame, name: str) -> DataFrame:
+    """The columns of layout ``name`` from ``df``, in declared order.
+    Raises when ``df`` lacks one or holds it with another type; columns
+    the layout does not declare are dropped. Writers call it before
+    writing, so a layout never holds files its declared reads would
+    misread."""
+    declared = layout_schema(name).fields
+    got = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    bad = {
+        f.name: got.get(f.name)
+        for f in declared
+        if got.get(f.name) != f.dataType.simpleString()
+    }
+    if bad:
+        raise ValueError(
+            f"rows for layout {name!r}: columns {bad} (missing or of another "
+            f"type), declared {layout_schema(name).simpleString()}"
+        )
+    return df.select(*(f.name for f in declared))
 
 def _is_built(path: str, meta: dict | None = None) -> bool:
     """Complete build = Spark's ``_SUCCESS`` marker plus (when the
@@ -237,7 +314,7 @@ def _append_batch_files(
     tmp = f"{dest}.abatch-{batch_id}.tmp"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    writer = df.write
+    writer = layout_rows(df, os.path.basename(dest)).write
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(tmp)
@@ -578,7 +655,8 @@ def _write_pending(
     exactly its own partition. ONE copy of the write discipline for all
     three pending-list indexes."""
     (
-        rows.withColumn("_batch_id", F.lit(batch_id))
+        layout_rows(rows, index_name)
+        .withColumn("_batch_id", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("_batch_id")
@@ -705,7 +783,7 @@ def _pending_union(
     bids -= _read_merged(base)
     if not bids:
         return base_df
-    pend_df = spark.read.parquet(pend).filter(
+    pend_df = read_layout(spark, index_name + ".pending", pend).filter(
         F.col("_batch_id").isin(sorted(bids))
     )
     return base_df.unionByName(

@@ -54,10 +54,12 @@ def documents_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = _anti_tombstones(
             spark, sf_dir, load_table(spark, sf_dir, "documents")
         )
-        _minhash_rows(docs).write.parquet(path)
+        _core.layout_rows(_minhash_rows(docs), _MINHASH_INDEX).write.parquet(path)
         _core._stamp(path, meta)
     # outstanding (not yet vacuumed) deletes filter at read
-    return _anti_tombstones(spark, sf_dir, spark.read.parquet(path))
+    return _anti_tombstones(
+        spark, sf_dir, _core.read_layout(spark, _MINHASH_INDEX, path)
+    )
 
 def _minhash_rows(docs: DataFrame) -> DataFrame:
     """Derived MinHash-index rows for a batch of documents — shared by
@@ -200,26 +202,32 @@ def append_documents(
         _append_intent_path(sf_dir) + ".tmp", _append_intent_path(sf_dir)
     )
     trgm_path = _core.prepared_path(sf_dir, "documents_trgm.parquet")
-    _trgm._trgm_rows(new_docs).write.mode("append").parquet(trgm_path)
+    _core.layout_rows(
+        _trgm._trgm_rows(new_docs), "documents_trgm.parquet"
+    ).write.mode("append").parquet(trgm_path)
     _core._mark_appended(trgm_path)
     tp_path = _core.prepared_path(sf_dir, "documents_trgm_postings.parquet")
-    _trgm._trgm_postings_rows(new_docs).write.mode("append").parquet(tp_path)
+    _core.layout_rows(
+        _trgm._trgm_postings_rows(new_docs), _trgm._TRGM_POST_INDEX
+    ).write.mode("append").parquet(tp_path)
     _core._mark_appended(tp_path)
     mh_path = _core.prepared_path(sf_dir, "documents_minhash.parquet")
-    _minhash_rows(new_docs).write.mode("append").parquet(mh_path)
+    _core.layout_rows(
+        _minhash_rows(new_docs), _MINHASH_INDEX
+    ).write.mode("append").parquet(mh_path)
     _core._mark_appended(mh_path)
     post_path = _core.prepared_path(sf_dir, "documents_postings.parquet")
     dfreq_path = _core.prepared_path(sf_dir, "documents_dfreq.parquet")
     stats_path = _core.prepared_path(sf_dir, "documents_stats.parquet")
     (
-        _postings._postings_rows(new_docs)
+        _core.layout_rows(_postings._postings_rows(new_docs), _postings._POSTINGS_INDEX)
         .repartitionByRange("term")
         .sortWithinPartitions("term", "doc_id")
         .write.mode("append")
         .parquet(post_path)
     )
     _core._mark_appended(post_path)
-    old = spark.read.parquet(stats_path).first()
+    old = _core.read_layout(spark, "documents_stats.parquet", stats_path).first()
     # The delete-adjustment sidecar is the exactly-once marker of
     # _scrub_postings_delete; the stats refresh replaces the whole
     # directory, so carry it like manifests are carried across every
@@ -366,10 +374,11 @@ def documents_minhash_pending(
     def _build() -> DataFrame:
         _core._refresh_on_external_change(spark, sf_dir, _MINHASH_INDEX)
         cur = _core._pending_bids_with_data(pend) - _core._read_merged(base)
-        pend_df = spark.read.parquet(pend).filter(
-            F.col("_batch_id").isin(sorted(cur))
-        ) if cur else spark.createDataFrame([], _minhash_rows(
-            load_table(spark, sf_dir, "documents").limit(0)).schema)
+        if not cur:
+            return spark.createDataFrame([], _core.layout_schema(_MINHASH_INDEX))
+        pend_df = _core.read_layout(
+            spark, _MINHASH_INDEX + ".pending", pend
+        ).filter(F.col("_batch_id").isin(sorted(cur)))
         return _anti_tombstones(spark, sf_dir, pend_df.drop("_batch_id"))
 
     return _retry.retryable(_build)
@@ -454,7 +463,7 @@ def document_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame | None:
         f.endswith(".parquet") for f in os.listdir(p)
     ):
         return None
-    return spark.read.parquet(p).select("doc_id").distinct()
+    return _core.read_layout(spark, _TOMBSTONES, p).select("doc_id").distinct()
 
 def _anti_tombstones(
     spark: SparkSession, sf_dir: str, df: DataFrame, id_col: str = "doc_id"
@@ -536,14 +545,16 @@ def _scrub_postings_delete(
     _core._recover_prepared_swaps(sf_dir, dfreq_path, ".refresh")
     applied = _read_delete_adj_applied(stats_path)
     if batch_id not in applied:
-        base_post = spark.read.parquet(post_path)
+        base_post = _core.read_layout(spark, _postings._POSTINGS_INDEX, post_path)
         counters_p = _core.prepared_path(sf_dir, _postings._POSTINGS_COUNTERS)
         adj_ids = new_ids
         if os.path.isdir(counters_p) and any(
             d.startswith("_batch_id=") for d in os.listdir(counters_p)
         ):
             adj_ids = adj_ids.join(
-                spark.read.parquet(counters_p).select("doc_id"),
+                _core.read_layout(
+                    spark, _postings._POSTINGS_COUNTERS, counters_p
+                ).select("doc_id"),
                 "doc_id",
                 "left_anti",
             )
@@ -565,7 +576,7 @@ def _scrub_postings_delete(
         )
         n2, dl2 = _postings._doclen_counters(base_rest)
         adj_ids.unpersist()
-        old = spark.read.parquet(stats_path).first()
+        old = _core.read_layout(spark, "documents_stats.parquet", stats_path).first()
 
         def _adjusted_stats(target: str) -> None:
             _postings._write_stats(
@@ -590,8 +601,9 @@ def _scrub_postings_delete(
     # first — re-select the stored column order so the rewritten layout
     # is schema-identical to a build.
     def survivors():
-        cur = spark.read.parquet(post_path)  # listing pins at creation:
-        # created inside the factory, AFTER the manifest snapshot
+        # the listing pins at creation: created inside the factory,
+        # AFTER the manifest snapshot
+        cur = _core.read_layout(spark, _postings._POSTINGS_INDEX, post_path)
         return cur.join(F.broadcast(new_ids), "doc_id", "left_anti").select(
             *cur.columns
         )
@@ -742,7 +754,7 @@ def vacuum_document_tombstones(spark: SparkSession, sf_dir: str) -> int:
         manifest = _core._read_abatch_manifest(path)
         merged = _core._read_merged(path)
         marked = _core._has_append_marker(path)
-        cur = spark.read.parquet(path)
+        cur = _core.read_layout(spark, name, path)
         n_dead = cur.join(F.broadcast(tb), "doc_id", "left_semi").count()
         if n_dead == 0:
             continue  # already physical for this index

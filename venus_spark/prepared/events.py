@@ -32,11 +32,13 @@ def events_by_date(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(path)
         ev = load_table(spark, sf_dir, "events")
         (
-            ev.withColumn("date", F.to_date("ts"))
+            _core.layout_rows(
+                ev.withColumn("date", F.to_date("ts")), "events_by_date.parquet"
+            )
             .write.partitionBy("date")
             .parquet(path)
         )
-    return spark.read.parquet(path)
+    return _core.read_layout(spark, "events_by_date.parquet", path)
 
 _KV_POST_META = {
     "doc": ["k", "type", "uid"],
@@ -93,8 +95,10 @@ def events_kv_dfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside them; refreshed after every append like the documents
     dfreq)."""
     events_kv_postings(spark, sf_dir)  # ensure source + dfreq built
-    return spark.read.parquet(
-        _core.prepared_path(sf_dir, "events_kv_dfreq.parquet")
+    return _core.read_layout(
+        spark,
+        "events_kv_dfreq.parquet",
+        _core.prepared_path(sf_dir, "events_kv_dfreq.parquet"),
     )
 
 def _write_kv_dfreq(spark: SparkSession, post_path: str, dfreq_path: str) -> None:
@@ -144,7 +148,10 @@ def events_kv_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.exists(path):
             shutil.rmtree(path)
         (
-            _events_kv_rows(load_table(spark, sf_dir, "events"))
+            _core.layout_rows(
+                _events_kv_rows(load_table(spark, sf_dir, "events")),
+                "events_kv_postings.parquet",
+            )
             .repartitionByRange("kv")
             .sortWithinPartitions("kv", "event_id")
             .write.parquet(path)
@@ -158,7 +165,7 @@ def events_kv_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dfreq lost or stale (crash mid-refresh) — re-derive from the
         # postings, which are the source of truth
         _write_kv_dfreq(spark, path, dfreq_path)
-    return spark.read.parquet(path)
+    return _core.read_layout(spark, "events_kv_postings.parquet", path)
 
 def backfill_events_kv_postings(spark: SparkSession, sf_dir: str) -> int:
     """Self-heal for deployments that upgrade to the kv-postings layout
@@ -242,7 +249,9 @@ def backfill_events_kv_postings(spark: SparkSession, sf_dir: str) -> int:
             "are unrecoverable from this layout."
         )
     ev = load_table(spark, sf_dir, "events")
-    recovered = spark.read.parquet(*batch_files).select(*ev.columns)
+    recovered = _core.read_layout(
+        spark, "events_by_date.parquet", *batch_files
+    ).select(*ev.columns)
     tmp = path + ".backfill.tmp"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
@@ -287,14 +296,14 @@ def events_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("user_id") % 3 != 0, F.col("user_id")).alias("uid"),
             )
         )
-        (
+        _core.layout_rows(
             ev.withColumn("props_v", F.parse_json("props"))
             .withColumn("data_v", F.parse_json(data))
-            .drop("props")
-            .write.parquet(path)
-        )
+            .drop("props"),
+            "events_variant.parquet",
+        ).write.parquet(path)
         _core._stamp(path, meta)
-    return spark.read.parquet(path)
+    return _core.read_layout(spark, "events_variant.parquet", path)
 
 def events_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``events`` re-laid-out for the correlation-key access path: range-
@@ -312,13 +321,15 @@ def events_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _core._is_built(path):
         if os.path.exists(path):
             shutil.rmtree(path)
-        ev = load_table(spark, sf_dir, "events")
+        ev = _core.layout_rows(
+            load_table(spark, sf_dir, "events"), "events_by_user.parquet"
+        )
         (
             ev.repartitionByRange(32, "user_id")
             .sortWithinPartitions("user_id", "ts")
             .write.parquet(path)
         )
-    return spark.read.parquet(path)
+    return _core.read_layout(spark, "events_by_user.parquet", path)
 
 _Z_BITS = 16
 
@@ -380,12 +391,14 @@ def events_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         if os.path.exists(path):
             shutil.rmtree(path)
-        ev = load_table(spark, sf_dir, "events")
+        ev = _core.layout_rows(
+            load_table(spark, sf_dir, "events"), "events_zorder.parquet"
+        )
         row = ev.agg(F.min(_hour_col()).alias("h")).first()  # write-time
         min_hour = 0 if row["h"] is None else int(row["h"])  # empty table OK
         _z_sorted(ev, min_hour, _Z_FILES).write.parquet(path)
         _core._stamp(path, {**meta, "min_hour": min_hour})
-    return spark.read.parquet(path)
+    return _core.read_layout(spark, "events_zorder.parquet", path)
 
 def _hour_col() -> Column:
     """Epoch-hour of ``ts`` — the time key of the Z curve and the
@@ -460,11 +473,12 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         if os.path.exists(path):
             shutil.rmtree(path)
-        _hourly_partial_rows(load_table(spark, sf_dir, "events")).write.parquet(
-            path
-        )
+        _core.layout_rows(
+            _hourly_partial_rows(load_table(spark, sf_dir, "events")),
+            "events_hourly_rollup.parquet",
+        ).write.parquet(path)
         _core._stamp(path, _ROLLUP_META)
-    return spark.read.parquet(path)
+    return _core.read_layout(spark, "events_hourly_rollup.parquet", path)
 
 _HLL_LGK = 14  # 2^14 registers: rsd ~0.8%, so a ±5% contract is >6 sigma
 
@@ -496,9 +510,12 @@ def events_daily_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     ):
         if os.path.exists(path):
             shutil.rmtree(path)
-        _daily_hll_rows(load_table(spark, sf_dir, "events")).write.parquet(path)
+        _core.layout_rows(
+            _daily_hll_rows(load_table(spark, sf_dir, "events")),
+            "events_daily_hll.parquet",
+        ).write.parquet(path)
         _core._stamp(path, _HLL_META)
-    return spark.read.parquet(path)
+    return _core.read_layout(spark, "events_daily_hll.parquet", path)
 
 def merge_hourly_partials(roll: DataFrame) -> DataFrame:
     """The read-side combine paired with :func:`_hourly_partial_rows`
@@ -639,7 +656,7 @@ def recluster_events_zorder(spark: SparkSession, sf_dir: str) -> None:
     # retry and silently lose the rows — the pre-staging snapshot
     # leaves it un-manifested and re-landable.
     manifest = _core._read_abatch_manifest(path)
-    cur = spark.read.parquet(path)
+    cur = _core.read_layout(spark, "events_zorder.parquet", path)
     _z_sorted(cur, min_hour, _Z_FILES).write.parquet(staging)
     _core._stamp(staging, meta)
     if manifest:
@@ -711,7 +728,7 @@ def drop_event_chunks(
             staging = path + ".retention_staging"
             if os.path.exists(staging):
                 shutil.rmtree(staging)  # our own crashed prior staging
-            spark.read.parquet(path).filter(keep).write.parquet(staging)
+            _core.read_layout(spark, name, path).filter(keep).write.parquet(staging)
             _core._stamp(staging, meta)
             if manifest:
                 _core._write_abatch_manifest(staging, manifest)

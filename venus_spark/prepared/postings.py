@@ -145,7 +145,7 @@ def _postings_tables(
             _heal_postings_round_stamp(
                 spark, sf_dir, post_path, dfreq_path, stats_path
             )
-            return tuple(spark.read.parquet(p) for p in paths)
+            return _read_postings_tables(spark, paths)
         _core._refuse_rebuild_with_absorbed_batches(post_path, "inverted index")
         for p in (post_path, dfreq_path, stats_path):
             if os.path.exists(p):
@@ -154,7 +154,7 @@ def _postings_tables(
             spark, sf_dir, load_table(spark, sf_dir, "documents")
         )
         (
-            _postings_rows(live_docs)
+            _core.layout_rows(_postings_rows(live_docs), _POSTINGS_INDEX)
             .repartitionByRange("term")
             .sortWithinPartitions("term", "doc_id")
             .write.parquet(post_path)
@@ -164,10 +164,18 @@ def _postings_tables(
         _write_stats(spark, stats_path, n_docs, dl_sum)
         for p in (post_path, dfreq_path, stats_path):
             _core._stamp(p, meta)
-    return (
-        spark.read.parquet(post_path),
-        spark.read.parquet(dfreq_path),
-        spark.read.parquet(stats_path),
+    return _read_postings_tables(spark, paths)
+
+def _read_postings_tables(
+    spark: SparkSession, paths: tuple[str, str, str]
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Declared reads of the (postings, dfreq, stats) layouts at ``paths``."""
+    return tuple(
+        _core.read_layout(spark, name, p)
+        for name, p in zip(
+            (_POSTINGS_INDEX, "documents_dfreq.parquet", "documents_stats.parquet"),
+            paths,
+        )
     )
 
 def _heal_postings_round_stamp(
@@ -206,7 +214,7 @@ def _heal_postings_round_stamp(
         if all(_core._is_built(p, _POSTINGS_META) for p in paths):
             return  # a concurrent healer won
         _core._recover_prepared_swaps(sf_dir, stats_path, ".deladj", ".refresh")
-        old = spark.read.parquet(stats_path).first()
+        old = _core.read_layout(spark, "documents_stats.parquet", stats_path).first()
         n_docs, dl_sum = int(old["n_docs"]), int(old["dl_sum"])
         adj_applied = _docs._read_delete_adj_applied(stats_path)
 
@@ -275,8 +283,9 @@ def _write_dfreq(
     inverted index, ``key="kv"`` for the jsonb-GIN analog). A crash
     mid-overwrite leaves no _SUCCESS/_prep_meta, so the next ensure
     call falls back to a re-derivation/rebuild."""
+    name = {"term": _POSTINGS_INDEX, "kv": "events_kv_postings.parquet"}[key]
     (
-        spark.read.parquet(post_path)
+        _core.read_layout(spark, name, post_path)
         .groupBy(key)
         .agg(F.count("*").alias("df"))
         .coalesce(1)
@@ -413,7 +422,7 @@ def _batch_counters(
             "regenerate it, or delete it WITH the pending postings "
             "area to accept the loss."
         )
-    df = spark.read.parquet(p)
+    df = _core.read_layout(spark, _POSTINGS_COUNTERS, p)
     if only is not None:
         if not only:
             return 0, 0
@@ -560,7 +569,7 @@ def _scrub_pending_batch(
         return
     if not any(f.endswith(".parquet") for f in os.listdir(batch_dir)):
         return
-    rows = spark.read.parquet(batch_dir)
+    rows = _core.read_layout(spark, _POSTINGS_INDEX, batch_dir)
     if rows.join(F.broadcast(tb), "doc_id", "left_semi").limit(1).count() == 0:
         return
     tmp, old = _scrub_paths(pend, bid)

@@ -144,12 +144,16 @@ def documents_trgm(spark: SparkSession, sf_dir: str) -> DataFrame:
         _core._refuse_rebuild_with_absorbed_batches(path, "trigram index")
         if os.path.exists(path):  # partial/failed/stale earlier build
             shutil.rmtree(path)
-        _trgm_rows(
-            _docs._anti_tombstones(spark, sf_dir, load_table(spark, sf_dir, "documents"))
+        _core.layout_rows(
+            _trgm_rows(_docs._anti_tombstones(
+                spark, sf_dir, load_table(spark, sf_dir, "documents"))),
+            "documents_trgm.parquet",
         ).write.parquet(path)
         _core._stamp(path, meta)
     # outstanding (not yet vacuumed) deletes filter at read
-    return _docs._anti_tombstones(spark, sf_dir, spark.read.parquet(path))
+    return _docs._anti_tombstones(
+        spark, sf_dir, _core.read_layout(spark, "documents_trgm.parquet", path)
+    )
 
 _TRGM_POST_META = {"gram": 3, "norm": "lower", "layout": "range(trg)"}
 
@@ -191,15 +195,19 @@ def documents_trgm_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.exists(path):
             shutil.rmtree(path)
         (
-            _trgm_postings_rows(
-                _docs._anti_tombstones(spark, sf_dir, load_table(spark, sf_dir, "documents"))
+            _core.layout_rows(
+                _trgm_postings_rows(_docs._anti_tombstones(
+                    spark, sf_dir, load_table(spark, sf_dir, "documents"))),
+                _TRGM_POST_INDEX,
             )
             .repartitionByRange("trg")
             .sortWithinPartitions("trg", "doc_id")
             .write.parquet(path)
         )
         _core._stamp(path, _TRGM_POST_META)
-    return _docs._anti_tombstones(spark, sf_dir, spark.read.parquet(path))
+    return _docs._anti_tombstones(
+        spark, sf_dir, _core.read_layout(spark, _TRGM_POST_INDEX, path)
+    )
 
 _TRGM_POST_INDEX = "documents_trgm_postings.parquet"
 

@@ -32,6 +32,11 @@ from venus_spark.prepared import core as _core
 # writers cannot drift.
 _IVF_CENT_META = {"centroid": "davg", "round": "floor-half-up-6"}
 
+_IVF = "embeddings_ivf.parquet"
+_IVF_CENT = "embeddings_ivf_centroids.parquet"
+_PQ_CODES = "embeddings_pq_codes.parquet"
+_PQ_CODEBOOK = "embeddings_pq_codebook.parquet"
+
 def embeddings_ivf(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The IVF index as a *layout*: ``(vectors, centroids)`` where the
     vector table is written ``partitionBy(cluster id)`` — so the probe's
@@ -97,8 +102,8 @@ def embeddings_ivf(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
             emb = _anti_vec_tombstones(
                 spark, sf_dir, load_table(spark, sf_dir, "embeddings")
             )
-            emb.write.partitionBy("label").parquet(vec_path)
-            centroid_arrays(emb).write.parquet(cent_path)
+            _core.layout_rows(emb, _IVF).write.partitionBy("label").parquet(vec_path)
+            _core.layout_rows(centroid_arrays(emb), _IVF_CENT).write.parquet(cent_path)
             _core._stamp(cent_path, _IVF_CENT_META)
             # drift baseline for retrain_vector_artifacts_if_drifted:
             # the build trained on the live set, so outstanding
@@ -107,12 +112,12 @@ def embeddings_ivf(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
             _write_train_meta(
                 cent_path,
                 0 if tb is None else tb.count(),
-                spark.read.parquet(vec_path).count(),
+                _core.read_layout(spark, _IVF, vec_path).count(),
             )
     # outstanding (not yet vacuumed) vector deletes filter at read
     return (
-        _anti_vec_tombstones(spark, sf_dir, spark.read.parquet(vec_path)),
-        spark.read.parquet(cent_path),
+        _anti_vec_tombstones(spark, sf_dir, _core.read_layout(spark, _IVF, vec_path)),
+        _core.read_layout(spark, _IVF_CENT, cent_path),
     )
 
 def _heal_ivf_centroids(
@@ -171,7 +176,7 @@ def _heal_ivf_centroids(
             keep = _read_train_meta(p)
     for p in leftovers:
         shutil.rmtree(p, ignore_errors=True)  # crashed prior attempts
-    live = _anti_vec_tombstones(spark, sf_dir, spark.read.parquet(vec_path))
+    live = _anti_vec_tombstones(spark, sf_dir, _core.read_layout(spark, _IVF, vec_path))
     fallback = None
     if not _valid(keep):
         # only when NO baseline survives anywhere (pre-r7 layout or
@@ -180,7 +185,7 @@ def _heal_ivf_centroids(
         tb = embedding_tombstones(spark, sf_dir)
         fallback = (0 if tb is None else tb.count(), live.count())
     tmp = f"{cent_path}.restamp.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp"
-    centroid_arrays(live).write.parquet(tmp)
+    _core.layout_rows(centroid_arrays(live), _IVF_CENT).write.parquet(tmp)
     _core._stamp(tmp, _IVF_CENT_META)
     with _vec_swap_flock(sf_dir):
         _core._recover_swap(vec_path, ".vacuum")
@@ -238,9 +243,10 @@ def embeddings_pq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     256 for the float32 vector — the 32x bandwidth saving ADC queries
     ride on); the codebook table is PQ_KS rows, collected per query
     like the other broadcast-sized prepared artifacts. Encoding is one
-    scan of pure codegen arithmetic (argmin over literal codeword
-    arrays) and runs once at ingest; ``sim_pq_adc_topk`` without this
-    layout re-encodes the corpus per query. The meta stamp carries the
+    scan through the Arrow PQ encoder (:func:`_pq_code_rows`, shared
+    with every append and the retrain) and runs once at ingest;
+    ``sim_pq_adc_topk`` without this layout re-encodes the corpus per
+    query. The meta stamp carries the
     PQ geometry so constant drift forces a rebuild; the codebook itself
     derives deterministically from the data (coreset sample), so same
     data + same constants = same index."""
@@ -280,25 +286,22 @@ def embeddings_pq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
             spark, sf_dir, load_table(spark, sf_dir, "embeddings")
         )
         codebook = sim.pq_codebook_rows(emb)
-        spark.createDataFrame(
-            [(i, c) for i, c in enumerate(codebook)],
-            "cb_id int, cv array<double>",
-        ).coalesce(1).write.parquet(cb_path)
-        v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+        _codebook_rows(spark, codebook).write.parquet(cb_path)
         (
             # partitioned by the IVF cluster id: an IVF-PQ search prunes
             # to the probed clusters' directories and ADC-scans only
             # their codes — the FAISS IVFPQ storage layout.
-            emb.select("vec_id", "label", v.alias("v"))
-            .select("vec_id", "label", sim.pq_codes_col("v", codebook).alias("codes"))
+            _core.layout_rows(_pq_code_rows(emb, codebook), _PQ_CODES)
             .write.partitionBy("label")
             .parquet(codes_path)
         )
         _core._stamp(codes_path, meta)
         _core._stamp(cb_path, meta)
     return (
-        _anti_vec_tombstones(spark, sf_dir, spark.read.parquet(codes_path)),
-        spark.read.parquet(cb_path),
+        _anti_vec_tombstones(
+            spark, sf_dir, _core.read_layout(spark, _PQ_CODES, codes_path)
+        ),
+        _core.read_layout(spark, _PQ_CODEBOOK, cb_path),
     )
 
 def append_embeddings(
@@ -332,29 +335,40 @@ def append_embeddings(
         return append_embeddings_batch(spark, sf_dir, new_vecs, batch_id)
     vec_path = _core.prepared_path(sf_dir, "embeddings_ivf.parquet")
     embeddings_ivf(spark, sf_dir)
-    new_vecs.write.mode("append").partitionBy("label").parquet(vec_path)
+    _core.layout_rows(new_vecs, _IVF).write.mode("append").partitionBy(
+        "label"
+    ).parquet(vec_path)
     _core._mark_appended(vec_path)
 
     codes_path = _core.prepared_path(sf_dir, "embeddings_pq_codes.parquet")
     codebook = _pq_saturated_codebook(spark, sf_dir)
     (
-        _pq_code_rows(new_vecs, codebook)
+        _core.layout_rows(_pq_code_rows(new_vecs, codebook), _PQ_CODES)
         .write.mode("append")
         .partitionBy("label")
         .parquet(codes_path)
     )
     _core._mark_appended(codes_path)
 
-def _pq_code_rows(new_vecs: DataFrame, codebook: list) -> DataFrame:
-    """(vec_id, label, codes) rows for a batch encoded against an
-    EXISTING codebook — shared by the batch append and the streaming
-    ingest's idempotent append."""
+def _pq_code_rows(vecs: DataFrame, codebook: list) -> DataFrame:
+    """(vec_id, label, codes) rows of ``vecs`` encoded against
+    ``codebook`` — the one PQ encode, shared by the build, the batch
+    and stream appends, the retrain and ``sim_pq_adc_live``'s pending
+    side: one MapInArrow over (vec_id, label, embedding). A NULL or
+    wrong-length vector gets NULL codes."""
     from venus_spark.operators import similarity as sim
+    from venus_spark.operators import vector_kernels
 
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    return new_vecs.select("vec_id", "label", v.alias("v")).select(
-        "vec_id", "label", sim.pq_codes_col("v", codebook).alias("codes")
+    return vecs.select("vec_id", "label", "embedding").mapInArrow(
+        vector_kernels.pq_encoder(codebook, sim.PQ_M),
+        "vec_id long, label int, codes array<int>",
     )
+
+def _codebook_rows(spark: SparkSession, codebook: list) -> DataFrame:
+    """The codebook layout's rows: one file of ``(cb_id, cv)``."""
+    return spark.createDataFrame(
+        list(enumerate(codebook)), _core.layout_schema(_PQ_CODEBOOK)
+    ).coalesce(1)
 
 def _pq_saturated_codebook(
     spark: SparkSession, sf_dir: str, cb_df: DataFrame | None = None
@@ -427,7 +441,7 @@ def embedding_tombstones(spark: SparkSession, sf_dir: str) -> DataFrame | None:
         f.endswith(".parquet") for f in os.listdir(p)
     ):
         return None
-    return spark.read.parquet(p).select("vec_id").distinct()
+    return _core.read_layout(spark, _VEC_TOMBSTONES, p).select("vec_id").distinct()
 
 def _anti_vec_tombstones(
     spark: SparkSession, sf_dir: str, df: DataFrame
@@ -476,7 +490,7 @@ def vacuum_embedding_tombstones(spark: SparkSession, sf_dir: str) -> int:
     for path in paths:
         if not os.path.exists(path):
             continue
-        cur = spark.read.parquet(path)
+        cur = _core.read_layout(spark, os.path.basename(path), path)
         n_dead = cur.join(F.broadcast(tb), "vec_id", "left_semi").count()
         if n_dead == 0:
             continue
@@ -824,21 +838,20 @@ def retrain_vector_artifacts_if_drifted(
         old = p + ".retrain.old"
         if os.path.exists(old) and os.path.exists(p):
             shutil.rmtree(old)  # displaced garbage beside a live path
-    centroid_arrays(vecs).write.parquet(cent_path + ".retrain.tmp")
+    _core.layout_rows(centroid_arrays(vecs), _IVF_CENT).write.parquet(
+        cent_path + ".retrain.tmp"
+    )
     _core._stamp(cent_path + ".retrain.tmp", _IVF_CENT_META)
     # the drift baseline travels INSIDE the staged centroids dir: a
     # crash between the marker and the swap then still delivers it with
     # the recovery, instead of leaving fresh artifacts that read as
     # 100%-drifted and trigger a spurious full retrain (review r8 #2)
     _write_train_meta(cent_path + ".retrain.tmp", n_tb, trained_n)
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(codebook)],
-        "cb_id int, cv array<double>",
-    ).coalesce(1).write.parquet(cb_path + ".retrain.tmp")
+    _codebook_rows(spark, codebook).write.parquet(cb_path + ".retrain.tmp")
     _core._stamp(cb_path + ".retrain.tmp", pq_meta)
     codes_tmp = codes_path + ".retrain.tmp"
     (
-        _pq_code_rows(vecs.select("vec_id", "label", "embedding"), codebook)
+        _core.layout_rows(_pq_code_rows(vecs, codebook), _PQ_CODES)
         .write.partitionBy("label")
         .parquet(codes_tmp)
     )

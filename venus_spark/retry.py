@@ -53,15 +53,15 @@ from pyspark.sql.classic.dataframe import DataFrame as _CDF
 # plan-time AnalysisException [PATH_NOT_FOUND] 'Path does not exist'
 # — which the construction-time contract (:func:`retryable`) must
 # retry, because that is exactly the two-directory conflict window.
-# Consequence (ADVICE r15, accepted cost): a GENUINELY missing input
-# table matches too and pays one spurious listing refresh + rebuild
-# before its analysis error propagates — one wasted plan build on a
-# path that ends in an error either way, vs missing the real race.
+# A genuinely missing input path matches too and pays one listing
+# refresh + rebuild before its error propagates; other analysis errors
+# (a missing table, view or column) do not match.
 _MISSING_FILE_MARKERS = (
     "FILE_NOT_EXIST",
     "FAILED_READ_FILE",
     "FileNotFoundException",
-    "does not exist",
+    "PATH_NOT_FOUND",
+    "Path does not exist",
 )
 
 # Absolute paths in the error text (optionally file:-prefixed), so the

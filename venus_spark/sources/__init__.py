@@ -9,24 +9,122 @@ orders lineitem events documents embeddings.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+# Column types of the base tables, taken once from the test data
+# (TESTDATA.md) as Spark reads it. Every load declares its table's
+# schema instead of inferring it, which would cost a Spark job per read;
+# :func:`_read_schema` catches a file that drifted from it.
+TABLE_SCHEMAS = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, "
+    "c_acctbal double, c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, "
+    "s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, "
+    "p_size int, p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
+    "o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, "
+    "l_linenumber int, l_quantity double, l_extendedprice double, "
+    "l_discount double, l_tax double, l_returnflag string, "
+    "l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, "
+    "event_type string, value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, "
+    "n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+TABLES = tuple(TABLE_SCHEMAS)
+
+
+@functools.lru_cache(maxsize=None)
+def table_schema(name: str) -> T.StructType:
+    """Declared schema of base table ``name``."""
+    return T.StructType.fromDDL(TABLE_SCHEMAS[name])
+
+
+def read_parquet(spark: SparkSession, schema, *paths: str) -> DataFrame:
+    """The parquet read path of the base tables and prepared layouts:
+    ``schema`` (DDL string or StructType) is declared, so the read
+    starts no Spark job to infer it from the files."""
+    return spark.read.schema(schema).parquet(*paths)
+
+
+@functools.lru_cache(maxsize=1024)
+def _footer_schema(path: str, _mtime_ns: int) -> T.StructType | None:
+    """The schema Spark would infer from ``path`` (a parquet file, or the
+    first data file of a directory), read from the footer on the driver
+    with pyarrow — no Spark job. Cached per path and mtime (the mtime is
+    part of the key only); ``None`` when the directory holds no data
+    file. Parquet TIMESTAMP(NANOS) maps to bigint, as
+    ``spark.sql.legacy.parquet.nanosAsLong`` reads it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    first = path
+    if os.path.isdir(path):
+        data = sorted(
+            os.path.join(root, f)
+            for root, _dirs, files in os.walk(path)
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+        if not data:
+            return None
+        first = data[0]
+    fields = []
+    for field in pq.read_schema(first):
+        t = field.type
+        if pa.types.is_timestamp(t) and t.unit == "ns":
+            dt = T.LongType()
+        else:
+            try:
+                dt = from_arrow_type(t, prefer_timestamp_ntz=True)
+            except TypeError as exc:
+                raise ValueError(f"{path}: column {field.name!r}: {exc}") from exc
+        fields.append(T.StructField(field.name, dt))
+    return T.StructType(fields)
+
+
+def _read_schema(name: str, path: str) -> T.StructType:
+    """The schema to read base table ``name`` at ``path`` with: its
+    footer's, after checking it against the declared one. Raises,
+    naming the column, when a declared column is missing or has another
+    type — a declared read of such a file would fail in a task or serve
+    NULLs. Columns the declaration lacks are served as the file holds
+    them, so a base table that gained a column still shows it. A path
+    that is not a local file or directory gets the declared schema and
+    is left to the Spark read to report."""
+    declared = table_schema(name)
+    try:
+        found = _footer_schema(path, os.stat(path).st_mtime_ns)
+    except OSError:
+        found = None
+    if found is None:
+        return declared
+    types = {f.name: f.dataType.simpleString() for f in found.fields}
+    for f in declared.fields:
+        want = f.dataType.simpleString()
+        got = types.get(f.name)
+        if got is None:
+            raise ValueError(
+                f"{path}: table {name!r} has no column {f.name!r} "
+                f"(declared {want}; the file has {sorted(types)})"
+            )
+        nanos_ts = name == "events" and f.name == "ts" and got == "bigint"
+        if got != want and not nanos_ts:
+            raise ValueError(
+                f"{path}: column {name}.{f.name} is {got}, declared {want}"
+            )
+    return found
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -89,19 +187,27 @@ def _estimate_scan_splits(spark: SparkSession, files: list[str]) -> int:
     most that large; it may cut SMALLER ranges to fill idle cores, so
     this under-counts — erring toward fanning, which the repartition's
     no-op-at-scale guarantee makes safe). Bounded driver work: callers
-    only reach here with fewer files than task slots."""
+    only reach here with fewer files than task slots. Local files are
+    statted by Python, where a stat failure (a file deleted since the
+    listing) counts the file as one split; other filesystems go through
+    Hadoop, whose errors propagate."""
+    from urllib.parse import unquote, urlparse
+
     max_split = _parse_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
     )
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
     total = 0
     for uri in files:
-        p = jvm.org.apache.hadoop.fs.Path(uri)
-        try:
-            size = p.getFileSystem(hconf).getFileStatus(p).getLen()
-        except Exception:  # noqa: BLE001 - probe is best-effort
-            size = 0
+        u = urlparse(uri)
+        if u.scheme in ("", "file"):
+            try:
+                size = os.path.getsize(unquote(u.path))
+            except OSError:
+                size = 0
+        else:
+            p = spark._jvm.org.apache.hadoop.fs.Path(uri)
+            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+            size = fs.getFileStatus(p).getLen()
         total += -(-int(size) // max_split) if size else 1
     return total
 
@@ -112,27 +218,36 @@ def load_table(
     """Read one synthetic table. Columnar scan: Catalyst prunes columns and
     pushes filters into the parquet reader automatically.
 
+    The schema comes from :data:`TABLE_SCHEMAS`, declared once from the
+    test data, and a driver-side footer read (pyarrow, cached per path
+    and mtime) instead of Spark's schema inference, so a load starts no
+    Spark job. The footer is checked against the declaration: a
+    declared column that is missing or has another type raises, naming
+    the column; a column the declaration lacks is served as the file
+    holds it (see :func:`_read_schema`).
+
     ``fanned=True`` applies :func:`fan_out` — for plans whose map side
     above this scan is compute-heavy (tokenize/shingle/JSON kernels).
 
-    Self-sufficient in a foreign SparkSession: events.parquet carries
-    TIMESTAMP(NANOS) which Spark's vectorized reader rejects unless
-    ``spark.sql.legacy.parquet.nanosAsLong`` is set, and the nanos→micros
-    timestamp hop below is session-timezone-sensitive — both confs are
-    runtime-settable, so pin them here rather than relying on the caller's
-    session builder (venus_spark.session sets them too, but driver-owned
-    sessions don't go through it).
+    Self-sufficient in a foreign SparkSession: an events file written
+    with TIMESTAMP(NANOS) is read as epoch-nanos bigint, which Spark
+    only does with ``spark.sql.legacy.parquet.nanosAsLong`` set, and the
+    nanos→micros hop below is session-timezone-sensitive — both confs
+    are runtime-settable, so pin them here rather than relying on the
+    caller's session builder (venus_spark.session sets them too, but
+    driver-owned sessions don't go through it).
     """
-    if name not in TABLES:
+    if name not in TABLE_SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
-        # events.ts is parquet TIMESTAMP(NANOS), read as epoch-nanos long
-        # (see session.py nanosAsLong). Truncate (integer DIV, matching
-        # DuckDB's ns->us truncation) to micros; land on TIMESTAMP_NTZ to
-        # match the other tables' naive timestamps.
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = _read_schema(name, path)
+    df = read_parquet(spark, schema, path)
+    if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
+        # epoch-nanos long: truncate (integer DIV, matching DuckDB's
+        # ns->us truncation) to micros; land on TIMESTAMP_NTZ to match
+        # the other tables' naive timestamps.
         df = df.withColumn(
             "ts",
             F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz"),
