@@ -18,3 +18,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def jobs_in_group(spark):
+    """``count(group, fn)``: the number of Spark jobs ``fn()`` starts,
+    counted under its own job group."""
+
+    def count(group: str, fn) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

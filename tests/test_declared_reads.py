@@ -11,18 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 
 
-def _jobs_in_group(spark, group: str, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_load_table_and_layout_read_start_no_job(spark, sf_dir):
+def test_load_table_and_layout_read_start_no_job(spark, sf_dir, jobs_in_group):
     from venus_spark import prepared
     from venus_spark.sources import load_table
 
@@ -33,9 +22,9 @@ def test_load_table_and_layout_read_start_no_job(spark, sf_dir):
         load_table(spark, sf_dir, "documents")
         prepared.read_layout(spark, "embeddings_pq_codes.parquet", codes)
 
-    assert _jobs_in_group(spark, "declared-reads", declared) == 0
+    assert jobs_in_group("declared-reads", declared) == 0
     # the counter sees the job an inferring read starts
-    assert _jobs_in_group(spark, "inferred-read", lambda: spark.read.parquet(codes)) >= 1
+    assert jobs_in_group("inferred-read", lambda: spark.read.parquet(codes)) >= 1
 
 
 def _drifted_documents(src_sf: str, sf: str, column: str, new_type) -> None:

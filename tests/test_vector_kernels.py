@@ -103,8 +103,9 @@ def test_null_and_ragged_vectors_are_never_ranked(spark, sf_dir, tmp_path, monke
 
 def test_vector_kernels_run_from_a_foreign_cwd(sf_dir, tmp_path):
     """A driver started outside the repository, with no PYTHONPATH, runs
-    the Arrow kernels: the PQ build, a vector append, the PQ audit scan
-    and the pair cosine. Workers get the kernels pickled by value."""
+    the Python-worker kernels: the PQ build, a vector append, the PQ
+    audit scan, the pair cosine and the multimodal decode and resize.
+    Workers get the kernels pickled by value."""
     script = tmp_path / "drive.py"
     script.write_text(textwrap.dedent(f"""
         import sys
@@ -123,7 +124,7 @@ def test_vector_kernels_run_from_a_foreign_cwd(sf_dir, tmp_path):
         prepared.append_embeddings_batch(spark, sf, new, batch_id=1)
         print("appended", prepared.embeddings_pq(spark, sf)[0].count())
         plans = all_plans()
-        for name in ("sim_pq_adc_topk", "sim_cosine_pairs"):
+        for name in ("sim_pq_adc_topk", "sim_cosine_pairs", "mm_decode_meta", "mm_resize"):
             print(name, len(plans[name].fn(spark, sf).collect()))
         spark.stop()
     """))
@@ -139,3 +140,4 @@ def test_vector_kernels_run_from_a_foreign_cwd(sf_dir, tmp_path):
     out = dict(line.rsplit(" ", 1) for line in p.stdout.strip().splitlines())
     assert int(out["appended"]) == int(out["codes"]) + 3
     assert int(out["sim_pq_adc_topk"]) == 10 and int(out["sim_cosine_pairs"]) > 0
+    assert int(out["mm_decode_meta"]) == int(out["mm_resize"]) > 0

@@ -10,10 +10,11 @@ Design for 100 TB:
   degenerate (measured on the synthetic corpus: ~30% of ALL pairs above
   0.75 unigram Jaccard → 7.7M candidate pairs from 5k docs; 3-gram
   shingles → ~10² true pairs).
-- MinHash: one explode + one groupBy (partial-agg friendly MIN aggregates),
-  then a self-join on (band_idx, band_hash) — the LSH trick that turns the
-  quadratic all-pairs problem into joins on small buckets.
-- SimHash: same shape with SUM aggregates per bit.
+- MinHash: a per-row projection (each signature is a MIN over the row's
+  own shingle-hash array), then a self-join on (band_idx, band_hash) —
+  the LSH trick that turns the quadratic all-pairs problem into joins
+  on small buckets.
+- SimHash: one explode + one groupBy with SUM aggregates per bit.
 - Jaccard is only ever computed on candidate pairs (LSH output or an
   explicit bucket key), never all-pairs.
 
@@ -61,14 +62,55 @@ def exploded_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "te
     ).withColumn("h", token_hash31("tok"))
 
 
+def minhash_cols(h: Column) -> list[Column]:
+    """``mh_0..mh_{N_PERM-1}`` of one row's shingle-hash array ``h``:
+    mh_i = min over h of (A_i * h + B_i) mod P31. A projection of the
+    row's own array (no explode, shuffle or join); NULL when ``h`` is
+    empty or NULL."""
+
+    def perm(i: int) -> Column:
+        a, b, p = F.lit(PERM_A[i]), F.lit(PERM_B[i]), F.lit(HASH_P31)
+        return F.array_min(F.transform(h, lambda x: (a * x + b) % p))
+
+    return [perm(i).alias(f"mh_{i}") for i in range(N_PERM)]
+
+
+def with_shingles(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """The rows of ``df`` whose text has at least one shingle, i.e. at
+    least one token (NULL and blank texts have none). Tested on the
+    tokens, not on the shingle set: Spark pushes a filter below the
+    projection that defines its column, so a test on the set would
+    build every row's shingles and hashes twice."""
+    return df.filter(F.size(tokens(text_col)) > 0)
+
+
+def minhash_index(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """MinHash index rows: ``id_col`` + ``keep`` + ``_sh`` (the distinct
+    shingles) + ``_sh_h`` (their distinct hash31 set) + mh_0..mh_{N_PERM-1}
+    signature columns, one row per input row that has at least one
+    shingle. Row-local: ``id_col`` must be a key, since rows sharing an
+    id are not merged.
+
+    ``_sh_h`` is stored because Jaccard over int arrays costs a fraction
+    of Jaccard over ~20-char shingle strings, and hash31 is
+    engine-portable, so the DuckDB oracle computes the identical set
+    (collisions, ~1e-5 per pair, change both sides identically)."""
+    sh = with_shingles(df, text_col).select(
+        id_col, *keep, shingles(text_col).alias("_sh")
+    ).withColumn("_sh_h", F.array_distinct(F.transform("_sh", token_hash31)))
+    return sh.select("*", *minhash_cols(F.col("_sh_h")))
+
+
 def minhash_signatures(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """id + mh_0..mh_{N_PERM-1} MinHash signature columns."""
-    toks = exploded_shingles(df, id_col, text_col)
-    aggs = [
-        F.min((F.lit(PERM_A[i]) * F.col("h") + F.lit(PERM_B[i])) % F.lit(HASH_P31)).alias(f"mh_{i}")
-        for i in range(N_PERM)
-    ]
-    return toks.groupBy(id_col).agg(*aggs)
+    """id + mh_0..mh_{N_PERM-1} of :func:`minhash_index`."""
+    return minhash_index(df, id_col, text_col).select(
+        id_col, *(f"mh_{i}" for i in range(N_PERM))
+    )
 
 
 def lsh_bands(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -219,24 +261,15 @@ def lsh_near_dup_pairs(
     shingle-set Jaccard verification above ``threshold``. The band join
     bounds the pair expansion; verification only ever touches candidates.
 
-    Lineage cuts on the signature/shingle subtrees tried and REJECTED
-    for the default posture (r15): the double evaluations (both sides
-    of the band self-join, both sides of the verify join) are
-    INDEPENDENT single-task stages that the scheduler overlaps on idle
-    cores, so serializing them behind a checkpoint barrier measured
-    6-20% slower (interleaved A/B, REPEAT=3) despite halving total
-    work — the duplicate passes are hidden by unused parallelism at
-    this input's one-row-group geometry. On a SATURATED cluster the
-    duplicate CPU is real cost: ``SPARK_GRAFT_SATURATED=1`` enables
-    the cuts (:func:`venus_spark.lineage.ckpt_if_saturated`)."""
+    The index rows pass one shuffle on the id, which both sides of the
+    band self-join reuse, so each document's signature is computed once
+    (row-local rows with no shuffle below them would be derived again
+    for each side). ``SPARK_GRAFT_SATURATED=1`` also cuts the lineage
+    there (:func:`venus_spark.lineage.ckpt_if_saturated`)."""
     from venus_spark.lineage import ckpt_if_saturated
 
-    bands = ckpt_if_saturated(lsh_bands(minhash_signatures(df, id_col, text_col), id_col))
-    cands = band_candidate_pairs(bands, id_col)
-    toks = ckpt_if_saturated(
-        df.select(F.col(id_col), shingles(text_col).alias("toks"))
-    )
-    return _verify_candidates(cands, toks, id_col, threshold)
+    idx = ckpt_if_saturated(minhash_index(df, id_col, text_col).repartition(id_col))
+    return lsh_near_dup_pairs_from_index(idx, id_col, "_sh", threshold)
 
 
 def lsh_near_dup_pairs_from_index(
@@ -248,8 +281,8 @@ def lsh_near_dup_pairs_from_index(
     """Near-dup pairs from a PREPARED MinHash index (``id + mh_* +
     shingle array`` — venus_spark.prepared.documents_minhash): bands are
     cheap array expressions over the stored signature and the exact
-    verify reads the stored shingle arrays, so the whole
-    explode→hash→MIN-aggregate signature pass is skipped at query time.
+    verify reads the stored shingle arrays, so the shingle→hash→MIN
+    signature pass is skipped at query time.
     This is the write-time-index posture of the reference (its GIN
     indexes are maintained on INSERT) applied to near-dup search — at
     100 TB signatures are computed once per ingested document, not once

@@ -12,15 +12,24 @@ At 100 TB: binary payloads dominate partition size, so the operators
 repartition by size hints rather than row counts
 (``spark.sql.files.maxPartitionBytes``) and never collect payloads to
 the driver.
+
+This module imports no ``venus_spark`` code and registers itself to be
+pickled by value, like :mod:`venus_spark.operators.vector_kernels`: the
+batch functions reach Python workers with the task, whatever directory
+the driver started in.
 """
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Iterator
 
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 DECODE_SCHEMA = (
     "doc_id long, byte_len long, width long, height long, format string"

@@ -106,7 +106,10 @@ def frozen_ivf_probe(spark: SparkSession, sf_dir: str, layout=None):
             "cluster",
             dround(cosine(F.col("centroid"), query)).alias("centroid_sim"),
         )
-        .orderBy(F.col("centroid_sim").desc(), F.col("cluster"))
+        # a few rows: sorted in one partition, without the sampling
+        # job and shuffle of a global orderBy (same NULL/NaN order)
+        .coalesce(1)
+        .sortWithinPartitions(F.col("centroid_sim").desc(), F.col("cluster"))
         .collect()
     )
     return (

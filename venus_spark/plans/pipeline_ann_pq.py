@@ -109,14 +109,6 @@ FROM adc ORDER BY adist, vec_id LIMIT {_PQ_K}
 """
 
 
-def _collect_codebook(cb_df: DataFrame) -> list[list[float]]:
-    """Driver-side codebook fetch (PQ_KS rows, broadcast-sized) —
-    shared by the prepared and live ADC plans (review r11 pass-4 #4)."""
-    return [
-        [float(x) for x in r["cv"]] for r in cb_df.orderBy("cb_id").collect()
-    ]
-
-
 def _adc_topk(codes_df: DataFrame, lut: list[list[float]]) -> DataFrame:
     """The ADC scan + top-k tail over a codes relation — ONE copy so a
     parity-relevant change (tie-break, rounding) cannot diverge between
@@ -183,7 +175,7 @@ def sim_pq_adc_prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute twin (sim_pq_adc_topk) is the write-time audit. Same
     oracle pipeline: the layout changes the access path, not the
     answer."""
-    from venus_spark.prepared import embeddings_pq
+    from venus_spark.prepared import _collect_codebook, embeddings_pq
 
     codes_df, cb_df = embeddings_pq(spark, sf_dir)
     codebook = _collect_codebook(cb_df)
@@ -205,6 +197,7 @@ def sim_pq_adc_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     engages only when the manifest says a batch is in flight."""
     from venus_spark.plans.pipeline_ann import _live_vector_candidates
     from venus_spark.prepared import (
+        _collect_codebook,
         _pq_code_rows,
         _pq_saturated_codebook,
         embeddings_pq,
@@ -295,7 +288,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shows PartitionFilters on label and a codes-only ReadSchema
     (shape-tested)."""
     from venus_spark.functions import cosine
-    from venus_spark.prepared import embeddings_ivf, embeddings_pq
+    from venus_spark.prepared import _collect_codebook, embeddings_ivf, embeddings_pq
 
     codes_df, cb_df = embeddings_pq(spark, sf_dir)
     _, cents = embeddings_ivf(spark, sf_dir)

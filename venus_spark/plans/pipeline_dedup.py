@@ -162,8 +162,8 @@ SELECT id_a, id_b, jaccard_sim FROM verified WHERE jaccard_sim > {_JACCARD_T}
 
 @plan("dedup_minhash_lsh", oracle=_minhash_oracle())
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: signature (one explode + one
-    groupBy with MIN aggregates) -> band-bucket candidate join -> exact
+    """Full MinHash-LSH near-dup pipeline: signature (a per-row MIN over
+    the document's shingle hashes) -> band-bucket candidate join -> exact
     Jaccard verification. Only candidates are ever verified — the LSH
     trick that avoids the quadratic all-pairs pass at scale."""
     from venus_spark.operators.dedup import lsh_near_dup_pairs

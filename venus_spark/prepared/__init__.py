@@ -36,6 +36,7 @@ from venus_spark.prepared.core import (  # noqa: F401
     layout_schema,
     read_layout,
     layout_rows,
+    read_once,
     _is_built,
     _stamp,
     _restamp_atomic,
@@ -186,6 +187,7 @@ from venus_spark.prepared.vectors import (  # noqa: F401
     append_embeddings,
     _pq_code_rows,
     _codebook_rows,
+    _collect_codebook,
     _pq_saturated_codebook,
     append_embeddings_batch,
     _VEC_TOMBSTONES,

@@ -14,13 +14,13 @@ import threading
 import uuid
 from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from venus_spark.operators import dedup as _dedup
 from venus_spark.sources import load_table, read_parquet
-from venus_spark.prepared import docs as _docs
 
 _REPO_ROOT = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -114,6 +114,27 @@ def layout_rows(df: DataFrame, name: str) -> DataFrame:
             f"type), declared {layout_schema(name).simpleString()}"
         )
     return df.select(*(f.name for f in declared))
+
+def read_once(append):
+    """Decorator for an append ``(spark, sf_dir, batch, ...)``: the input
+    batch is cached for the whole call. An append derives several index
+    writes from one batch; uncached, each write re-evaluates the batch's
+    lineage (a re-scan, a Python source re-serialized, a
+    non-deterministic filter drawn again), which costs a scan per write
+    and lets the indexes disagree about which rows the batch held. A
+    batch the caller already cached is used as it is and stays cached."""
+
+    @functools.wraps(append)
+    def cached(spark, sf_dir, batch, *args, **kwargs):
+        if batch.storageLevel != StorageLevel.NONE:
+            return append(spark, sf_dir, batch, *args, **kwargs)
+        batch.persist()
+        try:
+            return append(spark, sf_dir, batch, *args, **kwargs)
+        finally:
+            batch.unpersist()
+
+    return cached
 
 def _is_built(path: str, meta: dict | None = None) -> bool:
     """Complete build = Spark's ``_SUCCESS`` marker plus (when the
@@ -895,3 +916,6 @@ def _write_merged(base: str, merged: set[int]) -> None:
     with open(tmp, "w") as f:
         json.dump(sorted(merged), f)
     os.rename(tmp, _merged_manifest_path(base))  # atomic commit
+
+# Imported last: docs applies read_once to its appends at import time.
+from venus_spark.prepared import docs as _docs  # noqa: E402

@@ -24,12 +24,11 @@ def documents_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature columns (``mh_0..mh_{n}``) — the near-dup index, built
     once at ingest time like the reference's write-time GIN indexes.
     Query-time dedup then starts from stored signatures (band exprs +
-    bucket join) instead of re-running the explode→hash→MIN-aggregate
-    pass over the full corpus. One scan + one groupBy + one uniform
-    doc_id join to build; incremental at 100 TB because a new
-    document's signature depends only on its own text."""
+    bucket join) instead of re-running the shingle→hash→MIN pass over
+    the full corpus. One narrow scan to build (no shuffle, no join);
+    incremental at 100 TB because a new document's signature depends
+    only on its own text."""
     from venus_spark.operators import dedup as dd
-    from venus_spark.operators.dedup import minhash_signatures
 
     meta = {
         "n_perm": dd.N_PERM,
@@ -63,29 +62,14 @@ def documents_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _minhash_rows(docs: DataFrame) -> DataFrame:
     """Derived MinHash-index rows for a batch of documents — shared by
-    the full build and the incremental append. The signature groupBy
-    runs over the BATCH only (a signature depends only on the one
-    document's shingles), which is what makes maintenance O(batch) at
-    100 TB."""
-    from venus_spark.functions import shingles, token_hash31
-    from venus_spark.operators.dedup import minhash_signatures
+    the full build, the appends and the streaming near-dup screen. Each
+    row is a projection of its own document, so the plan is one narrow
+    scan with no shuffle or join, and maintenance is O(batch) at
+    100 TB. A document with no shingle (NULL or token-less text) gets
+    no row. ``doc_id`` must be a key of ``docs``."""
+    from venus_spark.operators.dedup import minhash_index
 
-    sh = docs.select(
-        "doc_id",
-        "lang",
-        "source",
-        shingles("text").alias("_sh"),
-    ).withColumn(
-        # hashed shingle set: Jaccard over int arrays costs a
-        # fraction of Jaccard over ~20-char shingle strings, and
-        # hash31 is engine-portable so the DuckDB oracle computes
-        # the identical set (collisions, ~1e-5 per pair, change
-        # both sides identically)
-        "_sh_h",
-        F.array_distinct(F.transform("_sh", token_hash31)),
-    )
-    sigs = minhash_signatures(docs)
-    return sh.join(sigs, "doc_id")
+    return minhash_index(docs, keep=("lang", "source"))
 
 _APPEND_INTENT = "_docs_append_intent.json"
 
@@ -150,6 +134,7 @@ def _refuse_if_append_intent(sf_dir: str) -> None:
             + _APPEND_INTENT_REMEDIATION
         )
 
+@_core.read_once
 def append_documents(
     spark: SparkSession,
     sf_dir: str,
@@ -263,6 +248,7 @@ def append_documents(
     _buckets._drop_lsh_bands(spark, sf_dir)
     os.remove(_append_intent_path(sf_dir))  # LAST: the append is complete
 
+@_core.read_once
 def append_documents_batch(
     spark: SparkSession, sf_dir: str, new_docs: DataFrame, batch_id: int
 ) -> None:
@@ -322,7 +308,7 @@ def write_minhash_pending(
     :func:`merge_minhash_pending` is the VACUUM. ``index_rows`` lets a
     caller that already derived the batch's index rows (e.g. the
     ingest-time near-dup screen) reuse them instead of paying the
-    shingle/hash/MIN-aggregate pass a second time."""
+    shingle/hash/MIN pass a second time."""
     rows = index_rows if index_rows is not None else _minhash_rows(batch_docs)
     _core._write_pending(sf_dir, _MINHASH_INDEX, rows, batch_id)
 

@@ -304,6 +304,7 @@ def embeddings_pq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
         _core.read_layout(spark, _PQ_CODEBOOK, cb_path),
     )
 
+@_core.read_once
 def append_embeddings(
     spark: SparkSession,
     sf_dir: str,
@@ -370,6 +371,13 @@ def _codebook_rows(spark: SparkSession, codebook: list) -> DataFrame:
         list(enumerate(codebook)), _core.layout_schema(_PQ_CODEBOOK)
     ).coalesce(1)
 
+def _collect_codebook(cb_df: DataFrame) -> list[list[float]]:
+    """The codewords of a codebook table in ``cb_id`` order: one job
+    collects its at most PQ_KS rows and the driver sorts them (a Spark
+    sort would add a sampling job and a shuffle)."""
+    rows = sorted(cb_df.collect(), key=lambda r: r["cb_id"])
+    return [[float(x) for x in r["cv"]] for r in rows]
+
 def _pq_saturated_codebook(
     spark: SparkSession, sf_dir: str, cb_df: DataFrame | None = None
 ) -> list:
@@ -383,9 +391,7 @@ def _pq_saturated_codebook(
 
     if cb_df is None:
         _, cb_df = embeddings_pq(spark, sf_dir)
-    codebook = [
-        [float(x) for x in r["cv"]] for r in cb_df.orderBy("cb_id").collect()
-    ]
+    codebook = _collect_codebook(cb_df)
     if len(codebook) < sim.PQ_KS:
         raise ValueError(
             f"PQ codebook has {len(codebook)} < PQ_KS={sim.PQ_KS} codewords: "
@@ -395,6 +401,7 @@ def _pq_saturated_codebook(
         )
     return codebook
 
+@_core.read_once
 def append_embeddings_batch(
     spark: SparkSession,
     sf_dir: str,
