@@ -162,6 +162,79 @@ def test_streaming_restart_is_exactly_once(spark, tmp_path):
     assert logs.select("message").distinct().count() == 15
 
 
+def test_backlog_drain_at_the_admission_bound_runs_two_jobs(spark, tmp_path):
+    """A micro-batch of DEFAULT_MAX_FILES_PER_TRIGGER files lists them on
+    the driver: the query's run-id job group holds only the two sink
+    writes (logs, quarantine), no file-listing job beside them."""
+    from venus_spark.streaming import DEFAULT_MAX_FILES_PER_TRIGGER
+
+    threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    assert spark.conf.get(threshold) == str(DEFAULT_MAX_FILES_PER_TRIGGER)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    n_files, bad_every = DEFAULT_MAX_FILES_PER_TRIGGER, 32
+    for k in range(n_files):
+        lines = [json.dumps(make_record(2 * k + j)) for j in range(2)]
+        if k % bad_every == 0:
+            lines.append(f"broken-{k}")
+        (landing / f"f{k:04d}.jsonl").write_text("\n".join(lines))
+
+    sink = tmp_path / "sink"
+    q = start_logs_ingest(
+        read_log_stream(spark, str(landing)),
+        sink_dir=str(sink),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        trigger_seconds=None,
+    )
+    assert q.awaitTermination(120)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    batches = [p for p in q.recentProgress if p["numInputRows"]]
+    assert len(batches) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup(str(q.runId))) == 2
+    assert spark.read.parquet(str(sink / "logs")).count() == 2 * n_files
+    quarantine = spark.read.parquet(str(sink / "quarantine"))
+    assert quarantine.count() == n_files // bad_every
+
+
+def test_health_listener_reports_batch_durations(spark, tmp_path):
+    """IngestHealthListener turns healthy after a drain, and its last
+    progress says where the micro-batch's time went."""
+    import time
+
+    from venus_spark.streaming import IngestHealthListener
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "a.jsonl").write_text(
+        "\n".join(json.dumps(make_record(i)) for i in range(5))
+    )
+    listener = IngestHealthListener()
+    spark.streams.addListener(listener)
+    try:
+        q = start_logs_ingest(
+            read_log_stream(spark, str(landing)),
+            sink_dir=str(tmp_path / "sink"),
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            trigger_seconds=None,
+            query_name="health_probe_ingest",
+        )
+        assert q.awaitTermination(120)
+        phases = {"getBatch", "addBatch", "triggerExecution"}
+        deadline = time.time() + 60
+        while time.time() < deadline:
+            last = listener.last_progress("health_probe_ingest")
+            if last is not None and phases <= set(last["durationMs"]):
+                break
+            time.sleep(0.1)
+        assert listener.healthy("health_probe_ingest")
+        last = listener.last_progress("health_probe_ingest")
+        assert last["numInputRows"] == 5
+        assert phases <= set(last["durationMs"])
+    finally:
+        spark.streams.removeListener(listener)
+
+
 def test_socket_source_end_to_end(spark, tmp_path):
     """TCP push source (reference ZMQ-PULL analog): a sender thread
     writes JSON lines into a socket; the same parse pipeline lands them

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from venus_spark.streaming import DEFAULT_MAX_FILES_PER_TRIGGER
+
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
@@ -53,6 +55,18 @@ def get_spark(
         # Parquet TIMESTAMP(NANOS) is unsupported by the Spark reader;
         # surface it as epoch-nanos LongType and convert in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # A file-stream micro-batch at the admission bound re-stats its
+        # files on the driver: a file index over more paths than this
+        # threshold lists them with a distributed job of one task per
+        # path, which would be a third job beside the batch's two sink
+        # writes. The conf is session-wide because the file source keeps
+        # the session ``readStream`` was called on, not the query's
+        # clone; any listing of up to this many paths at one level runs
+        # on the driver.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(DEFAULT_MAX_FILES_PER_TRIGGER),
+        )
         # r16 config posture (guide §9/§3.1), env-parameterised so the
         # driver's bench stays comparable and a cluster deployment can
         # flip them without code edits; defaults = the measured-kept

@@ -14,6 +14,9 @@ query:
   intake — the Spark analog of the reference's bounded queue; Spark
   never drops internally, so at-most-once admission becomes
   source-side backpressure (strictly better, same steady-state rate).
+  A micro-batch at the bound lists its files on the driver (the session
+  sets Spark's parallel-listing threshold to the bound), so it runs no
+  file-listing job beside its sink writes.
 - **Micro-batcher** (A9): ``trigger(processingTime='5 seconds')``
   mirrors MAX_BATCH_AGE_SECONDS=5 (``venus/settings.py:39-41``); the
   size trigger generalizes to the per-trigger intake cap.
@@ -743,6 +746,27 @@ def read_logs_table(spark: SparkSession, sink_dir: str) -> DataFrame:
     return df
 
 
+def _start_query(
+    source: DataFrame,
+    query_name: str,
+    write_batch,
+    checkpoint_dir: str,
+    trigger_seconds: int | None,
+) -> StreamingQuery:
+    """Start ``source`` as the checkpointed query ``query_name`` whose
+    micro-batches go to ``write_batch(batch, batch_id)``: one trigger
+    every ``trigger_seconds``, or ``None`` for ``availableNow`` (drain
+    what has landed, then stop)."""
+    writer = (
+        source.writeStream.queryName(query_name)
+        .foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if trigger_seconds is None:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
+
+
 def start_logs_ingest(
     source: DataFrame,
     sink_dir: str,
@@ -835,16 +859,9 @@ def start_logs_ingest(
         finally:
             parsed.unpersist()
 
-    writer = (
-        source.writeStream.queryName(query_name)
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_query(
+        source, query_name, write_batch, checkpoint_dir, trigger_seconds
     )
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def start_documents_ingest(
@@ -995,16 +1012,9 @@ def start_documents_ingest(
     # union (live_documents) follows the deployment's actual sink, not
     # just the conventional default (review r10 pass-2 #2)
     _record_doc_sink_pointer(index_sf_dir, sink_dir)
-    writer = (
-        source.writeStream.queryName("documents_ingest")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_query(
+        source, "documents_ingest", write_batch, checkpoint_dir, trigger_seconds
     )
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def start_embeddings_ingest(
@@ -1056,21 +1066,17 @@ def start_embeddings_ingest(
     # record where this stream lands vectors so the live plans'
     # pending-window union follows the deployment's actual sink
     _record_emb_sink_pointer(index_sf_dir, sink_dir)
-    writer = (
-        source.writeStream.queryName("embeddings_ingest")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_query(
+        source, "embeddings_ingest", write_batch, checkpoint_dir, trigger_seconds
     )
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 class IngestHealthListener(StreamingQueryListener):
     """A15 analog: liveness from query progress events instead of a TCP
-    'ok' endpoint. ``healthy()`` is what a health probe would serve."""
+    'ok' endpoint. ``healthy()`` is what a health probe would serve;
+    ``last_progress()`` also says where the last micro-batch's time went
+    (``durationMs``: ``getBatch``, ``addBatch``, ``triggerExecution``
+    and the other phases Spark reports, in milliseconds)."""
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
@@ -1088,6 +1094,7 @@ class IngestHealthListener(StreamingQueryListener):
                 "batchId": p.batchId,
                 "numInputRows": p.numInputRows,
                 "timestamp": p.timestamp,
+                "durationMs": p.durationMs,
             }
 
     def onQueryIdle(self, event) -> None:
@@ -1139,16 +1146,9 @@ def start_aux_ingest(
         finally:
             parsed.unpersist()
 
-    writer = (
-        source.writeStream.queryName(f"{table}_ingest")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_query(
+        source, f"{table}_ingest", write_batch, checkpoint_dir, trigger_seconds
     )
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def dedup_stream(
@@ -1294,16 +1294,9 @@ def start_events_rollup_ingest(
         finally:
             batch.unpersist()
 
-    writer = (
-        source.writeStream.queryName("events_rollup_ingest")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_query(
+        source, "events_rollup_ingest", write_batch, checkpoint_dir, trigger_seconds
     )
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def read_kv_postings(spark: SparkSession, sink_dir: str) -> DataFrame:
