@@ -1245,14 +1245,6 @@ def test_fan_out_split_estimate_counts_byte_ranges(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
-def test_fan_out_kill_switch(spark, monkeypatch):
-    from venus_spark.sources import fan_out, load_table
-
-    monkeypatch.setenv("SPARK_GRAFT_NO_FANOUT", "1")
-    docs = load_table(spark, SF, "documents")
-    assert fan_out(docs) is docs
-
-
 def test_fanned_scan_keeps_pruning_and_pushdown(spark):
     from venus_spark.sources import load_table
 

@@ -621,14 +621,15 @@ def test_trgm_constant_drift_rebuild_refused_after_append(
 ):
     """ADVICE r5: documents_trgm's lazy rebuild lacked the
     refuse-rebuild guard the other four prepared layouts carry — a
-    stamp drift after append_documents would silently rebuild from the
-    base and drop the appended docs from fuzzy/trigram search."""
+    stamp drift after an append would silently rebuild from the base
+    and drop the appended docs from fuzzy/trigram search. The batch
+    manifest the append records arms the guard."""
     monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
     docs, sf, new = _split_docs(spark, tmp_path)
     prepared.documents_trgm(spark, sf)
     prepared.documents_minhash(spark, sf)
     prepared.documents_postings(spark, sf)
-    prepared.append_documents(spark, sf, new)
+    prepared.append_documents_batch(spark, sf, new, batch_id=1)
 
     path = prepared.prepared_path(sf, "documents_trgm.parquet")
     stamp = os.path.join(path, "_prep_meta.json")
@@ -637,45 +638,6 @@ def test_trgm_constant_drift_rebuild_refused_after_append(
     json.dump(meta, open(stamp, "w"))
     with pytest.raises(RuntimeError, match="appended/streamed"):
         prepared.documents_trgm(spark, sf)
-
-
-def test_append_apis_with_batch_id_delegate_to_manifested_path(
-    spark, tmp_path, monkeypatch
-):
-    """append_documents/append_embeddings with a batch_id route through
-    the manifested retry-idempotent paths: a double call is a no-op and
-    the batch ids are recorded in the artifacts' manifests."""
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    docs, sf, new = _split_docs(spark, tmp_path)
-    vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    vecs.filter(F.col("vec_id") < 48).write.parquet(
-        os.path.join(sf, "embeddings.parquet")
-    )
-    new_vecs = vecs.filter(F.col("vec_id") >= 48).withColumn(
-        "vec_id", F.col("vec_id") + 952
-    )
-    prepared.documents_trgm(spark, sf)
-    prepared.documents_minhash(spark, sf)
-    prepared.documents_postings(spark, sf)
-    prepared.embeddings_ivf(spark, sf)
-    prepared.embeddings_pq(spark, sf)
-
-    prepared.append_documents(spark, sf, new, batch_id=3)
-    prepared.append_documents(spark, sf, new, batch_id=3)  # no-op retry
-    prepared.append_embeddings(spark, sf, new_vecs, batch_id=3)
-    prepared.append_embeddings(spark, sf, new_vecs, batch_id=3)  # no-op
-
-    # documents: postings/minhash batches manifested via the merge
-    post = prepared.prepared_path(sf, "documents_postings.parquet")
-    assert 3 in prepared._read_merged(post)
-    # rows exactly once
-    got = prepared.documents_postings(spark, sf)[0]
-    assert got.groupBy("term", "doc_id").count().filter("count > 1").count() == 0
-    # embeddings: abatch manifest records the id, one copy of each vec
-    ivf = prepared.prepared_path(sf, "embeddings_ivf.parquet")
-    assert 3 in prepared._read_abatch_manifest(ivf)
-    vec_rows = spark.read.parquet(ivf)
-    assert vec_rows.groupBy("vec_id").count().filter("count > 1").count() == 0
 
 
 def test_in_service_merge_gate_excludes_current_epoch(

@@ -148,9 +148,11 @@ def test_stale_prepared_index_is_rebuilt(spark, tmp_path, monkeypatch):
 def test_incremental_append_equals_full_rebuild(spark, tmp_path, monkeypatch):
     """INSERT-time index maintenance: building the indexes on a base
     corpus and appending a new batch must yield row-for-row the same
-    artifacts as one full build over base+batch — the property that
+    index reads as one full build over base+batch — the property that
     makes the write-time indexes O(batch) to maintain at 100 TB (the
-    reference's GIN indexes are maintained per INSERT the same way)."""
+    reference's GIN indexes are maintained per INSERT the same way). A
+    retry of the same batch id is a no-op and the id is recorded in the
+    artifacts' manifests."""
     import os
 
     from pyspark.sql import functions as F
@@ -182,59 +184,62 @@ def test_incremental_append_equals_full_rebuild(spark, tmp_path, monkeypatch):
     base_sf = str(tmp_path / "base_sf")
     full_sf = str(tmp_path / "full_sf")
     for sf, d, v in (
-        (base_sf, base_docs, new_vecs.sparkSession.createDataFrame([], vecs.schema).unionByName(base_vecs)),
+        (base_sf, base_docs, base_vecs),
         (full_sf, base_docs.unionByName(new_docs), base_vecs.unionByName(new_vecs)),
     ):
         d.write.parquet(os.path.join(sf, "documents.parquet"))
         v.write.parquet(os.path.join(sf, "embeddings.parquet"))
 
-    # incremental: build on base, then append the batch
-    prepared.append_documents(spark, base_sf, new_docs)
-    prepared.append_embeddings(spark, base_sf, new_vecs)
+    # incremental: build on base, then append the batch twice (the
+    # second call is a retry of the same batch id)
+    prepared.documents_trgm(spark, base_sf)
+    prepared.documents_trgm_postings(spark, base_sf)
+    prepared.documents_minhash(spark, base_sf)
+    prepared.documents_postings(spark, base_sf)
+    for _ in range(2):
+        prepared.append_documents_batch(spark, base_sf, new_docs, batch_id=3)
+        prepared.append_embeddings_batch(spark, base_sf, new_vecs, batch_id=3)
+    for name in ("documents_postings.parquet", "documents_minhash.parquet"):
+        assert 3 in prepared._read_merged(prepared.prepared_path(base_sf, name))
+    for name in (
+        "documents_trgm.parquet",
+        "documents_trgm_postings.parquet",
+        "embeddings_ivf.parquet",
+        "embeddings_pq_codes.parquet",
+    ):
+        path = prepared.prepared_path(base_sf, name)
+        assert 3 in prepared._read_abatch_manifest(path), name
 
     def rows(df, key):
         return [r.asDict(recursive=True) for r in df.orderBy(key).collect()]
 
-    builders = {
-        "documents_trgm.parquet": prepared.documents_trgm,
-        "documents_trgm_postings.parquet": prepared.documents_trgm_postings,
-        "documents_minhash.parquet": prepared.documents_minhash,
-        "embeddings_pq_codes.parquet": prepared.embeddings_pq,
-        "embeddings_ivf.parquet": prepared.embeddings_ivf,
-        "documents_postings.parquet": prepared.documents_postings,
-        "documents_dfreq.parquet": prepared.documents_postings,
-        # one-row stats: bit-equal avgdl proves the O(1) counter update
+    readers = {
+        "trgm": (prepared.documents_trgm, ["doc_id"]),
+        "trgm_postings": (prepared.documents_trgm_postings, ["trg", "doc_id"]),
+        "minhash": (prepared.documents_minhash, ["doc_id"]),
+        "postings": (lambda s, d: prepared.documents_postings(s, d)[0],
+                     ["term", "doc_id"]),
+        "dfreq": (lambda s, d: prepared.documents_postings(s, d)[1], ["term"]),
+        # one-row stats: bit-equal avgdl proves the counter-row update
         # reproduces the engine aggregate exactly
-        "documents_stats.parquet": prepared.documents_postings,
+        "stats": (lambda s, d: prepared.documents_postings(s, d)[2], ["n_docs"]),
+        "pq_codes": (lambda s, d: prepared.embeddings_pq(s, d)[0], ["vec_id"]),
+        "ivf": (lambda s, d: prepared.embeddings_ivf(s, d)[0], ["vec_id"]),
     }
-    keys = {
-        "documents_trgm.parquet": ["doc_id"],
-        "documents_trgm_postings.parquet": ["trg", "doc_id"],
-        "documents_minhash.parquet": ["doc_id"],
-        "embeddings_pq_codes.parquet": ["vec_id"],
-        "embeddings_ivf.parquet": ["vec_id"],
-        "documents_postings.parquet": ["term", "doc_id"],
-        "documents_dfreq.parquet": ["term"],
-        "documents_stats.parquet": ["n_docs"],
-    }
-    for name, build in builders.items():
-        inc = spark.read.parquet(prepared.prepared_path(base_sf, name))
-        build(spark, full_sf)  # trigger full-side build, then compare
-        full = spark.read.parquet(prepared.prepared_path(full_sf, name))
-        assert rows(inc, keys[name]) == rows(full, keys[name]), name
+    for name, (read, key) in readers.items():
+        inc = rows(read(spark, base_sf), key)
+        assert inc == rows(read(spark, full_sf), key), name
 
     # appended docs are immediately servable: the near-dup planted in
     # the batch is found by the index-served LSH path
     from venus_spark.operators.dedup import lsh_near_dup_pairs_from_index
 
-    idx = spark.read.parquet(
-        prepared.prepared_path(base_sf, "documents_minhash.parquet")
-    )
+    idx = prepared.documents_minhash(spark, base_sf)
     pairs = lsh_near_dup_pairs_from_index(idx).collect()
     assert any(r["id_a"] == 0 and r["id_b"] == 1009 for r in pairs)
-    # ... and by the BUCKETED band layout: append_documents invalidated
-    # it, so the rebuild covers the appended batch (a stale band table
-    # would silently miss the pair)
+    # ... and by the BUCKETED band layout: append_documents_batch
+    # invalidated it, so the rebuild covers the appended batch (a stale
+    # band table would silently miss the pair)
     from venus_spark.plans import all_plans
 
     colo = all_plans()["dedup_minhash_lsh_colocated"].fn(spark, base_sf).collect()
@@ -1200,7 +1205,7 @@ def test_compact_postings_preserves_rows_and_recovers_from_crash(
     new_docs = docs.filter(F.col("doc_id") >= 40).withColumn(
         "doc_id", F.col("doc_id") + 960
     )
-    prepared.append_documents(spark, sf, new_docs)
+    prepared.append_documents_batch(spark, sf, new_docs, batch_id=1)
 
     def rows():
         post, dfreq, stats = prepared.documents_postings(spark, sf)
@@ -1271,16 +1276,16 @@ def test_compact_trgm_postings_preserves_rows_and_recovers(
     new_docs = docs.filter(F.col("doc_id") >= 40).withColumn(
         "doc_id", F.col("doc_id") + 960
     )
-    prepared.append_documents(spark, sf, new_docs)
+    prepared.append_documents_batch(spark, sf, new_docs, batch_id=1)
     before = rows()
     path = prepared.prepared_path(sf, "documents_trgm_postings.parquet")
     prepared.compact_documents_trgm_postings(spark, sf)
     assert rows() == before
-    # stamp + marker carried: re-ensure is a no-op, no refuse, no rebuild
+    # stamp + manifest carried: re-ensure is a no-op, no refuse, no rebuild
     listing = sorted(os.listdir(path))
     prepared.documents_trgm_postings(spark, sf)
     assert sorted(os.listdir(path)) == listing
-    assert prepared._has_append_marker(path)
+    assert prepared._read_abatch_manifest(path) == {1}
 
     # crash window: complete tmp + displaced live dir -> next read recovers
     os.rename(path, path + ".compact.old")
@@ -1315,13 +1320,14 @@ def test_compaction_restores_postings_row_group_pruning(
         os.path.join(sf, "documents.parquet")
     )
     prepared.documents_postings(spark, sf)
-    for j in range(3):  # three appends, each its own sorted file set
-        prepared.append_documents(
+    for j in range(3):  # three appends, each its own file set
+        prepared.append_documents_batch(
             spark,
             sf,
             docs.filter(
                 (F.col("doc_id") >= 40 + j * 20) & (F.col("doc_id") < 60 + j * 20)
             ).withColumn("doc_id", F.col("doc_id") + 960),
+            batch_id=j,
         )
 
     def admitted(path: str, col: str, term: str) -> tuple[int, int]:
@@ -1355,9 +1361,9 @@ def test_compaction_restores_postings_row_group_pruning(
 def test_mode_append_marker_blocks_lossy_rebuild_and_delete(
     spark, tmp_path, monkeypatch
 ):
-    """Review r5 #3 (second pass) + ADVICE r6: plain mode-append
-    batches carry no manifest, so the rebuild-refusal guard needs the
-    append marker — after append_documents, (a) a constant-drift
+    """Review r5 #3 (second pass) + ADVICE r6: the pending merge of a
+    batch append writes the append marker beside the merged-batch
+    manifest — after append_documents_batch, (a) a constant-drift
     rebuild of the postings must refuse rather than silently drop the
     appended documents' postings, and (b) tombstone_documents must NOT
     take the drop-for-lazy-rebuild path (which would trigger exactly
@@ -1386,7 +1392,10 @@ def test_mode_append_marker_blocks_lossy_rebuild_and_delete(
     appended = docs.filter(F.col("doc_id") >= 40).withColumn(
         "doc_id", F.col("doc_id") + 960
     )
-    prepared.append_documents(spark, sf, appended)
+    prepared.append_documents_batch(spark, sf, appended, batch_id=1)
+    assert prepared._has_append_marker(
+        prepared.prepared_path(sf, "documents_postings.parquet")
+    ), "the pending merge writes the append marker"
 
     # (b) ADVICE r6: the delete must stay available — scrub, not drop.
     # The drop path would rebuild from the appended-less base and lose
@@ -1599,18 +1608,15 @@ def test_compact_kv_postings_preserves_rows_and_recovers(
     ) == before
 
 
-def test_delete_adj_sidecar_survives_plain_append(
+def test_delete_scrub_retry_subtracts_once_after_batch_append(
     spark, tmp_path, monkeypatch
 ):
     """Review r7 #1: the ``_delete_adj.json`` exactly-once marker lives
-    inside the stats directory, and plain append_documents' stats
-    overwrite used to wipe it — reopening the double-subtraction
-    window for an UNCOMMITTED delete whose retry runs after the
-    append. Sequence under test: scrub-path delete crashes after its
-    stats adjustment commits but before the tombstone manifest; a
-    plain append runs; the delete is retried. Stats must equal a full
-    rebuild over (base + both appends) minus the deleted doc —
-    subtracted exactly once."""
+    inside the stats directory. Sequence under test: scrub-path delete
+    crashes after its stats adjustment commits but before the tombstone
+    manifest; a batch append runs; the delete is retried. The marker
+    survives the append, and stats equal a full rebuild over (base +
+    both appends) minus the deleted doc — subtracted exactly once."""
     import os
 
     from pyspark.sql import functions as F
@@ -1634,7 +1640,7 @@ def test_delete_adj_sidecar_survives_plain_append(
     app2 = docs.filter((F.col("doc_id") >= 48) & (F.col("doc_id") < 56)).withColumn(
         "doc_id", F.col("doc_id") + 2000
     )
-    prepared.append_documents(spark, sf, app1)  # index now absorbed
+    prepared.append_documents_batch(spark, sf, app1, batch_id=1)  # absorbed
 
     # crash window: adjustment + scrub committed, tombstone manifest NOT
     ids = spark.createDataFrame([(3,)], "doc_id long")
@@ -1642,9 +1648,9 @@ def test_delete_adj_sidecar_survives_plain_append(
     stats_path = prepared.prepared_path(sf, "documents_stats.parquet")
     assert prepared._read_delete_adj_applied(stats_path) == {9}
 
-    prepared.append_documents(spark, sf, app2)
+    prepared.append_documents_batch(spark, sf, app2, batch_id=2)
     assert prepared._read_delete_adj_applied(stats_path) == {9}, (
-        "plain append must carry the delete-adjustment sidecar"
+        "the append must keep the delete-adjustment sidecar"
     )
 
     # the retry completes the delete without subtracting doc 3 again
@@ -2310,67 +2316,6 @@ def test_cli_maintain_auto_isolates_step_failures(
     assert "vacuum-deletes" in out and "compact-postings" in out
 
 
-def test_cli_maintain_auto_reports_append_intent_wedge(
-    spark, tmp_path, monkeypatch, capsys
-):
-    """VERDICT r9 #4: a crashed plain ``append_documents`` wedges every
-    document-index ensure behind the intent marker's loud refusal —
-    previously the nightly just died at its first document step with a
-    generic FAILED line. It must instead REPORT the wedge as a named
-    first-class finding (marker age, since-when, the sound
-    remediations), skip the document-family steps loudly, run every
-    non-document step, exit nonzero, and perform NO auto-repair (review
-    r9 pass-8: recompute-from-postings violates the stored-stats /
-    delete-sidecar / zero-token invariants)."""
-    import json as _json
-    import os
-
-    from venus_spark import prepared
-    from venus_spark.__main__ import main
-
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    sf = _mk_doc_sf(spark, tmp_path)
-    prepared.documents_postings(spark, sf)  # a built document layout
-
-    # a clean dir reports no wedge
-    assert prepared.append_intent_status(sf) is None
-
-    # THE WEDGE: the crashed plain append's marker is still present
-    marker = prepared._append_intent_path(sf)
-    with open(marker, "w") as f:
-        _json.dump({"reason": "plain append_documents in flight"}, f)
-
-    rc = main(["maintain", "auto", "--sf", sf])
-    out = capsys.readouterr().out
-    assert rc == 1
-    # the named finding, with the remediation in the nightly output
-    assert "append-intent FAILED" in out
-    assert "append_documents_batch" in out
-    # document-family steps skipped LOUDLY (no generic refusal crash)
-    assert "merge-index skipped (append-intent marker)" in out
-    assert "documents skipped: append-intent marker" in out
-    # the refusal's generic traceback text must NOT be the story
-    assert "crashed mid-flight" not in out
-    # non-document steps still ran AND succeeded (substring presence
-    # alone would also match a 'X FAILED (...)' line — review r10
-    # pass-2 #5: a non-document step growing a marker refusal must
-    # fail this test, not hide inside the wedge's expected rc=1)
-    for label in (
-        "sweep-stagings",
-        "sink-repair",
-        "vacuum-deletes",
-        "compact-postings",
-    ):
-        assert label in out
-        assert f"{label} FAILED" not in out
-    # NO auto-repair: the marker is exactly where it was
-    assert os.path.exists(marker)
-    st = prepared.append_intent_status(sf)
-    assert st is not None
-    assert st["path"] == marker and st["age_seconds"] >= 0
-    assert "since" in st and "remediation" in st
-
-
 def test_dfreq_staged_refresh_invisible_and_recoverable(
     spark, tmp_path, monkeypatch
 ):
@@ -2440,82 +2385,6 @@ def test_dfreq_staged_refresh_invisible_and_recoverable(
     assert got == want and ("zanzibar", 1) in got
 
 
-def test_append_intent_marker_restores_loud_crash_contract(
-    spark, tmp_path, monkeypatch
-):
-    """Review r9 pass-7 #3 / pass-8: a plain append_documents mutates
-    four indexes non-atomically with no batch record to replay, so a
-    crash anywhere inside it must read as LOUD refusal on EVERY
-    document-index ensure (a cross-index tear — minhash finding
-    documents BM25 never will — is otherwise silent forever). There is
-    deliberately NO automatic repair (recomputing stored stats from the
-    physical postings would violate the merged-batch exclusion, the
-    delete sidecar accounting, and the zero-token counter history);
-    the remediation is the one the message names: restore from a
-    source of truth and re-land via append_documents_batch."""
-    import os
-    import shutil as _sh
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from venus_spark import prepared
-
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    sf = _mk_doc_sf(spark, tmp_path)
-    prepared.documents_postings(spark, sf)
-    prepared.documents_minhash(spark, sf)
-    new = spark.createDataFrame(
-        [(901, "xylophone quartz vortex", "en", "web", 23)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-
-    # simulate the crash mid-append: some indexes mutated, marker live
-    real_refresh = prepared._staged_refresh
-
-    def crash_on_refresh(*a, **k):
-        raise RuntimeError("simulated crash before the stats refresh")
-
-    monkeypatch.setattr(prepared.core, "_staged_refresh", crash_on_refresh)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        prepared.append_documents(spark, sf, new)
-    monkeypatch.setattr(prepared.core, "_staged_refresh", real_refresh)
-
-    # EVERY document-index ensure refuses loudly, naming the remediation
-    for ensure in (
-        prepared.documents_postings,
-        prepared.documents_minhash,
-        prepared.documents_trgm,
-        prepared.documents_trgm_postings,
-    ):
-        with pytest.raises(RuntimeError, match="append_documents_batch"):
-            ensure(spark, sf)
-
-    # the documented remediation: remove the marker + index artifacts,
-    # rebuild from the base table, re-land the batch via the replayable
-    # path — the final state equals a never-crashed deployment
-    os.remove(prepared._append_intent_path(sf))
-    prep_root = os.path.dirname(prepared.prepared_path(sf, "_x"))
-    for d in list(os.listdir(prep_root)):
-        if d.startswith("documents_"):
-            _sh.rmtree(os.path.join(prep_root, d))
-    prepared.documents_postings(spark, sf)  # rebuilds from base
-    prepared.append_documents_batch(spark, sf, new, batch_id=11)
-    post, dfreq, stats = prepared.documents_postings(spark, sf)
-    assert post.filter(F.col("doc_id") == 901).count() > 0
-    srow = stats.first()
-    assert int(srow["n_docs"]) == post.select("doc_id").distinct().count()
-
-    # a COMPLETED plain append leaves no marker and serves normally
-    new2 = spark.createDataFrame(
-        [(902, "quibble zephyr marmot", "en", "web", 21)],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    prepared.append_documents(spark, sf, new2)
-    assert not os.path.exists(prepared._append_intent_path(sf))
-    prepared.documents_postings(spark, sf)
-
-
 def test_nightly_sweeps_stale_stagings(spark, tmp_path, monkeypatch, capsys):
     """Review r9 pass-7 #5: a crashed writer's *_staging dir is
     recovery-invisible to readers by design, so only the maintenance
@@ -2566,33 +2435,6 @@ def test_swap_in_locked_refuses_torn_staging(spark, tmp_path, monkeypatch):
     # the live generation is untouched and still served
     assert sorted(os.listdir(dfreq)) == before
     prepared.documents_postings(spark, sf)
-
-
-def test_delete_paths_refuse_during_crashed_plain_append(
-    spark, tmp_path, monkeypatch
-):
-    """Review r9 pass-9 #1/#3: the append-intent contract applies to
-    WRITERS too — a delete's exactly-once stats accounting or the
-    nightly vacuum rewriting indexes over a torn mid-append state would
-    bake the tear in silently."""
-    import json as _json
-    import os
-
-    import pytest
-
-    from venus_spark import prepared
-
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    sf = _mk_doc_sf(spark, tmp_path)
-    prepared.documents_postings(spark, sf)
-    with open(prepared._append_intent_path(sf), "w") as f:
-        _json.dump({"reason": "test"}, f)
-    with pytest.raises(RuntimeError, match="append_documents"):
-        prepared.tombstone_documents(spark, sf, [1], batch_id=0)
-    with pytest.raises(RuntimeError, match="append_documents"):
-        prepared.vacuum_document_tombstones(spark, sf)
-    os.remove(prepared._append_intent_path(sf))
-    prepared.tombstone_documents(spark, sf, [1], batch_id=0)  # now fine
 
 
 def test_ivf_centroids_round_discipline_stamp(spark, tmp_path, monkeypatch):

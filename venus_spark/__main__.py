@@ -162,35 +162,23 @@ def _missing_vector_layouts(sf: str) -> list[str]:
     ]
 
 
-def _vacuum_all_deletes(spark, sf: str, include_documents: bool = True) -> int:
-    """``include_documents=False`` is the append-intent-wedge mode: the
-    document vacuum would refuse on the marker; the embeddings half has
-    no document-index dependency. ONE definition so a future index
-    family lands in both the healthy and the wedged nightly (review
-    r10 #3 — the hand-inlined wedge halves were re-creating the
-    duplicated-op-body divergence r8 pass-6 #7 closed)."""
+def _vacuum_all_deletes(spark, sf: str) -> int:
+    """Make every index family's outstanding deletes physical."""
     from venus_spark import prepared
 
     n = prepared.vacuum_embedding_tombstones(spark, sf)
-    if include_documents:
-        n += prepared.vacuum_document_tombstones(spark, sf)
-    return n
+    return n + prepared.vacuum_document_tombstones(spark, sf)
 
 
-def _compact_all_postings(
-    spark, sf: str, include_documents: bool = True
-) -> list[str]:
-    """Same wedge-mode contract as :func:`_vacuum_all_deletes`."""
+def _compact_all_postings(spark, sf: str) -> list[str]:
+    """Compact every postings family; returns the ones rewritten."""
     from venus_spark import prepared
 
     families = [
+        ("documents_postings", prepared.compact_documents_postings),
+        ("documents_trgm_postings", prepared.compact_documents_trgm_postings),
         ("events_kv_postings", prepared.compact_events_kv_postings),
     ]
-    if include_documents:
-        families = [
-            ("documents_postings", prepared.compact_documents_postings),
-            ("documents_trgm_postings", prepared.compact_documents_trgm_postings),
-        ] + families
     return [name for name, fn in families if fn(spark, sf)]
 
 
@@ -326,24 +314,6 @@ def cmd_maintain(args) -> int:
                 failed = True
                 steps.append(f"{label} FAILED ({exc})")
 
-        # FIRST: surface a wedged plain-append state as a NAMED finding
-        # (VERDICT r9 #4). Without this, the nightly died at the first
-        # document-index ensure's refusal with a generic FAILED line;
-        # now the marker is reported once — age, since-when, the sound
-        # remediations — the document-family steps are skipped loudly
-        # (they would each refuse on the same marker), and every
-        # non-document step still runs. Deliberately NO auto-repair
-        # (review r9 pass-8: recompute-from-postings violates the
-        # stored-stats / delete-sidecar / zero-token invariants).
-        wedge = prepared.append_intent_status(args.sf)
-        if wedge:
-            failed = True
-            steps.append(
-                "append-intent FAILED (plain append_documents marker "
-                f"present since {wedge['since']}, age "
-                f"{wedge['age_seconds']}s; remediation: "
-                f"{wedge['remediation']})"
-            )
         # sweep crash-leftover staging dirs — recovery-invisible
         # to readers by design, so only the maintenance window (no
         # in-flight writers by contract) can safely reclaim them
@@ -351,13 +321,10 @@ def cmd_maintain(args) -> int:
             "sweep-stagings",
             lambda: f"{prepared.sweep_stale_stagings(args.sf)} dir(s)",
         )
-        if wedge:
-            steps.append("merge-index skipped (append-intent marker)")
-        else:
-            step(
-                "merge-index",
-                lambda: f"{_merge_all_pending(spark, args.sf)} file(s)",
-            )
+        step(
+            "merge-index",
+            lambda: f"{_merge_all_pending(spark, args.sf)} file(s)",
+        )
 
         def sink_repair() -> str:
             from venus_spark.streaming import (
@@ -407,12 +374,7 @@ def cmd_maintain(args) -> int:
         step("sink-repair", sink_repair)
         step(
             "vacuum-deletes",
-            lambda: f"{_vacuum_all_deletes(spark, args.sf, include_documents=not wedge)} row(s)"
-            + (
-                " (embeddings only; documents skipped: append-intent marker)"
-                if wedge
-                else ""
-            ),
+            lambda: f"{_vacuum_all_deletes(spark, args.sf)} row(s)",
         )
         absent = _missing_vector_layouts(args.sf)
         if not absent:
@@ -434,15 +396,7 @@ def cmd_maintain(args) -> int:
             )
         step(
             "compact-postings",
-            lambda: (
-                "+".join(
-                    _compact_all_postings(
-                        spark, args.sf, include_documents=not wedge
-                    )
-                )
-                or "none"
-            )
-            + (" (documents skipped: append-intent marker)" if wedge else ""),
+            lambda: "+".join(_compact_all_postings(spark, args.sf)) or "none",
         )
         if _os.path.exists(
             prepared.prepared_path(args.sf, "events_zorder.parquet")

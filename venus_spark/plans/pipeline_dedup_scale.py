@@ -404,7 +404,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes per batch, as opposed to the corpus-wide self-dedup of
     dedup_minhash_lsh. Both sides are served from the prepared MinHash
     index (stored signatures + hashed shingle sets, maintained O(batch)
-    at INSERT by append_documents / the streaming pending-list): query
+    at INSERT by append_documents_batch / the streaming pending-list): query
     time pays band expressions, the new-vs-old band join, and exact
     Jaccard verification of candidates only. The batch here is the
     doc_id % 3 == 0 slice standing in for newly arrived documents.

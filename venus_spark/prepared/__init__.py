@@ -99,12 +99,6 @@ from venus_spark.prepared.trgm import (  # noqa: F401
 from venus_spark.prepared.docs import (  # noqa: F401
     documents_minhash,
     _minhash_rows,
-    _APPEND_INTENT,
-    _APPEND_INTENT_REMEDIATION,
-    _append_intent_path,
-    append_intent_status,
-    _refuse_if_append_intent,
-    append_documents,
     append_documents_batch,
     _MINHASH_INDEX,
     write_minhash_pending,
@@ -184,7 +178,6 @@ from venus_spark.prepared.vectors import (  # noqa: F401
     embeddings_ivf,
     _heal_ivf_centroids,
     embeddings_pq,
-    append_embeddings,
     _pq_code_rows,
     _codebook_rows,
     _collect_codebook,

@@ -382,12 +382,14 @@ def _walk_rel(tmp: str) -> list[tuple[str, list[str]]]:
 _APPEND_MARKER = "_has_appends.json"
 
 def _mark_appended(path: str) -> None:
-    """Record that a layout absorbed un-manifested (plain mode-append)
-    batch rows — the batch-API appends carry no batch id, so this
-    marker is what lets :func:`_refuse_rebuild_with_absorbed_batches`
-    protect them the way the manifested streaming appends are
-    protected. Rewrites that preserve the row set (compaction, vacuum,
-    retention) must carry the marker like they carry the manifests."""
+    """Record that a layout absorbed batch rows the base table may not
+    hold, so :func:`_refuse_rebuild_with_absorbed_batches` refuses a
+    lossy from-base rebuild. :func:`_merge_pending` writes it when it
+    folds pending batches into a base. Layouts written before every
+    append took a batch id carry it from the old un-manifested
+    mode-append, which left no batch record. Rewrites that preserve
+    the row set (compaction, vacuum, retention) must carry the marker
+    like they carry the manifests."""
     p = os.path.join(path, _APPEND_MARKER)
     with open(p + ".tmp", "w") as f:
         json.dump(True, f)

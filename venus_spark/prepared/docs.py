@@ -1,14 +1,12 @@
 """Documents-table maintenance: the MinHash near-dup index, the
-append/intent protocol, document tombstones (RTBF), and the delete
+manifested batch append, document tombstones (RTBF), and the delete
 scrub + vacuum paths that keep every document-side index consistent."""
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +38,6 @@ def documents_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sh_hash": "hash31",
     }
     path = _core.prepared_path(sf_dir, "documents_minhash.parquet")
-    _refuse_if_append_intent(sf_dir)
     _core._recover_prepared_swaps(sf_dir, path, ".vacuum")  # locked when pending
     if not _core._is_built(path, meta) and not _core._prepared_built_under_lock(
         sf_dir, ((path, ".vacuum"),), lambda: _core._is_built(path, meta)
@@ -71,192 +68,14 @@ def _minhash_rows(docs: DataFrame) -> DataFrame:
 
     return minhash_index(docs, keep=("lang", "source"))
 
-_APPEND_INTENT = "_docs_append_intent.json"
-
-# ONE remediation text shared by the ensure-time refusal and the
-# nightly/audit finding (review r10 #6: two prose copies had already
-# drifted; conflicting recovery instructions are worse than none).
-_APPEND_INTENT_REMEDIATION = (
-    "restore the document indexes from a source of truth: if the base "
-    "table plus re-landable batches cover the corpus, remove the marker "
-    "and the document index artifacts, rebuild, and re-land every "
-    "post-base batch via append_documents_batch (which replays exactly). "
-    "No auto-repair is sound — a recompute from physical postings "
-    "violates the stored-stats/delete-sidecar/zero-token invariants. On "
-    "a streaming/merged deployment avoid plain append_documents entirely."
-)
-
-def _append_intent_path(sf_dir: str) -> str:
-    return _core.prepared_path(sf_dir, _APPEND_INTENT)
-
-def append_intent_status(sf_dir: str) -> dict | None:
-    """Surface a live plain-append intent marker as DATA (VERDICT r9
-    #4): the nightly and one-shot audits report the wedged state as a
-    named finding — marker age, path, and the sound remediations —
-    instead of dying at the first document-index ensure's refusal.
-    There is deliberately no auto-repair (see
-    :func:`_refuse_if_append_intent`); this helper only makes the
-    wedge VISIBLE. Returns None when no marker is present."""
-    p = _append_intent_path(sf_dir)
-    try:
-        st = os.stat(p)
-    except OSError:
-        return None
-    import datetime as _dt
-
-    return {
-        "path": p,
-        "sf_dir": sf_dir,
-        "age_seconds": max(0.0, round(time.time() - st.st_mtime, 1)),
-        "since": _dt.datetime.fromtimestamp(
-            st.st_mtime, _dt.timezone.utc
-        ).isoformat(timespec="seconds"),
-        "remediation": _APPEND_INTENT_REMEDIATION,
-    }
-
-def _refuse_if_append_intent(sf_dir: str) -> None:
-    """Loud refusal while a plain ``append_documents`` is in flight or
-    crashed mid-flight — checked by EVERY document-index ensure so a
-    partial multi-index append can never serve a cross-index tear
-    (review r9 pass-7 #4: minhash finding documents BM25 never will).
-    There is deliberately NO automatic repair (pass-8 killed one: any
-    recompute of the stored stats from the physical postings violates
-    the stored-stats-excludes-merged invariant, the delete-sidecar
-    exactly-once accounting, and the zero-token counter history) — the
-    legacy mode-append path has no batch record to replay, so the only
-    sound remediations are the ones the message names."""
-    if os.path.exists(_append_intent_path(sf_dir)):
-        raise RuntimeError(
-            f"a plain append_documents for {sf_dir!r} is in flight or "
-            "crashed mid-flight: the document indexes may disagree "
-            "about the appended batch and the legacy mode-append path "
-            "has no batch record to replay. Remediation: "
-            + _APPEND_INTENT_REMEDIATION
-        )
-
-@_core.read_once
-def append_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    new_docs: DataFrame,
-    batch_id: int | None = None,
-) -> None:
-    """INSERT-time maintenance of the document indexes — the Spark
-    analog of the reference's GIN upkeep on every insert (migration
-    :21,36: the index is declared once; PostgreSQL maintains it per
-    row thereafter).
-
-    Pass ``batch_id`` to get the MANIFESTED, retry-idempotent path
-    (delegates to :func:`append_documents_batch`); without one this is
-    plain mode-append — guarded against lossy rebuilds by the append
-    marker, but a crash-retry double-appends, so callers that may
-    retry should always supply an id.
-
-    The trigram/MinHash indexes are row-local (a bloom or signature
-    depends only on that document's text), so maintaining them for a
-    new batch is ONE narrow scan of the batch appended to each index
-    directory — O(batch) work, no shuffle over and no rewrite of the
-    existing corpus. The inverted index appends its batch postings the
-    same way, then refreshes its two corpus-wide aggregates: df
-    (vocabulary-sized re-aggregation over postings) and stats (pure
-    O(1) arithmetic on the stored exact counters). Derived layouts
-    that cannot absorb appends in place (the bucketed LSH band table)
-    are DROPPED so their next use rebuilds over the updated index —
-    stale-serving is the failure mode that cannot be allowed. The
-    indexes must already be built for ``sf_dir`` (the ensure calls
-    below are no-ops after the first build). ``tests/test_prepared.py``
-    asserts incremental-append == full-rebuild row-for-row."""
-    if batch_id is not None:
-        return append_documents_batch(spark, sf_dir, new_docs, batch_id)
-    _trgm.documents_trgm(spark, sf_dir)
-    _trgm.documents_trgm_postings(spark, sf_dir)
-    documents_minhash(spark, sf_dir)
-    _postings.documents_postings(spark, sf_dir)
-    # INTENT marker around the WHOLE multi-index append (review r9
-    # pass-7 #3 + pass-8 #4): this legacy path mutates four indexes
-    # non-atomically with no batch record to replay, so a crash
-    # anywhere inside it must read as LOUD refusal on every
-    # document-index ensure (cross-index tears — minhash finding
-    # documents BM25 never will — are otherwise silent forever), and
-    # the marker is removed only after the last side effect
-    # (_drop_lsh_bands). Callers that need online/crash-safe appends
-    # use append_documents_batch.
-    with open(_append_intent_path(sf_dir) + ".tmp", "w") as f:
-        json.dump({"reason": "plain append_documents in flight"}, f)
-    os.replace(
-        _append_intent_path(sf_dir) + ".tmp", _append_intent_path(sf_dir)
-    )
-    trgm_path = _core.prepared_path(sf_dir, "documents_trgm.parquet")
-    _core.layout_rows(
-        _trgm._trgm_rows(new_docs), "documents_trgm.parquet"
-    ).write.mode("append").parquet(trgm_path)
-    _core._mark_appended(trgm_path)
-    tp_path = _core.prepared_path(sf_dir, "documents_trgm_postings.parquet")
-    _core.layout_rows(
-        _trgm._trgm_postings_rows(new_docs), _trgm._TRGM_POST_INDEX
-    ).write.mode("append").parquet(tp_path)
-    _core._mark_appended(tp_path)
-    mh_path = _core.prepared_path(sf_dir, "documents_minhash.parquet")
-    _core.layout_rows(
-        _minhash_rows(new_docs), _MINHASH_INDEX
-    ).write.mode("append").parquet(mh_path)
-    _core._mark_appended(mh_path)
-    post_path = _core.prepared_path(sf_dir, "documents_postings.parquet")
-    dfreq_path = _core.prepared_path(sf_dir, "documents_dfreq.parquet")
-    stats_path = _core.prepared_path(sf_dir, "documents_stats.parquet")
-    (
-        _core.layout_rows(_postings._postings_rows(new_docs), _postings._POSTINGS_INDEX)
-        .repartitionByRange("term")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("append")
-        .parquet(post_path)
-    )
-    _core._mark_appended(post_path)
-    old = _core.read_layout(spark, "documents_stats.parquet", stats_path).first()
-    # The delete-adjustment sidecar is the exactly-once marker of
-    # _scrub_postings_delete; the stats refresh replaces the whole
-    # directory, so carry it like manifests are carried across every
-    # row-set-preserving rewrite — losing it would let an uncommitted
-    # delete's retry subtract the same docs twice (review r7 #1). With
-    # the staged refresh (r9) the sidecar, rows, and stamp land in the
-    # staging dir and flip ATOMICALLY, which subsumes the old
-    # sidecar-before-stamp crash ordering: a crash anywhere leaves the
-    # previous complete generation live.
-    adj_applied = _read_delete_adj_applied(stats_path)
-    b_n, b_sum = _postings._doclen_counters(new_docs)
-
-    def _refresh_dfreq(target: str) -> None:
-        _postings._write_dfreq(spark, post_path, target)
-        _core._stamp(target, _postings._POSTINGS_META)
-
-    def _refresh_stats(target: str) -> None:
-        _postings._write_stats(
-            spark, target, int(old["n_docs"]) + b_n, int(old["dl_sum"]) + b_sum
-        )
-        if adj_applied:
-            with open(os.path.join(target, _DELETE_ADJ_SIDECAR), "w") as f:
-                json.dump(sorted(adj_applied), f)
-        _core._stamp(target, _postings._POSTINGS_META)
-
-    _core._staged_refresh(sf_dir, dfreq_path, _refresh_dfreq)
-    _core._staged_refresh(
-        sf_dir,
-        stats_path,
-        _refresh_stats,
-        recover_tags=(".refresh", ".deladj"),
-    )
-    _buckets._drop_lsh_bands(spark, sf_dir)
-    os.remove(_append_intent_path(sf_dir))  # LAST: the append is complete
-
 @_core.read_once
 def append_documents_batch(
     spark: SparkSession, sf_dir: str, new_docs: DataFrame, batch_id: int
 ) -> None:
-    """Retry-idempotent batch append across all four document indexes —
-    the manifested counterpart of :func:`append_documents` (which is
-    plain mode-append: guarded against lossy rebuilds by the append
-    marker, but a crash-retry double-appends). Here every artifact
-    absorbs the batch under its id exactly once:
+    """INSERT-time maintenance of all four document indexes — the Spark
+    analog of the reference's GIN upkeep on every insert — and the one
+    document append path. Every artifact absorbs the batch under its id
+    exactly once, so a crash-retry of the same batch is a no-op:
 
     - trigram index: rows land via :func:`_append_batch_files`
       (per-file atomic renames, batch manifest committed last — a
@@ -268,6 +87,9 @@ def append_documents_batch(
       id), which also makes the postings stats arithmetic idempotent
       for free: there is no read-modify-write of the stats table, the
       batch's per-document counter rows ARE the stats update.
+
+    The bucketed LSH band table cannot absorb rows in place, so it is
+    dropped and rebuilt on next use over the updated index.
 
     ``batch_id`` shares one id space with the streaming epoch ids for
     these indexes (same pending area); callers driving both must keep
@@ -501,11 +323,7 @@ def _scrub_postings_delete(
        — the marker that makes this step exactly-once: the adjustment
        is computed from the postings BEFORE step 2 destroys the
        evidence, and a retry that finds the marker skips straight to
-       the scrub. (Known corner, documented: a PLAIN mode-append of a
-       zero-token document leaves no per-doc record anywhere, so its
-       n_docs contribution cannot be reclaimed — use the manifested
-       batch-append path, which writes counter rows, when exact delete
-       accounting matters.)
+       the scrub.
     2. postings: rewrite the base without the tombstoned docs' rows
        through :func:`_compact_sorted_swap` (stamp, both manifests and
        the append marker carried; re-run removes nothing).
@@ -522,7 +340,7 @@ def _scrub_postings_delete(
     dfreq_path = _core.prepared_path(sf_dir, "documents_dfreq.parquet")
     stats_path = _core.prepared_path(sf_dir, "documents_stats.parquet")
     # every swap family that can displace an artifact this path reads
-    # (review r9 pass-7 #2: an append's crashed stats .refresh swap
+    # (review r9 pass-7 #2: a heal's crashed stats .refresh swap
     # would otherwise leave the sidecar read below seeing a missing
     # dir — DELETE down until an unrelated query recovered it;
     # pass-9 #2 added the postings' own .compact family)
@@ -633,10 +451,6 @@ def tombstone_documents(
 
     ``batch_id`` makes retries idempotent, exactly like the append
     paths (same-id-same-ids contract)."""
-    # the append-intent contract applies to WRITERS too (review r9
-    # pass-9 #1): committing a delete's exactly-once stats accounting
-    # on top of a torn mid-append state would bake the tear in
-    _refuse_if_append_intent(sf_dir)
     if batch_id in _core._read_abatch_manifest(_tombstones_path(sf_dir)):
         return  # delete batch fully committed earlier — retry is a no-op
     ids = doc_ids if isinstance(doc_ids, DataFrame) else spark.createDataFrame(
@@ -704,9 +518,6 @@ def vacuum_document_tombstones(spark: SparkSession, sf_dir: str) -> int:
     resurrect. The set stays broadcast-small (deletes are the rare
     exception), and the read-side anti-join over an already-vacuumed
     index filters nothing but costs one small broadcast."""
-    _refuse_if_append_intent(sf_dir)  # same writer contract as the
-    # tombstone commit (review r9 pass-9 #3): the nightly must not
-    # rewrite indexes over a torn mid-append state and report success
     tb = document_tombstones(spark, sf_dir)
     if tb is None:
         return 0

@@ -531,7 +531,7 @@ def append_events(
     spark: SparkSession, sf_dir: str, new_events: DataFrame, batch_id: int
 ) -> None:
     """INSERT-time maintenance of the event-side artifacts (the twin of
-    ``append_documents`` on the fact table). Every artifact absorbs the
+    ``append_documents_batch`` on the fact table). Every artifact absorbs the
     batch through :func:`_append_batch_files`, so re-running a batch
     (crash-retry, at-least-once upstream) converges instead of
     double-counting — ``batch_id`` is the caller's stable identity for

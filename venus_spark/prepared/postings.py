@@ -99,8 +99,7 @@ def _postings_tables(
     _core._recover_prepared_swaps(sf_dir, post_path, ".compact")  # locked when pending
     _core._recover_prepared_swaps(sf_dir, dfreq_path, ".refresh")  # df refresh swap
     _core._recover_prepared_swaps(sf_dir, stats_path, ".deladj", ".refresh")
-    # (an interrupted delete's stats adjustment / append's stats refresh)
-    _docs._refuse_if_append_intent(sf_dir)
+    # (an interrupted delete's stats adjustment / heal's stats refresh)
     # The heal-vs-rebuild fork is decided by the LOCKED probe, not an
     # unlocked re-check (the IVF heal's review r11 pass-10 #2 lesson):
     # during a compact/refresh swap's aside window an artifact is

@@ -134,12 +134,11 @@ def documents_trgm(spark: SparkSession, sf_dir: str) -> DataFrame:
     meta = {"bloom_bits": _BLOOM_BITS, "hash": "crc32", "k": 2,
             "salt": _BLOOM_SALT, "gram": 3, "layout": "array"}
     path = _core.prepared_path(sf_dir, "documents_trgm.parquet")
-    _docs._refuse_if_append_intent(sf_dir)
     _core._recover_prepared_swaps(sf_dir, path, ".vacuum")  # locked when pending
     if not _core._is_built(path, meta) and not _core._prepared_built_under_lock(
         sf_dir, ((path, ".vacuum"),), lambda: _core._is_built(path, meta)
     ):
-        # mode-appended documents may exist only in this index + the
+        # appended documents may exist only in this index + the
         # sink table — a from-base rebuild would silently drop them
         _core._refuse_rebuild_with_absorbed_batches(path, "trigram index")
         if os.path.exists(path):  # partial/failed/stale earlier build
@@ -184,7 +183,6 @@ def documents_trgm_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     read like every row-local index; appends land batch rows via the
     standard append paths."""
     path = _core.prepared_path(sf_dir, "documents_trgm_postings.parquet")
-    _docs._refuse_if_append_intent(sf_dir)
     _core._recover_prepared_swaps(sf_dir, path, ".vacuum", ".compact")
     if not _core._is_built(path, _TRGM_POST_META) and not _core._prepared_built_under_lock(
         sf_dir,

@@ -304,53 +304,6 @@ def embeddings_pq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
         _core.read_layout(spark, _PQ_CODEBOOK, cb_path),
     )
 
-@_core.read_once
-def append_embeddings(
-    spark: SparkSession,
-    sf_dir: str,
-    new_vecs: DataFrame,
-    batch_id: int | None = None,
-) -> None:
-    """INSERT-time maintenance of the vector indexes. Pass ``batch_id``
-    for the MANIFESTED, retry-idempotent path (delegates to
-    :func:`append_embeddings_batch`); without one this is plain
-    mode-append — rebuild-guarded but a crash-retry double-appends.
-
-    - IVF: new vectors append under their cluster's partition directory
-      (assignment to the EXISTING centroids is the standard IVF insert
-      path; centroids are refreshed by a periodic offline re-train, not
-      per insert — here the ``label`` column already carries the
-      assignment).
-    - PQ: new vectors are encoded against the EXISTING codebook and
-      their 8-byte codes appended — exactly how a deployed PQ index
-      ingests. The deterministic codebook sample (first PQ_KS of
-      ``vec_id % PQ_CB_MOD == 0``) is stable under append only when the
-      base corpus already SATURATES it: with fewer than PQ_KS stored
-      codewords, a full rebuild over base+batch would pull additional
-      codewords from the appended ids and re-code every vector — so an
-      unsaturated codebook makes incremental maintenance impossible,
-      and this function refuses rather than let append and rebuild
-      silently diverge.
-    """
-    if batch_id is not None:
-        return append_embeddings_batch(spark, sf_dir, new_vecs, batch_id)
-    vec_path = _core.prepared_path(sf_dir, "embeddings_ivf.parquet")
-    embeddings_ivf(spark, sf_dir)
-    _core.layout_rows(new_vecs, _IVF).write.mode("append").partitionBy(
-        "label"
-    ).parquet(vec_path)
-    _core._mark_appended(vec_path)
-
-    codes_path = _core.prepared_path(sf_dir, "embeddings_pq_codes.parquet")
-    codebook = _pq_saturated_codebook(spark, sf_dir)
-    (
-        _core.layout_rows(_pq_code_rows(new_vecs, codebook), _PQ_CODES)
-        .write.mode("append")
-        .partitionBy("label")
-        .parquet(codes_path)
-    )
-    _core._mark_appended(codes_path)
-
 def _pq_code_rows(vecs: DataFrame, codebook: list) -> DataFrame:
     """(vec_id, label, codes) rows of ``vecs`` encoded against
     ``codebook`` — the one PQ encode, shared by the build, the batch
@@ -381,9 +334,9 @@ def _collect_codebook(cb_df: DataFrame) -> list[list[float]]:
 def _pq_saturated_codebook(
     spark: SparkSession, sf_dir: str, cb_df: DataFrame | None = None
 ) -> list:
-    """The stored PQ codebook, refusing the unsaturated case (same
-    contract as append_embeddings: an unsaturated deterministic sample
-    would change under append, making append != rebuild). ``cb_df``
+    """The stored PQ codebook, refusing the unsaturated case (an
+    unsaturated deterministic sample would change under append, making
+    append != rebuild). ``cb_df``
     lets a caller that already ensured the layout (sim_pq_adc_live)
     pass its codebook table in — one ensure per query, one saturation
     gate for every encode site (review r11 pass-3 #6)."""
@@ -409,15 +362,27 @@ def append_embeddings_batch(
     batch_id: int,
     codebook: list | None = None,
 ) -> None:
-    """IDEMPOTENT (replay-safe) variant of :func:`append_embeddings`
-    for streaming micro-batches: both vector-index appends go through
-    :func:`_append_batch_files`, so a crash-retried batch converges to
-    exactly one copy under its ``batch_id`` — the vector-side twin of
-    ``append_events``. Same existing-centroid / saturated-codebook
-    posture as the batch path. ``codebook`` lets a long-lived caller
-    (the streaming ingest) pass the once-validated codebook instead of
-    re-collecting it per micro-batch — the saturation contract makes
-    it immutable for the stream's lifetime."""
+    """INSERT-time maintenance of the vector indexes, and the one vector
+    append path. Both appends go through :func:`_append_batch_files`,
+    so a crash-retried batch converges to exactly one copy under its
+    ``batch_id`` — the vector-side twin of ``append_events``.
+
+    - IVF: new vectors land under their cluster's partition directory
+      (assignment to the EXISTING centroids is the standard IVF insert
+      path; centroids are refreshed by a periodic offline re-train, not
+      per insert — here the ``label`` column already carries the
+      assignment).
+    - PQ: new vectors are encoded against the EXISTING codebook — how
+      a deployed PQ index ingests. The deterministic codebook sample
+      (first PQ_KS of ``vec_id % PQ_CB_MOD == 0``) is stable under
+      append only when the base corpus already SATURATES it, so an
+      unsaturated codebook is refused rather than let append and
+      rebuild silently diverge.
+
+    ``codebook`` lets a long-lived caller (the streaming ingest) pass
+    the once-validated codebook instead of re-collecting it per
+    micro-batch — the saturation contract makes it immutable for the
+    stream's lifetime."""
     embeddings_ivf(spark, sf_dir)
     _core._append_batch_files(
         new_vecs,

@@ -67,28 +67,6 @@ def get_spark(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             str(DEFAULT_MAX_FILES_PER_TRIGGER),
         )
-        # r16 config posture (guide §9/§3.1), env-parameterised so the
-        # driver's bench stays comparable and a cluster deployment can
-        # flip them without code edits; defaults = the measured-kept
-        # values (interleaved A/B, OPTIMIZATION_r16.md "config sweep").
-        # preferSortMergeJoin=false lets the planner pick shuffled-hash
-        # when its size conditions hold (no risk to result, spills are
-        # the guard); the shuffle codec stays lz4 locally (zstd
-        # measured neutral-to-slower at this exchange geometry — its
-        # ratio advantage needs network-bound shuffles, so a cluster
-        # run sets SPARK_GRAFT_IO_CODEC=zstd).
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_ADVISORY_PART", "64m"),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -148,8 +148,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     row-group splits, so the condition is false and the plan is
     untouched — no extra shuffle ever reaches a 100 TB run.
     """
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT"):  # A/B kill switch
-        return df
     sc = df.sparkSession.sparkContext
     slots = sc.defaultParallelism
     # Split probe WITHOUT df.rdd (VERDICT r15 #8): converting to an RDD
