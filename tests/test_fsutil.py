@@ -1,15 +1,19 @@
 """walk_strict contract: exactly one quiet case (absent root); every
 other scandir failure — including a SUBDIRECTORY vanishing mid-walk —
-propagates (ADVICE r12 #3: the silent-subset class of review r8 #3)."""
+propagates (ADVICE r12 #3: the silent-subset class of review r8 #3).
+write_json_atomic is the one tmp + rename JSON writer."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import json
 import os
 import shutil
 
 import pytest
 
-from venus_spark.fsutil import walk_strict
+from venus_spark.fsutil import walk_strict, write_json_atomic
 
 
 def test_absent_root_is_quiet_empty(tmp_path):
@@ -90,3 +94,54 @@ def test_spark_staging_dirs_pruned_not_raced(tmp_path):
     shutil.rmtree(root / "_temporary")
     shutil.rmtree(root / ".spark-staging-abc123")
     list(walker)  # completes without raising
+
+
+def test_write_json_atomic_bytes_and_torn_rename(tmp_path, monkeypatch):
+    """Same bytes as ``json.dump`` with the caller's keywords; a crash
+    between the tmp write and the rename leaves the old file intact."""
+    p = str(tmp_path / "m.json")
+    obj = {"b": [3, 1], "a": True}
+    write_json_atomic(p, obj, sort_keys=True, indent=1)
+    assert open(p).read() == json.dumps(obj, sort_keys=True, indent=1)
+    assert not os.path.exists(p + ".tmp")
+
+    def killed(src, dst):
+        raise RuntimeError("killed between tmp write and rename")
+
+    monkeypatch.setattr(os, "replace", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        write_json_atomic(p, {"new": 1})
+    assert json.load(open(p)) == obj
+    assert json.load(open(p + ".tmp")) == {"new": 1}
+
+
+def test_every_json_rename_uses_the_shared_writer():
+    """AST-level pin: no ``os.replace(`` call in ``venus_spark`` outside
+    ``fsutil.py`` and ``prepared/core.py:_restamp_atomic`` (its pid/uuid
+    tmp name and stray sweep under the heal flock are a different
+    contract)."""
+    root = os.path.join(os.path.dirname(__file__), "..", "venus_spark")
+    core = os.path.join("prepared", "core.py")
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        if rel == "fsutil.py":
+            continue
+        tree = ast.parse(open(path).read())
+        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "replace"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "os"
+            ):
+                continue
+            owners = {
+                f.name for f in funcs if f.lineno <= node.lineno <= f.end_lineno
+            }
+            if rel == core and "_restamp_atomic" in owners:
+                continue
+            offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, offenders

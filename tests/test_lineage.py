@@ -40,44 +40,6 @@ def test_ckpt_reliable_when_dir_configured(spark, tmp_path):
     assert sc.getCheckpointDir() is None
 
 
-def test_saturated_posture_flag_changes_plan_not_results(spark, monkeypatch):
-    """SPARK_GRAFT_SATURATED=1 (the saturated-cluster posture) must cut
-    the self-join shared subtrees without changing a single answer."""
-    from pyspark.sql import functions as F
-
-    from venus_spark.operators.dedup import (
-        jaccard_pairs_in_buckets,
-        lsh_near_dup_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a", "the quick brown fox jumps over the lazy dog"),
-            (2, "a", "the quick brown fox jumps over the lazy cat"),
-            (3, "a", "the quick brown fox jumps over the lazy dog"),
-            (4, "b", "completely different text with no overlap at all"),
-        ],
-        "doc_id long, lang string, text string",
-    )
-
-    monkeypatch.delenv("SPARK_GRAFT_SATURATED", raising=False)
-    base_pairs = sorted(map(tuple, lsh_near_dup_pairs(docs).collect()))
-    base_jacc = sorted(
-        map(tuple, jaccard_pairs_in_buckets(docs, ["lang"]).collect())
-    )
-
-    monkeypatch.setenv("SPARK_GRAFT_SATURATED", "1")
-    sat_pairs = sorted(map(tuple, lsh_near_dup_pairs(docs).collect()))
-    sat_jacc = sorted(
-        map(tuple, jaccard_pairs_in_buckets(docs, ["lang"]).collect())
-    )
-    assert sat_pairs == base_pairs
-    assert sat_jacc == base_jacc
-    # and with the flag on, the shared subtree really is cut
-    plan = lsh_near_dup_pairs(docs)._jdf.queryExecution().logical().toString()
-    assert "LogicalRDD" in plan
-
-
 def test_every_checkpoint_site_uses_the_shared_helper():
     """Grep-level pin: no raw localCheckpoint call may appear outside
     venus_spark/lineage.py (comments/docstrings excluded)."""

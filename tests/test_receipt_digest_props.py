@@ -144,15 +144,6 @@ def test_digest_sensitive_to_content_and_multiplicity(
     assert dx != dz
 
 
-# ---------------------------------------------------------------------------
-# Distributed digest leg (VERDICT r10 #2): the driver loop and the
-# Spark-distributed path share one per-row canonicalization
-# (_file_rows_digest), so they must fold to the IDENTICAL digest over
-# any partitioning of the row multiset. These tests need the session
-# fixture — the one exception to this module's no-Spark rule.
-# ---------------------------------------------------------------------------
-
-
 def _mixed_type_partition(root: str) -> list[str]:
     """A partition exercising the sink tables' type classes plus the
     canonicalization-sensitive ones (timestamps, NULLs, unicode), split
@@ -179,103 +170,20 @@ def _mixed_type_partition(root: str) -> list[str]:
             }
         )
         name = f"part-{k}.parquet"
-        # tiny row groups: the distributed leg schedules one task per
-        # (file, row group), so this exercises multi-unit folding
         pq.write_table(tbl, os.path.join(part, name), row_group_size=4)
         names.append(name)
     return sorted(names)
 
 
-def test_distributed_digest_matches_driver_loop(spark, tmp_path):
-    """Cross-check (VERDICT r10 #2 'done' criterion): driver-side and
-    distributed digests agree on the same partition — per (file, row
-    group) tasks, mixed types, multiple row groups per file."""
-    from venus_spark.streaming import _partition_digest_distributed
-
+def test_unreadable_partition_digest_is_no_claim(tmp_path):
+    """The no-claim envelope: a partition holding a torn file digests
+    to None (the caller treats the batch as stale), never raises into
+    the receipt write, the query guard or the audit."""
     root = str(tmp_path)
     files = _mixed_type_partition(root)
-    driver = _partition_content_digest(root, "t", 0, files)
-    assert driver is not None and driver["rows"] == 28
-    part = os.path.join(root, "t", "_batch_id=0")
-    dist = _partition_digest_distributed(spark, part, files)
-    assert dist == driver
-
-
-def test_digest_dispatch_threshold_and_fallback(spark, tmp_path, monkeypatch):
-    """The dispatcher uses the distributed leg exactly when a session
-    is passed AND the footer row count clears the threshold; a
-    distributed-leg failure falls back to the driver loop (same value,
-    strictly more availability), and the no-claim envelope still
-    degrades to None on a genuinely unreadable partition."""
-    from venus_spark import streaming as st
-
-    root = str(tmp_path)
-    files = _mixed_type_partition(root)
-    want = st._partition_content_digest(root, "t", 0, files)
-
-    calls = []
-    real = st._partition_digest_distributed
-
-    def spy(s, part, fs, units=None):
-        calls.append(part)
-        return real(s, part, fs, units=units)
-
-    monkeypatch.setattr(st, "_partition_digest_distributed", spy)
-
-    # below threshold: driver loop, no job
-    monkeypatch.setattr(st, "_DIGEST_DISTRIBUTED_MIN_ROWS", 1_000_000)
-    assert st._partition_content_digest(root, "t", 0, files, spark=spark) == want
-    assert calls == []
-    # above threshold with a session: distributed
-    monkeypatch.setattr(st, "_DIGEST_DISTRIBUTED_MIN_ROWS", 1)
-    assert st._partition_content_digest(root, "t", 0, files, spark=spark) == want
-    assert len(calls) == 1
-    # no session: driver loop even above threshold
-    assert st._partition_content_digest(root, "t", 0, files) == want
-    assert len(calls) == 1
-
-    # distributed-leg failure -> driver fallback, not no-claim
-    def boom(s, part, fs, units=None):
-        raise RuntimeError("executor lost")
-
-    monkeypatch.setattr(st, "_partition_digest_distributed", boom)
-    assert st._partition_content_digest(root, "t", 0, files, spark=spark) == want
-
-    # genuinely unreadable partition still degrades to None
+    good = _partition_content_digest(root, "t", 0, files)
+    assert good is not None and good["rows"] == 28
     bad = os.path.join(root, "t", "_batch_id=0", "torn.parquet")
     with open(bad, "wb") as f:
         f.write(b"not parquet")
-    assert (
-        st._partition_content_digest(
-            root, "t", 0, files + ["torn.parquet"], spark=spark
-        )
-        is None
-    )
-
-
-@settings(max_examples=10, deadline=None)
-@given(rows=st.lists(_ROW, min_size=1, max_size=24), data=st.data())
-def test_distributed_digest_property_equivalence(
-    spark, tmp_path_factory, rows, data
-):
-    """Hypothesis leg for the distributed implementation: over
-    generated row multisets and arbitrary file splits, the distributed
-    fold equals the driver loop — which transitively gives it every
-    invariant the driver-loop properties above pin (order/split/name
-    invariance, mutation/multiplicity sensitivity). Kept to few
-    examples: each draws a real Spark job."""
-    from venus_spark.streaming import _partition_digest_distributed
-
-    root = str(tmp_path_factory.mktemp("digd"))
-    splits = []
-    left = len(rows)
-    while left:
-        n = data.draw(st.integers(min_value=1, max_value=left))
-        splits.append(n)
-        left -= n
-    files = _write_partition(root, rows, splits)
-    driver = _partition_content_digest(root, "t", 0, files)
-    dist = _partition_digest_distributed(
-        spark, os.path.join(root, "t", "_batch_id=0"), files
-    )
-    assert dist == driver
+    assert _partition_content_digest(root, "t", 0, files + ["torn.parquet"]) is None

@@ -1417,7 +1417,7 @@ def test_replay_rewrite_same_rows_not_stale_phantom_excluded(
         os.path.join(sink, "events_kv_postings"),
         0,
     )
-    _record_batch_fps(sink, 0)
+    _record_batch_fps(sink, [0])
     assert sink_kv_exclusions(sink) == set()
     legacy = {
         bid: {
@@ -1646,15 +1646,11 @@ def test_maintain_auto_heals_orphan_only_sink(spark, tmp_path, monkeypatch, caps
     )
 
 
-def test_drift_digest_verdict_memoized_per_process(tmp_path, monkeypatch):
-    """ADVICE r10 #3: a drift batch (replay crashed before its receipt
-    refresh) used to re-pay the full partition row read on EVERY
-    guard/audit check until the nightly repair. The digest-compare
-    verdict now memoizes on the exact (partition, file set, claim)
-    key — landed parquet files are write-once, so the cache can never
-    go stale — and each drift generation costs one read per process.
-    A None digest (unreadable partition) must NOT cache: it can be a
-    transient commit instant."""
+def _drift_receipt_sink(tmp_path) -> str:
+    """A sink whose batch 0 carries a DRIFT receipt: the kv partition's
+    file names differ from the receipt's but its rows digest-match (a
+    replay that crashed after its rewrite, before its receipt
+    refresh)."""
     import json as _json
     import os
 
@@ -1688,56 +1684,51 @@ def test_drift_digest_verdict_memoized_per_process(tmp_path, monkeypatch):
             },
             f,
         )
+    return sink
 
-    st._DIGEST_VERDICT_MEMO.clear()
-    calls = []
-    real = st._partition_content_digest
 
-    def counting(*a, **kw):
-        calls.append(a)
-        return real(*a, **kw)
+def test_drift_receipt_served_on_every_check_and_none_digest_stale(
+    tmp_path, monkeypatch
+):
+    """ADVICE r10 #3 / review r10 #2: a drift batch classifies as drift
+    (served, flagged for a receipt refresh), never stale, on every
+    check until the repair refreshes the receipt. A None digest
+    (unreadable partition, a rewrite's commit instant) makes no claim:
+    the batch reads as stale."""
+    from venus_spark import streaming as st
 
-    monkeypatch.setattr(st, "_partition_content_digest", counting)
-
+    sink = _drift_receipt_sink(tmp_path)
     for _ in range(3):
         stale, drift = st._sink_receipt_divergence(sink)
         assert stale == set() and drift == {0}
-    assert len(calls) == 1  # paid once per process, not per check
 
-    # VERDICT r11 #1: the verdict also persists to the advisory
-    # sidecar, so a NEW process (fresh in-process memo) adopts it
-    # without re-paying the partition read — one read per DEPLOYMENT
-    # per drift generation, not per process
-    assert os.path.exists(os.path.join(sink, st._DRIFT_VERDICT_SIDECAR))
-    st._DIGEST_VERDICT_MEMO.clear()  # "new process"
-    calls.clear()
-    stale, drift = st._sink_receipt_divergence(sink)
-    assert stale == set() and drift == {0}
-    assert len(calls) == 0  # sidecar hit: no partition read at all
-
-    # the repair clears the sidecar (receipts refreshed -> dead weight)
-    # AND sweeps crash-leftover tmp stagings from interrupted writes
-    crashed_tmp = os.path.join(sink, st._DRIFT_VERDICT_SIDECAR + ".999.tmp")
-    with open(crashed_tmp, "w") as f:
-        f.write("{}")
-    st._clear_drift_sidecar(sink)
-    assert not os.path.exists(os.path.join(sink, st._DRIFT_VERDICT_SIDECAR))
-    assert not os.path.exists(crashed_tmp)
-
-    # unreadable partition -> None digest -> conservative AND uncached
-    st._DIGEST_VERDICT_MEMO.clear()
-    calls.clear()
     monkeypatch.setattr(
-        st, "_partition_content_digest", lambda *a, **kw: calls.append(a)
+        st, "_partition_content_digest", lambda *a, **kw: None
     )
     for _ in range(2):
         stale, drift = st._sink_receipt_divergence(sink)
         assert stale == {0} and drift == set()
-    assert len(calls) == 2  # re-probed every check until it reads clean
-    assert not os.path.exists(  # None is never persisted either
-        os.path.join(sink, st._DRIFT_VERDICT_SIDECAR)
-    )
-    st._DIGEST_VERDICT_MEMO.clear()
+
+
+def test_drift_checks_write_nothing_into_the_sink(spark, tmp_path):
+    """The query-side guard and the audit only READ the sink: on a
+    drift receipt, neither the guarded kv read nor the audit adds,
+    removes or rewrites a file under the sink directory."""
+    import os
+
+    from venus_spark.streaming import audit_events_sink, read_kv_postings_guarded
+
+    sink = _drift_receipt_sink(tmp_path)
+
+    def listing() -> list[tuple[str, int]]:
+        paths = [os.path.join(d, f) for d, _, fs in os.walk(sink) for f in fs]
+        return sorted((os.path.relpath(p, sink), os.stat(p).st_mtime_ns) for p in paths)
+
+    before = listing()
+    rows = read_kv_postings_guarded(spark, sink).collect()
+    assert [(r["kv"], r["event_id"]) for r in rows] == [("k=1", 1)]
+    assert audit_events_sink(sink)["receipt_drift"] == [0]
+    assert listing() == before
 
 
 def test_audit_receipt_drift_excludes_orphaned_batches(tmp_path):
@@ -1779,9 +1770,7 @@ def test_audit_receipt_drift_excludes_orphaned_batches(tmp_path):
             },
             f,
         )
-    st._DIGEST_VERDICT_MEMO.clear()
     audit = st.audit_events_sink(sink)
     assert audit["receipt_drift"] == []
     assert audit["stale"] == []
     assert audit["orphans"] == {"events_kv_postings": [0]}
-    st._DIGEST_VERDICT_MEMO.clear()

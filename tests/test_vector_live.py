@@ -155,7 +155,8 @@ def test_pending_vectors_respect_tombstones_and_pointer(
     pointer when a deployment streams to a custom sink."""
     from venus_spark.plans import all_plans
     from venus_spark.streaming import (
-        _record_emb_sink_pointer,
+        _EMB_SINK_POINTER,
+        _record_sink_pointer,
         _write_idempotent,
         pending_vector_batches,
     )
@@ -167,7 +168,7 @@ def test_pending_vectors_respect_tombstones_and_pointer(
 
     # a CUSTOM sink, recorded the way start_embeddings_ingest does
     custom = str(tmp_path / "custom_sink")
-    _record_emb_sink_pointer(sf, custom)
+    _record_sink_pointer(sf, _EMB_SINK_POINTER, custom)
     n = _needle(qvec, 9_000_005, labels[0], eps=1e-3)
     _write_idempotent(
         spark.createDataFrame([n], vecs_schema),

@@ -20,6 +20,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from venus_spark.fsutil import write_json_atomic
+
 EXPORT_MANIFEST = "_export_manifest.json"
 
 
@@ -142,10 +144,9 @@ def write_export_manifest(
                 "overwrite computed digest fields"
             )
         manifest.update(extra)
-    p = os.path.join(out_dir, EXPORT_MANIFEST)
-    with open(p + ".tmp", "w") as f:
-        json.dump(manifest, f, sort_keys=True, indent=1)
-    os.replace(p + ".tmp", p)
+    write_json_atomic(
+        os.path.join(out_dir, EXPORT_MANIFEST), manifest, sort_keys=True, indent=1
+    )
     return manifest
 
 

@@ -12,10 +12,14 @@ unrecoverable, review r8 #3's exact failure), or a corpus snapshot
 pinning a subset of the real file set. Review r11 pass-8 #2 closed the
 first instance; pass 9/10 hoisted the fix here so every walk-based
 probe shares ONE strict implementation.
+
+One atomic JSON writer for every small bookkeeping file (manifests,
+receipts, pointers, markers): ``write_json_atomic``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 # Spark writers stage commits under these names inside the table root
@@ -67,3 +71,16 @@ def walk_strict(path: str):
     for dirpath, dirnames, files in os.walk(path, onerror=onerror):
         dirnames[:] = [d for d in dirnames if not _is_transient(d)]
         yield dirpath, dirnames, files
+
+
+def write_json_atomic(path: str, obj, **json_kw) -> None:
+    """Write ``obj`` as JSON to ``path`` via ``path + ".tmp"`` and
+    ``os.replace``: a reader sees the previous file or the complete new
+    one, never a torn write. A crash between the two steps leaves only
+    the ``.tmp`` file. ``json_kw`` is passed to ``json.dump``. No fsync:
+    the rename is atomic against concurrent readers, not against power
+    loss."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, **json_kw)
+    os.replace(tmp, path)

@@ -264,11 +264,12 @@ def lsh_near_dup_pairs(
     The index rows pass one shuffle on the id, which both sides of the
     band self-join reuse, so each document's signature is computed once
     (row-local rows with no shuffle below them would be derived again
-    for each side). ``SPARK_GRAFT_SATURATED=1`` also cuts the lineage
-    there (:func:`venus_spark.lineage.ckpt_if_saturated`)."""
-    from venus_spark.lineage import ckpt_if_saturated
-
-    idx = ckpt_if_saturated(minhash_index(df, id_col, text_col).repartition(id_col))
+    for each side)."""
+    # No lineage cut on the shared index rows: the two self-join sides
+    # are independent stages the scheduler overlaps, so a checkpoint
+    # barrier serializes them and measured 6-27% slower locally (r15,
+    # interleaved A/B, REPEAT=3) despite halving total CPU.
+    idx = minhash_index(df, id_col, text_col).repartition(id_col)
     return lsh_near_dup_pairs_from_index(idx, id_col, "_sh", threshold)
 
 
@@ -341,18 +342,13 @@ def jaccard_pairs_in_buckets(
         t = df.select(
             id_col, *bucket_cols, F.array_distinct(tokens(text_col)).alias("toks")
         )
-    # Lineage cut on the postings stream tried and REJECTED for the
-    # default posture (r15): the two per-side evaluations are
-    # independent stages the scheduler overlaps, so the checkpoint
-    # barrier serialized them and measured 10-27% slower (interleaved
-    # A/B, REPEAT=3) despite running the explode once. Saturated
-    # clusters opt in via SPARK_GRAFT_SATURATED=1 (lineage module).
-    from venus_spark.lineage import ckpt_if_saturated
-
-    posts = ckpt_if_saturated(
-        t.withColumn("_n", F.size("toks")).select(
-            id_col, *bucket_cols, "_n", F.explode("toks").alias("_tok")
-        )
+    # Lineage cut on the postings stream tried and REJECTED (r15): the
+    # two per-side evaluations are independent stages the scheduler
+    # overlaps, so the checkpoint barrier serialized them and measured
+    # 10-27% slower (interleaved A/B, REPEAT=3) despite running the
+    # explode once.
+    posts = t.withColumn("_n", F.size("toks")).select(
+        id_col, *bucket_cols, "_n", F.explode("toks").alias("_tok")
     )
     a, b = posts.alias("a"), posts.alias("b")
     cond = (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & (
@@ -407,15 +403,10 @@ def containment_pairs_in_buckets(
     t = df.select(
         id_col, *bucket_cols, F.array_distinct(F.col(toks_col)).alias("toks")
     )
-    # Lineage cut on the postings stream tried and REJECTED for the
-    # default posture (r15): see jaccard_pairs_in_buckets — same
-    # measured reason, same SPARK_GRAFT_SATURATED=1 opt-in.
-    from venus_spark.lineage import ckpt_if_saturated
-
-    posts = ckpt_if_saturated(
-        t.withColumn("_n", F.size("toks")).select(
-            id_col, *bucket_cols, "_n", F.explode("toks").alias("_tok")
-        )
+    # Lineage cut on the postings stream tried and REJECTED (r15): see
+    # jaccard_pairs_in_buckets — same measured reason.
+    posts = t.withColumn("_n", F.size("toks")).select(
+        id_col, *bucket_cols, "_n", F.explode("toks").alias("_tok")
     )
     a, b = posts.alias("a"), posts.alias("b")
     cond = (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")) & (

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from venus_spark.fsutil import write_json_atomic
 from venus_spark.operators import dedup as _dedup
 from venus_spark.sources import load_table, read_parquet
 
@@ -390,10 +391,7 @@ def _mark_appended(path: str) -> None:
     mode-append, which left no batch record. Rewrites that preserve
     the row set (compaction, vacuum, retention) must carry the marker
     like they carry the manifests."""
-    p = os.path.join(path, _APPEND_MARKER)
-    with open(p + ".tmp", "w") as f:
-        json.dump(True, f)
-    os.replace(p + ".tmp", p)
+    write_json_atomic(os.path.join(path, _APPEND_MARKER), True)
 
 def _has_append_marker(path: str) -> bool:
     return os.path.exists(os.path.join(path, _APPEND_MARKER))
@@ -430,10 +428,7 @@ def _read_abatch_manifest(dest: str) -> set[int]:
         return set()
 
 def _write_abatch_manifest(dest: str, ids: set[int]) -> None:
-    p = os.path.join(dest, _ABATCH_MANIFEST)
-    with open(p + ".tmp", "w") as f:
-        json.dump(sorted(ids), f)
-    os.replace(p + ".tmp", p)
+    write_json_atomic(os.path.join(dest, _ABATCH_MANIFEST), sorted(ids))
 
 @contextmanager
 def _swap_flock(sf_dir: str, lockfile: str, module_lock: threading.Lock):
@@ -914,10 +909,7 @@ def _read_merged(base: str) -> set[int]:
         return set()
 
 def _write_merged(base: str, merged: set[int]) -> None:
-    tmp = _merged_manifest_path(base) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(sorted(merged), f)
-    os.rename(tmp, _merged_manifest_path(base))  # atomic commit
+    write_json_atomic(_merged_manifest_path(base), sorted(merged))
 
 # Imported last: docs applies read_once to its appends at import time.
 from venus_spark.prepared import docs as _docs  # noqa: E402

@@ -16,6 +16,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from venus_spark.fsutil import write_json_atomic
 from venus_spark.functions import dround
 from venus_spark.sources import load_table
 from venus_spark.prepared import core as _core
@@ -610,10 +611,10 @@ def _read_train_meta(cent_path: str) -> dict | None:
         return None
 
 def _write_train_meta(cent_path: str, tb_at_train: int, trained_n: int) -> None:
-    p = os.path.join(cent_path, _VEC_TRAIN_META)
-    with open(p + ".tmp", "w") as f:
-        json.dump({"tb_at_train": tb_at_train, "trained_n": trained_n}, f)
-    os.replace(p + ".tmp", p)
+    write_json_atomic(
+        os.path.join(cent_path, _VEC_TRAIN_META),
+        {"tb_at_train": tb_at_train, "trained_n": trained_n},
+    )
 
 _VEC_RETRAIN_NAMES = (
     "embeddings_pq_codebook.parquet",
@@ -837,9 +838,9 @@ def retrain_vector_artifacts_if_drifted(
     if carry_marker:
         _core._mark_appended(codes_tmp)
 
-    marker = _core.prepared_path(sf_dir, _VEC_RETRAIN_MARKER)
-    with open(marker + ".tmp", "w") as f:
-        json.dump(["centroids", "codebook", "codes"], f)
-    os.replace(marker + ".tmp", marker)  # COMMIT: recovery completes it
+    write_json_atomic(  # COMMIT: recovery completes it
+        _core.prepared_path(sf_dir, _VEC_RETRAIN_MARKER),
+        ["centroids", "codebook", "codes"],
+    )
     _recover_vector_retrain(sf_dir)  # the swap IS the recovery procedure
     return True

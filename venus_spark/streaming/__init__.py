@@ -49,6 +49,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.listener import StreamingQueryListener
 from pyspark.sql import types as T
 
+from venus_spark.fsutil import write_json_atomic
 from venus_spark.ingest import (
     good_records,
     log_record_schema,
@@ -141,45 +142,48 @@ def documents_stream_sink_dir(sf_dir: str) -> str:
 
 
 _DOC_SINK_POINTER = "_documents_stream_sink.json"
+_EMB_SINK_POINTER = "_embeddings_stream_sink.json"
 
 
-def _record_doc_sink_pointer(index_sf_dir: str, sink_dir: str) -> None:
-    """Written by ``start_documents_ingest`` at stream start: the sink
-    location the live corpus union must read. Last-start-wins under
-    the single-writer contract (one documents stream per index dir);
+def _record_sink_pointer(index_sf_dir: str, pointer: str, sink_dir: str) -> None:
+    """Record ``sink_dir`` in the ``pointer`` file next to the index
+    artifacts: the sink location a live union must read. Written by
+    ``start_documents_ingest`` (:data:`_DOC_SINK_POINTER`) and
+    ``start_embeddings_ingest`` (:data:`_EMB_SINK_POINTER`) at stream
+    start and re-healed per batch. Last-start-wins under the
+    single-writer contract (one stream of each kind per index dir);
     tmp + atomic rename."""
     from venus_spark.prepared import prepared_path
 
     os.makedirs(prepared_path(index_sf_dir, ""), exist_ok=True)
-    p = prepared_path(index_sf_dir, _DOC_SINK_POINTER)
-    with open(p + ".tmp", "w") as f:
-        json.dump({"sink_dir": os.path.abspath(sink_dir)}, f)
-    os.replace(p + ".tmp", p)
+    write_json_atomic(
+        prepared_path(index_sf_dir, pointer),
+        {"sink_dir": os.path.abspath(sink_dir)},
+    )
 
 
-def _doc_sink_dir(sf_dir: str) -> str:
-    """The streamed-documents sink for ``sf_dir``: the recorded
-    pointer when one exists (a deployment's actual sink), else the
-    conventional location. A torn/malformed pointer falls back to the
-    convention — absence of a claim, never a crash.
+def _resolve_sink_dir(sf_dir: str, pointer: str, conventional) -> str:
+    """The streamed sink for ``sf_dir``: the path recorded in the
+    ``pointer`` file when one exists (a deployment's actual sink), else
+    ``conventional(sf_dir)``. A torn/malformed pointer falls back to
+    the convention — absence of a claim, never a crash.
 
     UPGRADE CAVEAT (review r10 pass-4 #3): the pointer is written by
-    ``start_documents_ingest`` (at start and re-healed per batch), so
-    a custom-sink stream still running PRE-pointer code has no record
-    — the live fuzzy verify sees only the base corpus until that
-    stream restarts once under current code. A process restart is how
-    new code reaches the stream anyway; restart it once after
-    upgrading."""
+    the ingest (at start and re-healed per batch), so a custom-sink
+    stream still running PRE-pointer code has no record — the live
+    read sees only the base table until that stream restarts once
+    under current code. A process restart is how new code reaches the
+    stream anyway; restart it once after upgrading."""
     from venus_spark.prepared import prepared_path
 
     try:
-        with open(prepared_path(sf_dir, _DOC_SINK_POINTER)) as f:
+        with open(prepared_path(sf_dir, pointer)) as f:
             recorded = json.load(f).get("sink_dir")
         if isinstance(recorded, str) and recorded:
             return recorded
     except (OSError, ValueError, AttributeError):
         pass
-    return documents_stream_sink_dir(sf_dir)
+    return conventional(sf_dir)
 
 
 def embeddings_stream_sink_dir(sf_dir: str) -> str:
@@ -206,40 +210,6 @@ def embeddings_stream_sink_dir(sf_dir: str) -> str:
     return prepared_path(sf_dir, "embeddings_stream")
 
 
-_EMB_SINK_POINTER = "_embeddings_stream_sink.json"
-
-
-def _record_emb_sink_pointer(index_sf_dir: str, sink_dir: str) -> None:
-    """Written by ``start_embeddings_ingest`` at stream start and
-    re-healed per batch: the sink location the live vector union must
-    read. Last-start-wins under the single-writer contract (one
-    embeddings stream per index dir); tmp + atomic rename."""
-    from venus_spark.prepared import prepared_path
-
-    os.makedirs(prepared_path(index_sf_dir, ""), exist_ok=True)
-    p = prepared_path(index_sf_dir, _EMB_SINK_POINTER)
-    with open(p + ".tmp", "w") as f:
-        json.dump({"sink_dir": os.path.abspath(sink_dir)}, f)
-    os.replace(p + ".tmp", p)
-
-
-def _emb_sink_dir(sf_dir: str) -> str:
-    """The streamed-embeddings sink for ``sf_dir``: the recorded
-    pointer when one exists (a deployment's actual sink), else the
-    conventional location. A torn/malformed pointer falls back to the
-    convention — absence of a claim, never a crash."""
-    from venus_spark.prepared import prepared_path
-
-    try:
-        with open(prepared_path(sf_dir, _EMB_SINK_POINTER)) as f:
-            recorded = json.load(f).get("sink_dir")
-        if isinstance(recorded, str) and recorded:
-            return recorded
-    except (OSError, ValueError, AttributeError):
-        pass
-    return embeddings_stream_sink_dir(sf_dir)
-
-
 def pending_vector_batches(sf_dir: str, layout_file: str) -> tuple[str, list[int]]:
     """``(sink_dir, pending batch ids)`` for one prepared vector
     layout: sink batches whose rows the layout's ``abatch`` manifest
@@ -255,7 +225,7 @@ def pending_vector_batches(sf_dir: str, layout_file: str) -> tuple[str, list[int
     path."""
     from venus_spark.prepared import _read_abatch_manifest, prepared_path
 
-    sink = _emb_sink_dir(sf_dir)
+    sink = _resolve_sink_dir(sf_dir, _EMB_SINK_POINTER, embeddings_stream_sink_dir)
     sink_ids = _sink_batch_ids(os.path.join(sink, "embeddings"))
     if not sink_ids:
         return sink, []
@@ -282,7 +252,7 @@ def documents_stream_has_data(sf_dir: str) -> bool:
     file — i.e. :func:`live_documents` will be a UNION (plans use this
     to pay union-only costs, e.g. sharing a subplan both branches
     consume, exactly when a second branch exists)."""
-    return _sink_table_has_data(_doc_sink_dir(sf_dir), "documents")
+    return documents_stream_state(sf_dir)[1]
 
 
 def documents_stream_state(sf_dir: str) -> tuple[str, bool]:
@@ -290,11 +260,11 @@ def documents_stream_state(sf_dir: str) -> tuple[str, bool]:
     documents sink: callers that both decide union-conditional costs
     AND read the sink (the live fuzzy plan) must resolve the sink
     pointer ONCE and pass both values down — two independent
-    ``_doc_sink_dir`` resolutions can straddle a pointer rewrite
+    pointer resolutions can straddle a pointer rewrite
     (stream restarted onto a new custom sink) and probe one directory
     while reading another, turning a degrade into an AnalysisException
     (ADVICE r10 #1)."""
-    sink = _doc_sink_dir(sf_dir)
+    sink = _resolve_sink_dir(sf_dir, _DOC_SINK_POINTER, documents_stream_sink_dir)
     return sink, _sink_table_has_data(sink, "documents")
 
 
@@ -326,7 +296,9 @@ def live_documents(
     from venus_spark.sources import load_table
 
     base = load_table(spark, sf_dir, "documents")
-    sink = _doc_sink_dir(sf_dir) if sink_dir is None else sink_dir
+    sink = sink_dir if sink_dir is not None else _resolve_sink_dir(
+        sf_dir, _DOC_SINK_POINTER, documents_stream_sink_dir
+    )
     if has_data is None:
         has_data = _sink_table_has_data(sink, "documents")
     if not has_data:
@@ -511,9 +483,7 @@ def compact_closed_partition(
             return set()
 
     def commit_manifest(names: set[str]) -> None:
-        with open(manifest_path + ".tmp", "w") as f:
-            json.dump(sorted(names), f)
-        os.rename(manifest_path + ".tmp", manifest_path)  # atomic commit
+        write_json_atomic(manifest_path, sorted(names))  # atomic commit
 
     def list_batch_dirs() -> list[str]:
         return [
@@ -631,11 +601,7 @@ def _record_logs_schema_rev(sink_dir: str, promote: tuple[str, ...]) -> None:
     if cols == prev_cols and prev_rev > 0:
         return
     os.makedirs(sink_dir, exist_ok=True)
-    with open(p + ".tmp", "w") as f:
-        json.dump(
-            {"rev": prev_rev + 1, "promoted_extra": sorted(cols)}, f
-        )
-    os.replace(p + ".tmp", p)
+    write_json_atomic(p, {"rev": prev_rev + 1, "promoted_extra": sorted(cols)})
 
 
 def _logs_schema_rev_covers(sink_dir: str, promote: tuple[str, ...]) -> bool:
@@ -700,9 +666,7 @@ def prune_logs_schema_rev(spark: SparkSession, sink_dir: str) -> list[str]:
     if not dropped:
         return []
     kept = [c for c in recorded if c in have]
-    with open(p + ".tmp", "w") as f:
-        json.dump({"rev": prev_rev + 1, "promoted_extra": sorted(kept)}, f)
-    os.replace(p + ".tmp", p)
+    write_json_atomic(p, {"rev": prev_rev + 1, "promoted_extra": sorted(kept)})
     return dropped
 
 
@@ -924,8 +888,10 @@ def start_documents_ingest(
             # miss the present-but-torn states, review r10 pass-5 #1);
             # O(1 small read) per batch, keeps the live corpus union
             # aligned with where this stream actually lands text
-            if _doc_sink_dir(index_sf_dir) != os.path.abspath(sink_dir):
-                _record_doc_sink_pointer(index_sf_dir, sink_dir)
+            if _resolve_sink_dir(
+                index_sf_dir, _DOC_SINK_POINTER, documents_stream_sink_dir
+            ) != os.path.abspath(sink_dir):
+                _record_sink_pointer(index_sf_dir, _DOC_SINK_POINTER, sink_dir)
             batch_idx = None
             if screen_near_dups:
                 batch_idx = prepared._minhash_rows(batch).persist()
@@ -1011,7 +977,7 @@ def start_documents_ingest(
     # record where this stream lands document TEXT so the live corpus
     # union (live_documents) follows the deployment's actual sink, not
     # just the conventional default (review r10 pass-2 #2)
-    _record_doc_sink_pointer(index_sf_dir, sink_dir)
+    _record_sink_pointer(index_sf_dir, _DOC_SINK_POINTER, sink_dir)
     return _start_query(
         source, "documents_ingest", write_batch, checkpoint_dir, trigger_seconds
     )
@@ -1051,8 +1017,10 @@ def start_embeddings_ingest(
         # re-heal the sink pointer if it vanished or no longer records
         # this stream's sink (same posture as the documents ingest) —
         # the live vector plans' pending-window union follows it
-        if _emb_sink_dir(index_sf_dir) != os.path.abspath(sink_dir):
-            _record_emb_sink_pointer(index_sf_dir, sink_dir)
+        if _resolve_sink_dir(
+            index_sf_dir, _EMB_SINK_POINTER, embeddings_stream_sink_dir
+        ) != os.path.abspath(sink_dir):
+            _record_sink_pointer(index_sf_dir, _EMB_SINK_POINTER, sink_dir)
         batch = batch.persist()
         try:
             _write_idempotent(batch, vec_dir, batch_id)
@@ -1065,7 +1033,7 @@ def start_embeddings_ingest(
 
     # record where this stream lands vectors so the live plans'
     # pending-window union follows the deployment's actual sink
-    _record_emb_sink_pointer(index_sf_dir, sink_dir)
+    _record_sink_pointer(index_sf_dir, _EMB_SINK_POINTER, sink_dir)
     return _start_query(
         source, "embeddings_ingest", write_batch, checkpoint_dir, trigger_seconds
     )
@@ -1288,9 +1256,7 @@ def start_events_rollup_ingest(
             # leaves the previous receipt (all four mismatch → the
             # batch reads as stale until repaired) or none (first
             # generation: the orphan rule covers the kv-first window).
-            # The batch's session enables the distributed digest leg
-            # for backfill-sized batches (VERDICT r10 #2).
-            _record_batch_fps(sink_dir, batch_id, spark=batch.sparkSession)
+            _record_batch_fps(sink_dir, [batch_id])
         finally:
             batch.unpersist()
 
@@ -1405,25 +1371,19 @@ def _partition_footer_rows(
         return None
 
 
-def _file_rows_digest(path: str, row_group: int | None = None) -> tuple[int, int]:
+def _file_rows_digest(path: str) -> tuple[int, int]:
     """(row count, modular-SUM 2^64 of per-row blake2b) over one
-    parquet file (or one of its row groups) — THE canonicalization,
-    shared verbatim by the driver loop and the distributed leg's
-    executor tasks so the two implementations cannot drift: rows
-    canonicalize by sorted column name through pyarrow's to_pylist
-    (both paths read the file with pyarrow directly — never through
-    Spark's parquet reader, whose Arrow conversion can re-type
-    timestamps), hash independently, fold order-independently.
-    Raises on any unreadable state; callers own the no-claim
-    envelope."""
+    parquet file — THE canonicalization: rows canonicalize by sorted
+    column name through pyarrow's to_pylist (the file is read with
+    pyarrow directly — never through Spark's parquet reader, whose
+    Arrow conversion can re-type timestamps), hash independently, fold
+    order-independently. Raises on any unreadable state; callers own
+    the no-claim envelope."""
     import hashlib
 
     import pyarrow.parquet as pq
 
-    if row_group is None:
-        tbl = pq.read_table(path)
-    else:
-        tbl = pq.ParquetFile(path).read_row_group(row_group)
+    tbl = pq.read_table(path)
     cols = sorted(tbl.column_names)
     acc = 0
     n = 0
@@ -1439,76 +1399,8 @@ def _file_rows_digest(path: str, row_group: int | None = None) -> tuple[int, int
     return n, acc
 
 
-# Write-side digest dispatch (VERDICT r10 #2): below this many rows
-# (parquet-footer count, free) the driver loop wins — measured ~270k
-# rows/s against page-cache-warm micro-batch files, so a typical
-# trigger's digest is milliseconds while a distributed job pays ~0.5 s
-# of scheduling floor. Above it (a backfill trigger, a 500k-row kv
-# partition) the digest runs as a Spark job over (file, row group)
-# units with the SAME per-row canonicalization, and the driver folds
-# the per-task (rows, sum) partials — the modular SUM is associative
-# and commutative, so any partitioning of the row multiset folds to
-# the identical digest. Crossover measured in PERF.md: driver 0.9 s vs
-# distributed 1.25 s at 200k rows, 2.5 s vs 1.3 s at 500k, 5.6 s vs
-# 1.5 s at 1M (32 local cores; the distributed floor is ~1.3 s of job
-# scheduling, flat in n until tasks saturate the cores).
-_DIGEST_DISTRIBUTED_MIN_ROWS = 300_000
-
-
-def _partition_digest_distributed(
-    spark: SparkSession,
-    part: str,
-    files: list[str],
-    units: list[tuple[str, int]] | None = None,
-) -> dict:
-    """Distributed content digest: one task per (file, row group),
-    each running :func:`_file_rows_digest`, partials folded mod 2^64
-    on the driver. ``units`` lets the dispatcher pass the (path, row
-    group) list its own footer pass already enumerated (one footer
-    open per file total, review r11 pass-1 #6). Raises on any failure;
-    the dispatcher owns the fallback."""
-    if units is None:
-        import pyarrow.parquet as pq
-
-        units = []
-        for f in files:
-            p = os.path.join(part, f)
-            for rg in range(pq.ParquetFile(p).metadata.num_row_groups):
-                units.append((p, rg))
-    if not units:
-        return {"rows": 0, "sum": 0}
-
-    def digest_units(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for path, rg in zip(pdf["path"], pdf["rg"]):
-                n, acc = _file_rows_digest(path, int(rg))
-                # the 64-bit partial exceeds LongType: ship as string
-                yield pd.DataFrame({"n": [n], "acc": [str(acc)]})
-
-    partials = (
-        spark.createDataFrame(units, "path string, rg int")
-        .repartition(len(units))
-        .mapInPandas(digest_units, "n long, acc string")
-        .collect()
-    )
-    if len(partials) != len(units):
-        raise ValueError(
-            f"digest partials missing: {len(partials)}/{len(units)}"
-        )
-    return {
-        "rows": sum(r["n"] for r in partials),
-        "sum": sum(int(r["acc"]) for r in partials) % (1 << 64),
-    }
-
-
 def _partition_content_digest(
-    sink_dir: str,
-    table: str,
-    bid: int,
-    files: list[str],
-    spark: SparkSession | None = None,
+    sink_dir: str, table: str, bid: int, files: list[str]
 ) -> dict | None:
     """Order-independent ROW-CONTENT digest of a batch partition
     (VERDICT r9 #1): ``{"rows": n, "sum": folded per-row hash}`` over
@@ -1539,17 +1431,9 @@ def _partition_content_digest(
     page-cache-warm files, and the check side (:func:`_stale_sink_ids`)
     only ever pays it for partitions whose file names already mismatch
     (a replay or phantom in progress — never the healthy path).
-    Measured ~270k rows/s on this host (ms for typical micro-batches).
-    For LARGE batches (a backfill trigger) with a ``spark`` session
-    passed in (the write side has one), the digest runs DISTRIBUTED
-    (VERDICT r10 #2): one task per (file, row group) through the SAME
-    per-row canonicalization (:func:`_file_rows_digest`), partials
-    folded mod 2^64 on the driver — exact because the modular SUM is
-    associative/commutative over any partitioning of the row multiset.
-    The dispatch keys off the parquet FOOTER row count (free), at
-    ``_DIGEST_DISTRIBUTED_MIN_ROWS``; a distributed-leg failure falls
-    back to the driver loop (strictly more availability, same value).
-    Rows canonicalize by sorted column name, so column order across
+    Measured ~270k rows/s (ms for typical micro-batches; a 500k-row
+    backfill trigger pays ~2.5 s on the driver, PERF.md). Rows
+    canonicalize by sorted column name, so column order across
     rewrites is immaterial. Returns None when a file vanished mid-read
     (a rewrite's commit instant) or is otherwise undigestable: the
     caller treats the batch conservatively."""
@@ -1559,29 +1443,6 @@ def _partition_content_digest(
         # the digest is an enhancement over the names-only receipt, so
         # even a missing pyarrow must degrade, never crash the ingest
         # receipt write or the key-plan query guard
-        if spark is not None:
-            # ONE footer pass feeds both the dispatch decision and the
-            # (file, row group) unit list (review r11 pass-1 #6)
-            import pyarrow.parquet as pq
-
-            footer_rows = 0
-            units: list[tuple[str, int]] = []
-            try:
-                for f in files:
-                    p = os.path.join(part, f)
-                    meta = pq.ParquetFile(p).metadata
-                    footer_rows += meta.num_rows
-                    units.extend((p, rg) for rg in range(meta.num_row_groups))
-            except Exception:
-                footer_rows = -1  # unreadable footer: let the driver
-                # loop below own the no-claim decision
-            if footer_rows >= _DIGEST_DISTRIBUTED_MIN_ROWS:
-                try:
-                    return _partition_digest_distributed(
-                        spark, part, files, units=units
-                    )
-                except Exception:
-                    pass  # fall back to the driver loop below
         acc = 0
         n = 0
         for fname in files:
@@ -1652,33 +1513,10 @@ def _record_fingerprint(rec) -> list[str]:
 
 
 def _write_batch_fp_record(sink_dir: str, record: dict[int, dict]) -> None:
-    p = os.path.join(sink_dir, _SINK_FP_RECORD)
-    with open(p + ".tmp", "w") as f:
-        json.dump({str(k): v for k, v in sorted(record.items())}, f)
-    os.replace(p + ".tmp", p)
-
-
-def _record_batch_fps(
-    sink_dir: str, bid: int, spark: SparkSession | None = None
-) -> None:
-    """Record the CURRENT partition fingerprints of every sink table
-    for ``bid`` — called by the stream's ``write_batch`` after its last
-    write (the batch's commit receipt: everything the receipt names was
-    derived from the facts generation it names) and by the repair after
-    re-deriving a batch. A bid whose partitions have ALL vanished
-    (a removed orphan) has its entry DROPPED, never re-added as an
-    all-empty receipt (review r9 #2). Deliberately touches only this
-    bid's partitions — O(4 listdirs) on the per-batch hot path; the
-    full vanished-entry prune is maintenance-time work
-    (:func:`_prune_batch_fp_record`, run by the repair). The record
-    therefore stays O(sink batch partitions) — the same cardinality the
-    ``_batch_id`` directory layout itself carries, bounded in a
-    deployment by the sink compaction cadence. Single-writer discipline
-    (one streaming query per sink; repair runs with the stream stopped)
-    makes the read-modify-write safe; the write is tmp + atomic
-    rename. ``spark`` (the write side passes its batch session)
-    enables the distributed digest leg for backfill-sized batches."""
-    _record_batch_fps_many(sink_dir, [bid], spark=spark)
+    write_json_atomic(
+        os.path.join(sink_dir, _SINK_FP_RECORD),
+        {str(k): v for k, v in sorted(record.items())},
+    )
 
 
 def _prune_batch_fp_record(sink_dir: str) -> None:
@@ -1698,13 +1536,24 @@ def _prune_batch_fp_record(sink_dir: str) -> None:
         _write_batch_fp_record(sink_dir, kept)
 
 
-def _record_batch_fps_many(
-    sink_dir: str, bids, spark: SparkSession | None = None
-) -> None:
-    """Batched receipt refresh: one read-modify-write for many bids
-    (review r9 pass-2 #3 — per-bid calls re-read and rewrite the whole
-    record each time, O(n²) on a deep repair). Same drop-if-vanished
-    rule as :func:`_record_batch_fps`."""
+def _record_batch_fps(sink_dir: str, bids) -> None:
+    """Record the CURRENT partition fingerprints of every sink table
+    for each of ``bids`` — called by the stream's ``write_batch`` after
+    its last write (the batch's commit receipt: everything the receipt
+    names was derived from the facts generation it names) and by the
+    repair after re-deriving batches. A bid whose partitions have ALL
+    vanished (a removed orphan) has its entry DROPPED, never re-added
+    as an all-empty receipt (review r9 #2). Deliberately touches only
+    these bids' partitions — O(4 listdirs) per bid on the per-batch hot
+    path; the full vanished-entry prune is maintenance-time work
+    (:func:`_prune_batch_fp_record`, run by the repair). The record
+    therefore stays O(sink batch partitions) — the same cardinality the
+    ``_batch_id`` directory layout itself carries, bounded in a
+    deployment by the sink compaction cadence. One read-modify-write
+    for all ``bids`` (review r9 pass-2 #3 — per-bid writes are O(n²)
+    on a deep repair). Single-writer discipline (one streaming query
+    per sink; repair runs with the stream stopped) makes the
+    read-modify-write safe; the write is tmp + atomic rename."""
     bids = sorted(set(bids))
     if not bids:
         return
@@ -1723,9 +1572,7 @@ def _record_batch_fps_many(
             # none exists under the single-writer contract) degrades to
             # the names-only legacy entry, which the checker treats
             # conservatively.
-            digest = _partition_content_digest(
-                sink_dir, t, bid, files, spark=spark
-            )
+            digest = _partition_content_digest(sink_dir, t, bid, files)
             fps[t] = {"files": files, **digest} if digest else files
         if any(_record_fingerprint(v) for v in fps.values()):
             record[bid] = fps
@@ -1764,154 +1611,6 @@ def _stale_sink_ids(
     return _sink_receipt_divergence(sink_dir, tables)[0]
 
 
-# process-level digest-verdict memo (ADVICE r10 #3): a drift batch
-# (replay crashed before its receipt refresh) otherwise pays the full
-# partition row read on EVERY guard/audit check until the nightly
-# repair refreshes the receipt. Keyed by the exact partition path +
-# file-name set + receipt claim: parquet data files are write-once
-# (rewrites mint fresh uuid names), so a cached verdict can never
-# describe different bytes than the ones it read. A None digest
-# (vanished file mid-read, unreadable partition) is NEVER cached — it
-# can be a transient commit instant. Bounded: cleared wholesale past a
-# cap (drift generations per process are rare; this is a backstop, not
-# an LRU).
-_DIGEST_VERDICT_MEMO: dict[tuple, bool] = {}
-_DIGEST_MEMO_CAP = 4096
-
-# Cross-PROCESS twin of the in-process memo (VERDICT r11 next-round
-# #1): the per-process memo bounds a drift batch's digest re-pay to
-# one read per process, but every NEW process (a fresh CLI query, a
-# cron job) still paid the full partition read until the nightly
-# repair refreshed the receipt. The receipt itself is single-writer
-# (the stream owns it; a query-side read-modify-write would race the
-# stream's per-batch receipt writes and could drop a just-landed
-# batch's entry), so the query side persists verdicts to a SIDECAR
-# that is a pure advisory cache instead: keyed by a hash of the exact
-# (table, bid, file set, receipt claim) — landed parquet files are
-# immutable and rewrites mint fresh uuid names, so the key fully
-# determines the verdict and a stale entry is unreachable. Lost
-# updates (two processes racing the tmp+rename) cost one extra
-# re-read, never correctness; all writes are best-effort (a read-only
-# sink dir must not break queries). The repair deletes the sidecar
-# after refreshing receipts — every cached verdict is dead weight once
-# the receipts match again, and entries are re-derivable.
-_DRIFT_VERDICT_SIDECAR = "_drift_verdicts.json"
-_DRIFT_SIDECAR_CAP = 1024
-
-
-def _drift_sidecar_key(
-    table: str, bid: int, files: list[str], want_rows: int, want_sum: int
-) -> str:
-    import hashlib
-
-    return hashlib.sha256(
-        json.dumps(
-            [table, bid, sorted(files), want_rows, want_sum],
-            sort_keys=True,
-        ).encode()
-    ).hexdigest()[:40]
-
-
-def _read_drift_sidecar(sink_dir: str) -> dict[str, bool]:
-    try:
-        with open(os.path.join(sink_dir, _DRIFT_VERDICT_SIDECAR)) as f:
-            data = json.load(f)
-        if not isinstance(data, dict):
-            return {}
-        return {
-            k: v
-            for k, v in data.items()
-            if isinstance(k, str) and isinstance(v, bool)
-        }
-    except (OSError, ValueError):
-        return {}
-
-
-def _append_drift_sidecar(sink_dir: str, key: str, verdict: bool) -> None:
-    rec = _read_drift_sidecar(sink_dir)
-    if rec.get(key) == verdict:
-        return
-    if len(rec) >= _DRIFT_SIDECAR_CAP:
-        rec = {}  # backstop, mirrors the in-process memo's clear
-    rec[key] = verdict
-    p = os.path.join(sink_dir, _DRIFT_VERDICT_SIDECAR)
-    tmp = f"{p}.{os.getpid()}.tmp"
-    try:
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, p)
-    except OSError:
-        # advisory cache only — a sink dir this process cannot write
-        # (read replica, permissions) keeps the per-process memo
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-
-
-def _clear_drift_sidecar(sink_dir: str) -> None:
-    """Maintenance-time removal (the repair's tail): the sidecar itself
-    plus any crash-leftover ``.tmp`` stagings from interrupted
-    best-effort writes — a writer killed between its tmp write and the
-    rename leaks one small file per crash, and no query-path code may
-    delete another process's in-flight tmp (pid-named, so only the
-    maintenance window can tell leftovers from live writes)."""
-    try:
-        os.unlink(os.path.join(sink_dir, _DRIFT_VERDICT_SIDECAR))
-    except OSError:
-        pass
-    try:
-        names = os.listdir(sink_dir)
-    except OSError:
-        return
-    for n in names:
-        if n.startswith(_DRIFT_VERDICT_SIDECAR + ".") and n.endswith(".tmp"):
-            try:
-                os.unlink(os.path.join(sink_dir, n))
-            except OSError:
-                pass
-
-
-def _digest_verdict_memo(
-    sink_dir: str,
-    table: str,
-    bid: int,
-    files: list[str],
-    want_rows: int,
-    want_sum: int,
-) -> bool:
-    """True iff the partition's row-content digest matches the receipt
-    claim — memoized per process (see module note above)."""
-    key = (
-        os.path.abspath(os.path.join(sink_dir, table, f"_batch_id={bid}")),
-        tuple(files),
-        want_rows,
-        want_sum,
-    )
-    hit = _DIGEST_VERDICT_MEMO.get(key)
-    if hit is not None:
-        return hit
-    skey = _drift_sidecar_key(table, bid, files, want_rows, want_sum)
-    shit = _read_drift_sidecar(sink_dir).get(skey)
-    if shit is not None:
-        # another process already paid this drift generation's read —
-        # adopt its verdict (sound: the key pins the immutable file
-        # set AND the claim) and memoize locally
-        if len(_DIGEST_VERDICT_MEMO) >= _DIGEST_MEMO_CAP:
-            _DIGEST_VERDICT_MEMO.clear()
-        _DIGEST_VERDICT_MEMO[key] = shit
-        return shit
-    got = _partition_content_digest(sink_dir, table, bid, files)
-    if got is None:
-        return False  # no claim — conservative, and not cacheable
-    verdict = got["rows"] == want_rows and got["sum"] == want_sum
-    if len(_DIGEST_VERDICT_MEMO) >= _DIGEST_MEMO_CAP:
-        _DIGEST_VERDICT_MEMO.clear()
-    _DIGEST_VERDICT_MEMO[key] = verdict
-    _append_drift_sidecar(sink_dir, skey, verdict)
-    return verdict
-
-
 def _sink_receipt_divergence(
     sink_dir: str, tables: tuple[str, ...] = _FP_TABLES
 ) -> tuple[set[int], set[int]]:
@@ -1923,18 +1622,12 @@ def _sink_receipt_divergence(
     rewrite whose end-of-batch receipt refresh never ran — the replay
     crashed after the rewrite, or surgery copied the partition
     byte-identically). Drift batches are SERVED (their rows are the
-    landed rows) but each check re-pays the digest read until the
-    receipt is refreshed — the audit reports them and the repair
-    refreshes their receipts, restoring the r9 nightly self-heal the
-    digest rule would otherwise have removed (review r10 #2). Between
-    repairs the re-pay is bounded per DEPLOYMENT (ADVICE r10 #3 gave
-    the per-process memo; VERDICT r11 #1 added the cross-process
-    sidecar): digest-compare verdicts memoize on the exact (partition,
-    file set, receipt claim) key — sound because landed parquet files
-    are immutable (every rewrite mints fresh uuid names, so any change
-    re-keys) — in-process AND in an advisory sidecar next to the
-    receipt, so each drift generation costs one read by whichever
-    process first sees it, not one per process."""
+    landed rows) but each check re-pays the digest read — O(that
+    batch's rows), milliseconds for a micro-batch — until the receipt
+    is refreshed: the audit reports them and the repair refreshes their
+    receipts, restoring the r9 nightly self-heal the digest rule would
+    otherwise have removed (review r10 #2). A None digest (unreadable
+    partition, a rewrite's commit instant) makes no claim: stale."""
     stale: set[int] = set()
     drift: set[int] = set()
     for bid, fps in _read_batch_fp_record(sink_dir).items():
@@ -1971,9 +1664,8 @@ def _sink_receipt_divergence(
                 # agree (a replay, or a same-count phantom).
                 got_rows = _partition_footer_rows(sink_dir, t, bid, cur)
                 if got_rows is None or got_rows == want_rows:
-                    if _digest_verdict_memo(
-                        sink_dir, t, bid, cur, want_rows, want_sum
-                    ):
+                    got = _partition_content_digest(sink_dir, t, bid, cur)
+                    if got == {"rows": want_rows, "sum": want_sum}:
                         # byte-identical replay rewrite: fresh names,
                         # same rows — not stale, but flag for a
                         # receipt refresh
@@ -2001,7 +1693,9 @@ def sink_kv_exclusions(sink_dir: str) -> set[int]:
 
     Cost: two listdirs + one small JSON read per query — O(batches)
     driver-side metadata, the same class as the sink read's own
-    partition discovery. The CONTAINMENT plans deliberately do NOT use
+    partition discovery — plus, for a receipt-drift batch, one digest
+    read of its drifted partitions until the repair refreshes the
+    receipt. The CONTAINMENT plans deliberately do NOT use
     this guard: their exact fact-table recheck makes orphans harmless,
     and filtering their postings by facts presence would break the
     postings ⊇ landed-facts superset that makes index-proven emptiness
@@ -2079,10 +1773,10 @@ def _read_zero_kv_batches(sink_dir: str) -> dict[int, list[str]]:
 def _write_zero_kv_batches(
     sink_dir: str, entries: dict[int, list[str]]
 ) -> None:
-    p = os.path.join(sink_dir, _ZERO_KV_SENTINEL)
-    with open(p + ".tmp", "w") as f:
-        json.dump({str(k): v for k, v in sorted(entries.items())}, f)
-    os.replace(p + ".tmp", p)
+    write_json_atomic(
+        os.path.join(sink_dir, _ZERO_KV_SENTINEL),
+        {str(k): v for k, v in sorted(entries.items())},
+    )
 
 
 def _valid_zero_kv_ids(sink_dir: str, kv_ids: set[int]) -> set[int]:
@@ -2374,7 +2068,7 @@ def repair_events_sink(
         # superset) and the final prune drops removed orphans — the
         # targeted refresh would be a redundant third pass over the
         # record (review r9 pass-6 #3)
-        _record_batch_fps_many(
+        _record_batch_fps(
             sink_dir,
             set(out["rollup_repaired"])
             | set(out["kv_repaired"])
@@ -2383,7 +2077,6 @@ def repair_events_sink(
             | set(out["receipts_refreshed"])
             | set(confirmed_zero)
             | {b for ids in out["orphans_removed"].values() for b in ids},
-            spark=spark,
         )
     if deep:
         for bid in report["events"]:
@@ -2399,11 +2092,8 @@ def repair_events_sink(
                 if bid not in kv_now
             },
         )
-        _record_batch_fps_many(sink_dir, report["events"], spark=spark)
+        _record_batch_fps(sink_dir, report["events"])
     # maintenance-time receipt hygiene: drop entries whose partitions
     # have all vanished (removed orphans above, retention, surgery)
     _prune_batch_fp_record(sink_dir)
-    # the receipts now match reality, so every cached drift verdict is
-    # dead weight — and all of them are re-derivable; drop the sidecar
-    _clear_drift_sidecar(sink_dir)
     return out
