@@ -190,12 +190,34 @@ def test_incremental_append_equals_full_rebuild(spark, tmp_path, monkeypatch):
         d.write.parquet(os.path.join(sf, "documents.parquet"))
         v.write.parquet(os.path.join(sf, "embeddings.parquet"))
 
-    # incremental: build on base, then append the batch twice (the
-    # second call is a retry of the same batch id)
+    # incremental: build on base, then append the batch three times.
+    # The first attempt fails in one index branch: the append re-raises
+    # that error once every branch has returned, so no job of it is
+    # still running. The second call retries that failed batch, the
+    # third one retries it after it committed.
     prepared.documents_trgm(spark, base_sf)
     prepared.documents_trgm_postings(spark, base_sf)
     prepared.documents_minhash(spark, base_sf)
     prepared.documents_postings(spark, base_sf)
+
+    def boom(*_a, **_k):
+        raise RuntimeError("injected branch failure")
+
+    sc = spark.sparkContext
+    for append, batch, module, branch in (
+        # the postings merge fails after its pending write landed
+        (prepared.append_documents_batch, new_docs, prepared.postings,
+         "merge_postings_pending"),
+        # the IVF write fails at once, while the PQ write runs
+        (prepared.append_embeddings_batch, new_vecs, prepared.vectors,
+         "embeddings_ivf"),
+    ):
+        with monkeypatch.context() as mp:
+            mp.setattr(module, branch, boom)
+            with pytest.raises(RuntimeError, match="injected branch failure"):
+                append(spark, base_sf, batch, batch_id=3)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert not sc.statusTracker().getActiveJobsIds(), branch
     for _ in range(2):
         prepared.append_documents_batch(spark, base_sf, new_docs, batch_id=3)
         prepared.append_embeddings_batch(spark, base_sf, new_vecs, batch_id=3)
@@ -2383,6 +2405,75 @@ def test_dfreq_staged_refresh_invisible_and_recoverable(
         .collect()
     }
     assert got == want and ("zanzibar", 1) in got
+
+
+def test_nightly_on_an_unchanged_dir_rewrites_nothing(
+    spark, sf_dir, tmp_path, monkeypatch, capsys
+):
+    """Appends and merges land under ``abatch-*``/``pending-*`` names and
+    every rewrite leaves the sorted shape, so a second back-to-back
+    `maintain auto` finds nothing to compact or recluster: each postings
+    layout and the Z-order layout keep their directory and files."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from venus_spark import prepared
+    from venus_spark.__main__ import main
+
+    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
+    src = sf_dir
+    docs = spark.read.parquet(os.path.join(src, "documents.parquet"))
+    ev = spark.read.parquet(os.path.join(src, "events.parquet"))
+    sf = str(tmp_path / "sf")
+    docs.filter(F.col("doc_id") < 40).write.parquet(
+        os.path.join(sf, "documents.parquet")
+    )
+    ev.filter(F.col("event_id") % 5 != 0).write.parquet(
+        os.path.join(sf, "events.parquet")
+    )
+    for fn in (
+        prepared.documents_trgm,
+        prepared.documents_trgm_postings,
+        prepared.documents_minhash,
+        prepared.documents_postings,
+        prepared.events_hourly_rollup,
+        prepared.events_daily_hll,
+        prepared.events_by_date,
+        prepared.events_by_user,
+        prepared.events_zorder,
+        prepared.events_kv_postings,
+    ):
+        fn(spark, sf)
+    prepared.append_documents_batch(
+        spark,
+        sf,
+        docs.filter(F.col("doc_id") >= 40).withColumn(
+            "doc_id", F.col("doc_id") + 960
+        ),
+        batch_id=1,
+    )
+    prepared.append_events(spark, sf, ev.filter(F.col("event_id") % 5 == 0), batch_id=1)
+    paths = [
+        prepared.prepared_path(sf, name)
+        for name in (
+            "documents_postings.parquet",
+            "documents_trgm_postings.parquet",
+            "events_kv_postings.parquet",
+            "events_zorder.parquet",
+        )
+    ]
+
+    def state():
+        return {p: (os.stat(p).st_ino, sorted(os.listdir(p))) for p in paths}
+
+    appended = state()
+    assert main(["maintain", "auto", "--sf", sf]) == 0, capsys.readouterr().out
+    first = state()
+    # the first run folded the batches in: every layout was rewritten
+    assert all(first[p][0] != appended[p][0] for p in paths)
+    assert main(["maintain", "auto", "--sf", sf]) == 0, capsys.readouterr().out
+    assert state() == first
 
 
 def test_nightly_sweeps_stale_stagings(spark, tmp_path, monkeypatch, capsys):

@@ -171,7 +171,9 @@ def _vacuum_all_deletes(spark, sf: str) -> int:
 
 
 def _compact_all_postings(spark, sf: str) -> list[str]:
-    """Compact every postings family; returns the ones rewritten."""
+    """Compact every postings family; returns the ones present, each
+    then one sorted file set (one without appended files is left as it
+    is)."""
     from venus_spark import prepared
 
     families = [

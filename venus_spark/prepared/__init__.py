@@ -37,11 +37,13 @@ from venus_spark.prepared.core import (  # noqa: F401
     read_layout,
     layout_rows,
     read_once,
+    side_by_side,
     _is_built,
     _stamp,
     _restamp_atomic,
     _stamp_only_round_mismatch,
     _compact_existing_sorted,
+    _holds_batch_files,
     _compact_sorted_swap,
     _read_meta,
     _append_batch_files,

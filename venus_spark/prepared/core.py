@@ -12,12 +12,14 @@ import re
 import shutil
 import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from venus_spark.fsutil import write_json_atomic
 from venus_spark.operators import dedup as _dedup
@@ -137,6 +139,28 @@ def read_once(append):
 
     return cached
 
+def side_by_side(spark: SparkSession, *branches) -> None:
+    """Run ``branches`` — zero-argument callables whose writes do not
+    depend on each other — on one thread each, and return when every
+    branch has finished. Spark schedules jobs from several threads at
+    once, so the branches' fixed per-job planning and scheduling costs
+    overlap instead of adding up. Each thread starts
+    from the caller's local properties and job tags (job group,
+    description, a streaming query's ids), so every job it runs is
+    attributed to the caller. The first failure in branch order is
+    re-raised only after every branch has returned, so no job of the
+    call is still running then. The one place ``venus_spark`` starts
+    threads: a thread made elsewhere would drop those properties."""
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        # wrapped here, in the caller's thread: that is when the
+        # properties are copied, one copy per branch
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(branch))
+            for branch in branches
+        ]
+    for f in futures:
+        f.result()
+
 def _is_built(path: str, meta: dict | None = None) -> bool:
     """Complete build = Spark's ``_SUCCESS`` marker plus (when the
     artifact derives from tunable constants) a ``_prep_meta.json``
@@ -228,11 +252,16 @@ def _compact_existing_sorted(
     crash-safe sorted swap. A TORN-but-present directory (crashed
     build, no _SUCCESS) is deliberately repaired by the ensure before
     compacting — OPTIMIZE finishing an interrupted build is repair, not
-    a side-effect build."""
+    a side-effect build. Returns whether the layout exists — and is
+    then one sorted file set. A built layout holding no appended or
+    merged file is already that set, so it is left as it is: a nightly
+    on an unchanged dir rewrites nothing."""
     path = prepared_path(sf_dir, name)
     _recover_prepared_swaps(sf_dir, path, *recover_tags)
     if not os.path.exists(path):
         return False
+    if _is_built(path, meta) and not _holds_batch_files(path):
+        return True
     # NOTE (review r9 pass-5 #2): a torn-but-present directory here is
     # treated as a CRASHED build for the ensure to repair; the gate
     # cannot distinguish it from a rebuild IN PROGRESS in another
@@ -241,6 +270,19 @@ def _compact_existing_sorted(
     # is what excludes that collision, same contract as repair/vacuum.
     _compact_sorted_swap(sf_dir, ensure, path, meta, sort_cols)
     return True
+
+def _holds_batch_files(path: str) -> bool:
+    """Whether layout ``path`` holds a data file that an append
+    (``abatch-*``, :func:`_append_batch_files`) or a pending-list merge
+    (``pending-*``, :func:`_merge_pending`) landed. Those are the only
+    writers that add files to a built layout; every rewrite (build,
+    compaction, vacuum, delete scrub, recluster) writes the layout's
+    sorted shape under unprefixed names."""
+    return any(
+        f.startswith(("abatch-", "pending-"))
+        for _root, _dirs, files in os.walk(path)
+        for f in files
+    )
 
 def _compact_sorted_swap(
     sf_dir: str,

@@ -77,9 +77,9 @@ def append_documents_batch(
     document append path. Every artifact absorbs the batch under its id
     exactly once, so a crash-retry of the same batch is a no-op:
 
-    - trigram index: rows land via :func:`_append_batch_files`
-      (per-file atomic renames, batch manifest committed last — a
-      retry after commit is a pure no-op);
+    - trigram index and trigram postings: rows land via
+      :func:`_append_batch_files` (per-file atomic renames, batch
+      manifest committed last — a retry after commit is a pure no-op);
     - MinHash and postings indexes: the batch goes through the SAME
       pending-list + merge machinery the streaming path uses
       (``write_*_pending`` is a dynamic partition overwrite — a replay
@@ -88,26 +88,44 @@ def append_documents_batch(
       for free: there is no read-modify-write of the stats table, the
       batch's per-document counter rows ARE the stats update.
 
-    The bucketed LSH band table cannot absorb rows in place, so it is
-    dropped and rebuilt on next use over the updated index.
+    The four index writes touch disjoint layouts, so they run side by
+    side (:func:`_core.side_by_side`). Each keeps its own write order
+    and its own crash and retry protocol: an error in one does not stop
+    the others, and a retry of the batch lands it exactly once in every
+    index, as before. The postings write starts after the trigram
+    write: its shuffle would otherwise plan the not yet loaded batch
+    cache as a query stage of its own, one more Spark job. The bucketed
+    LSH band table cannot absorb rows in place, so it is dropped, after
+    all four writes, and rebuilt on next use over the updated index.
 
     ``batch_id`` shares one id space with the streaming epoch ids for
     these indexes (same pending area); callers driving both must keep
     the ranges disjoint, exactly like :func:`append_events`. Same
     same-id-same-rows contract as every manifested append."""
-    _trgm.documents_trgm(spark, sf_dir)
-    trgm_path = _core.prepared_path(sf_dir, "documents_trgm.parquet")
-    _core._append_batch_files(_trgm._trgm_rows(new_docs), trgm_path, batch_id)
-    _trgm.documents_trgm_postings(spark, sf_dir)
-    _core._append_batch_files(
-        _trgm._trgm_postings_rows(new_docs),
-        _core.prepared_path(sf_dir, "documents_trgm_postings.parquet"),
-        batch_id,
-    )
-    write_minhash_pending(sf_dir, new_docs, batch_id)
-    merge_minhash_pending(spark, sf_dir)
-    _postings.write_postings_pending(sf_dir, new_docs, batch_id)
-    _postings.merge_postings_pending(spark, sf_dir)
+
+    def trgm_then_postings() -> None:
+        _trgm.documents_trgm(spark, sf_dir)
+        _core._append_batch_files(
+            _trgm._trgm_rows(new_docs),
+            _core.prepared_path(sf_dir, "documents_trgm.parquet"),
+            batch_id,
+        )
+        _postings.write_postings_pending(sf_dir, new_docs, batch_id)
+        _postings.merge_postings_pending(spark, sf_dir)
+
+    def trgm_postings() -> None:
+        _trgm.documents_trgm_postings(spark, sf_dir)
+        _core._append_batch_files(
+            _trgm._trgm_postings_rows(new_docs),
+            _core.prepared_path(sf_dir, "documents_trgm_postings.parquet"),
+            batch_id,
+        )
+
+    def minhash() -> None:
+        write_minhash_pending(sf_dir, new_docs, batch_id)
+        merge_minhash_pending(spark, sf_dir)
+
+    _core.side_by_side(spark, trgm_then_postings, trgm_postings, minhash)
     _buckets._drop_lsh_bands(spark, sf_dir)
 
 _MINHASH_INDEX = "documents_minhash.parquet"

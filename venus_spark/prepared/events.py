@@ -633,9 +633,12 @@ def recluster_events_zorder(spark: SparkSession, sf_dir: str) -> None:
     recovery that completes or rolls back any interruption. At 100 TB
     this is the scheduled compaction every lakehouse table runs;
     queries never stop being correct while it is due, only less
-    pruned."""
+    pruned. A layout with no appended batch since its last z-sorted
+    write is already one z-sorted file set and is left as it is."""
     events_zorder(spark, sf_dir)  # ensures built + completes any prior swap
     path = _core.prepared_path(sf_dir, "events_zorder.parquet")
+    if not _core._holds_batch_files(path):
+        return
     meta = _core._read_meta(path)
     min_hour = int(meta["min_hour"])
     # stage OUTSIDE the lock under a recovery-invisible name, swap

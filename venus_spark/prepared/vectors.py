@@ -383,22 +383,32 @@ def append_embeddings_batch(
     ``codebook`` lets a long-lived caller (the streaming ingest) pass
     the once-validated codebook instead of re-collecting it per
     micro-batch — the saturation contract makes it immutable for the
-    stream's lifetime."""
-    embeddings_ivf(spark, sf_dir)
-    _core._append_batch_files(
-        new_vecs,
-        _core.prepared_path(sf_dir, "embeddings_ivf.parquet"),
-        batch_id,
-        partition_by=("label",),
-    )
-    if codebook is None:
-        codebook = _pq_saturated_codebook(spark, sf_dir)
-    _core._append_batch_files(
-        _pq_code_rows(new_vecs, codebook),
-        _core.prepared_path(sf_dir, "embeddings_pq_codes.parquet"),
-        batch_id,
-        partition_by=("label",),
-    )
+    stream's lifetime.
+
+    The two index writes run side by side (:func:`_core.side_by_side`),
+    each under its own manifest: an error in one does not stop the
+    other, and a retry of the batch lands it exactly once in both, as
+    before."""
+
+    def ivf() -> None:
+        embeddings_ivf(spark, sf_dir)
+        _core._append_batch_files(
+            new_vecs,
+            _core.prepared_path(sf_dir, "embeddings_ivf.parquet"),
+            batch_id,
+            partition_by=("label",),
+        )
+
+    def pq() -> None:
+        cb = _pq_saturated_codebook(spark, sf_dir) if codebook is None else codebook
+        _core._append_batch_files(
+            _pq_code_rows(new_vecs, cb),
+            _core.prepared_path(sf_dir, "embeddings_pq_codes.parquet"),
+            batch_id,
+            partition_by=("label",),
+        )
+
+    _core.side_by_side(spark, ivf, pq)
 
 # --------------------------------------------------------------------------
 # Embedding deletion: the vector-side twin of the document tombstones
