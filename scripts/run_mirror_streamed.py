@@ -443,8 +443,9 @@ def main() -> int:
             return 1
 
         # the oracle's world: base UNION ALL each sink's rows (the
-        # _batch_id partition dirs are layout, not data — the non-hive
-        # read keeps them out)
+        # _batch_id partition dirs and the events sink's attempt dirs
+        # are layout, not data — the non-hive read keeps them out; the
+        # events sink holds no uncommitted attempt here)
         con = duckdb_connect(sf)
         cols = "event_id, ts, user_id, event_type, value, props"
         con.execute(

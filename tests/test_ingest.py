@@ -787,22 +787,23 @@ def test_promote_requires_declared_schema_field(spark):
 
 
 def test_events_kv_guards_tolerate_novel_streamed_key(spark, tmp_path, monkeypatch):
-    """The events-sink half of the schema-evolution story (VERDICT r10
-    #4): a streamed batch whose props carries an UNDECLARED key must
-    flow through the kv-postings maintenance with the guards clean.
+    """The events-sink half of the schema-evolution story: a streamed
+    batch whose props carries an UNDECLARED key must flow through the
+    kv-postings maintenance and commit like any other batch.
     The kv index is over the COMPOSED document (declared keys k/type/
     uid — the jsonb_to_record 'know which names you're looking for'
     contract, reference README.rst:92-100), so the unknown payload key
     derives no entry; what evolution must NOT do is wedge the
-    maintenance, trip sink_kv_exclusions, or corrupt the live
-    key plans' counts for the declared keys."""
+    maintenance, leave the batch uncommitted, or corrupt the live key
+    plans' counts for the declared keys."""
     from venus_spark import prepared
     from venus_spark.plans import all_plans
     from venus_spark.plans import venus_surface as vs
     from venus_spark.streaming import (
         EVENTS_STREAM_SCHEMA,
+        events_sink_commits,
         events_stream_sink_dir,
-        sink_kv_exclusions,
+        read_kv_postings,
         start_events_rollup_ingest,
     )
 
@@ -834,15 +835,13 @@ def test_events_kv_guards_tolerate_novel_streamed_key(spark, tmp_path, monkeypat
         trigger_seconds=None,
     )
     assert q.awaitTermination(180)
-    assert sink_kv_exclusions(sink) == set()
+    assert list(events_sink_commits(sink)) == ["0"]
     plans = all_plans()
     vs._KV_DF_CACHE.clear()
     # the undeclared key derives no posting (declared-universe
     # contract) and the declared keys the event DOES carry (type, uid)
     # count live exactly +1 over the prepared twin
-    from venus_spark.streaming import read_kv_postings_guarded
-
-    kv = {r["kv"] for r in read_kv_postings_guarded(spark, sink).collect()}
+    kv = {r["kv"] for r in read_kv_postings(spark, sink).collect()}
     assert kv == {"?type", "?uid", "type=click", "uid=7"}
     disc = {
         r["key"]

@@ -345,17 +345,18 @@ def test_latest_state_stream_converges_to_batch(spark, tmp_path):
 def test_streaming_rollup_converges_and_replay_is_idempotent(spark, tmp_path):
     """The continuous aggregate maintained per micro-batch must merge to
     the one-shot aggregate over all streamed events, and replaying a
-    batch's writes (the crash-between-write-and-commit window) must
-    leave the rollup unchanged."""
+    committed batch (the crash between the sink commit and the
+    checkpoint commit) must leave every reader's rows unchanged."""
     from pyspark.sql import functions as F
 
     from venus_spark.functions import dsum
-    from venus_spark.prepared import _hourly_partial_rows
     from venus_spark.streaming import (
-        _write_idempotent,
         read_hourly_rollup,
-        read_sink_table,
+        read_kv_dfreq,
+        read_kv_postings,
+        read_sink_events,
         start_events_rollup_ingest,
+        write_events_batch,
     )
 
     landing = tmp_path / "landing"
@@ -392,7 +393,7 @@ def test_streaming_rollup_converges_and_replay_is_idempotent(spark, tmp_path):
         }
 
     got = snapshot()
-    all_events = read_sink_table(spark, sink, "events")
+    all_events = read_sink_events(spark, sink)
     want = {
         r["bucket_ts"]: (r["n"], r["total_value"])
         for r in all_events.groupBy(
@@ -403,16 +404,18 @@ def test_streaming_rollup_converges_and_replay_is_idempotent(spark, tmp_path):
     }
     assert got == want and len(got) == 3
 
-    # replay the second batch's rollup write verbatim: no duplication
-    import os
+    def readers():
+        return (
+            snapshot(),
+            _rows(read_sink_events(spark, sink)),
+            _rows(read_kv_postings(spark, sink)),
+            _rows(read_kv_dfreq(spark, sink)),
+        )
 
-    replay = all_events.filter(F.col("event_id") >= 4)
-    _write_idempotent(
-        _hourly_partial_rows(replay),
-        os.path.join(sink, "events_hourly_rollup"),
-        1,
-    )
-    assert snapshot() == want
+    # replay the second batch verbatim: no reader's rows change
+    before = readers()
+    write_events_batch(all_events.filter(F.col("event_id") >= 4), sink, 1)
+    assert readers() == before
 
 
 def test_rollup_stream_restart_is_exactly_once(spark, tmp_path):
@@ -425,7 +428,7 @@ def test_rollup_stream_restart_is_exactly_once(spark, tmp_path):
     from venus_spark.functions import dsum
     from venus_spark.streaming import (
         read_hourly_rollup,
-        read_sink_table,
+        read_sink_events,
         start_events_rollup_ingest,
     )
 
@@ -450,7 +453,7 @@ def test_rollup_stream_restart_is_exactly_once(spark, tmp_path):
     q = start_events_rollup_ingest(read_event_stream(spark, landing), **kwargs)
     assert q.awaitTermination(180)
 
-    events = read_sink_table(spark, str(tmp_path / "sink"), "events")
+    events = read_sink_events(spark, str(tmp_path / "sink"))
     assert events.count() == 15
     got = {
         r["bucket_ts"]: (r["n"], r["total_value"])
@@ -469,7 +472,7 @@ def test_rollup_stream_restart_is_exactly_once(spark, tmp_path):
 def test_streaming_kv_postings_maintained_and_serve_containment(
     spark, tmp_path
 ):
-    """Round 7: the events ingest maintains the jsonb-GIN analog per
+    """The events ingest maintains the jsonb-GIN analog per
     micro-batch — the streamed sink's kv postings equal the derivation
     over everything streamed, a verbatim replay adds nothing, and a
     containment intersection over the postings returns exactly the
@@ -477,16 +480,14 @@ def test_streaming_kv_postings_maintained_and_serve_containment(
     exercises the props-less tolerance: this stream's schema carries
     no props column, so no ``k=``/``?k`` entries exist — absent-key
     semantics, not an error."""
-    import os
-
     from pyspark.sql import functions as F
 
     from venus_spark.prepared import _events_kv_rows
     from venus_spark.streaming import (
-        _write_idempotent,
         read_kv_postings,
-        read_sink_table,
+        read_sink_events,
         start_events_rollup_ingest,
+        write_events_batch,
     )
 
     landing = tmp_path / "landing"
@@ -519,7 +520,7 @@ def test_streaming_kv_postings_maintained_and_serve_containment(
             tuple(r) for r in read_kv_postings(spark, sink).collect()
         )
 
-    events = read_sink_table(spark, sink, "events")
+    events = read_sink_events(spark, sink)
     want = sorted(
         tuple(r)
         for r in _events_kv_rows(events, allow_missing_props=True).collect()
@@ -528,14 +529,8 @@ def test_streaming_kv_postings_maintained_and_serve_containment(
     assert got == want
     assert not any(kv.startswith(("k=", "?k")) for kv, _ in got)  # props-less
 
-    # verbatim replay of batch 1's kv write: no duplication
-    replay = events.filter(F.col("event_id") >= 3)
-    _write_idempotent(
-        _events_kv_rows(replay, allow_missing_props=True)
-        .sortWithinPartitions("kv", "event_id"),
-        os.path.join(sink, "events_kv_postings"),
-        1,
-    )
+    # verbatim replay of batch 1: no duplication
+    write_events_batch(events.filter(F.col("event_id") >= 3), sink, 1)
     assert rows() == want
 
     # containment over the streamed sink: type=click AND ?uid — user 3
@@ -554,7 +549,7 @@ def test_streaming_kv_postings_maintained_and_serve_containment(
 def test_streamed_containment_is_index_served_live(
     spark, tmp_path, monkeypatch
 ):
-    """VERDICT r7 #1 end-to-end: with the PROPS-BEARING stream schema,
+    """End to end: with the PROPS-BEARING stream schema,
     streamed events are visible to ``json_containment_indexed_live``
     the moment their batch commits — k= and ?k entries land in the
     sink postings, per-batch dfreq partials land beside them (summed
@@ -572,11 +567,12 @@ def test_streamed_containment_is_index_served_live(
     from venus_spark.plans import venus_surface as vs
     from venus_spark.streaming import (
         EVENTS_STREAM_SCHEMA,
-        _write_idempotent,
         events_stream_sink_dir,
         read_kv_dfreq,
         read_kv_postings,
+        read_sink_events,
         start_events_rollup_ingest,
+        write_events_batch,
     )
 
     monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
@@ -650,10 +646,7 @@ def test_streamed_containment_is_index_served_live(
             tuple,
             vs._containment_recheck(
                 base_ev.unionByName(
-                    spark.read.parquet(os.path.join(sink, "events")).drop(
-                        "_batch_id"
-                    ),
-                    allowMissingColumns=True,
+                    read_sink_events(spark, sink), allowMissingColumns=True
                 )
             ).collect(),
         )
@@ -662,25 +655,18 @@ def test_streamed_containment_is_index_served_live(
 
     # the sink's ts column is NTZ like the base table — an LTZ column
     # would silently coerce the whole base-∪-sink union
-    streamed = spark.read.parquet(os.path.join(sink, "events")).drop(
-        "_batch_id"
-    )
+    streamed = read_sink_events(spark, sink)
     assert dict(streamed.dtypes)["ts"] == "timestamp_ntz"
 
-    # verbatim replay of the batch's dfreq partials: no double count
-    kv = prepared._events_kv_rows(streamed, allow_missing_props=True)
-    _write_idempotent(
-        kv.groupBy("kv").agg(F.count("*").alias("df")),
-        os.path.join(sink, "events_kv_dfreq"),
-        0,
-    )
+    # verbatim replay of the batch: its dfreq partials do not double
+    write_events_batch(streamed, sink, 0)
     assert {
         r["kv"]: r["df"] for r in read_kv_dfreq(spark, sink).collect()
     } == dfs
 
-    # overlap safety net (review r8 pass-2 #2): an operator re-lands a
-    # streamed event into the base table without dropping its sink
-    # partition — the live plan's indexed recheck dedups by event_id,
+    # overlap safety net: an operator re-lands a streamed event into
+    # the base table without dropping its sink manifest entry — the
+    # live plan's indexed recheck dedups by event_id,
     # so the violated contract cannot double a result row
     streamed.filter(F.col("event_id") == 2_000_001).write.mode(
         "append"
@@ -707,8 +693,8 @@ def test_streamed_containment_is_index_served_live(
     }
     assert {"k", "type", "uid"} <= disc
     # with a sink contributing, BOTH parquet scans of the live key plan
-    # carry the pushed prefix filter (review r8 pass-5 #5: the
-    # sink-less shape test cannot see the union branch)
+    # carry the pushed prefix filter (the sink-less shape test cannot
+    # see the union branch)
     import contextlib
     import io
 
@@ -720,284 +706,20 @@ def test_streamed_containment_is_index_served_live(
     ]
 
 
-def test_sink_repair_heals_lost_checkpoint_divergence(spark, tmp_path):
-    """VERDICT r7 "What's wrong" #3: a crash between the facts write
-    and the rollup write whose checkpoint is NEVER replayed leaves
-    landed facts with silently missing rollup partials — an undercount
-    no query detects (and, symmetrically, missing kv postings/dfreq
-    make streamed events invisible to the containment index). The
-    audit must name every divergence and the repair must re-derive it
-    from the facts — and remove orphan derived partitions whose facts
-    never landed."""
-    import json as _json
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from venus_spark.functions import dsum
-    from venus_spark.prepared import _events_kv_rows
-    from venus_spark.streaming import (
-        EVENTS_STREAM_SCHEMA,
-        _write_idempotent,
-        audit_events_sink,
-        read_hourly_rollup,
-        read_kv_dfreq,
-        read_kv_postings,
-        repair_events_sink,
-        start_events_rollup_ingest,
-    )
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-
-    def sev(i, ts, user, etype):
-        return {
-            "event_id": i,
-            "ts": ts,
-            "user_id": user,
-            "event_type": etype,
-            "value": float(i),
-            "props": '{"k": 7}',
-        }
-
-    (landing / "b0.jsonl").write_text(
-        "\n".join(
-            _json.dumps(e)
-            for e in [
-                sev(1, "2024-01-01 10:05:00", 4, "click"),
-                sev(2, "2024-01-01 10:15:00", 5, "view"),
-                sev(3, "2024-01-01 11:05:00", 6, "click"),
-            ]
-        )
-    )
-    (landing / "b1.jsonl").write_text(
-        "\n".join(
-            _json.dumps(e)
-            for e in [
-                sev(4, "2024-01-01 10:25:00", 7, "click"),
-                sev(5, "2024-01-01 10:35:00", 8, "buy"),
-            ]
-        )
-    )
-    # batch 2 derives ZERO kv entries (null type, uid-absent user, null
-    # props): its kv/dfreq partitions are legitimately absent
-    (landing / "b2.jsonl").write_text(
-        _json.dumps(
-            {"event_id": 6, "ts": "2024-01-01 10:45:00", "user_id": 3,
-             "event_type": None, "value": 6.0, "props": None}
-        )
-    )
-    sink = str(tmp_path / "sink")
-    q = start_events_rollup_ingest(
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing)),
-        sink_dir=sink,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        trigger_seconds=None,
-    )
-    assert q.awaitTermination(180)
-
-    facts = spark.read.parquet(os.path.join(sink, "events")).drop("_batch_id")
-
-    def one_shot():
-        return {
-            r["bucket_ts"]: (r["n"], r["total_value"])
-            for r in facts.groupBy(
-                F.date_trunc("hour", F.col("ts")).alias("bucket_ts")
-            )
-            .agg(F.count("*").alias("n"), dsum("value").alias("total_value"))
-            .collect()
-        }
-
-    def rollup_now():
-        return {
-            r["bucket_ts"]: (r["n"], r["total_value"])
-            for r in read_hourly_rollup(spark, sink).collect()
-        }
-
-    want_roll = one_shot()
-    want_post = sorted(
-        tuple(r)
-        for r in _events_kv_rows(facts, allow_missing_props=True).collect()
-    )
-    want_dfs = {r["kv"]: r["df"] for r in read_kv_dfreq(spark, sink).collect()}
-    assert rollup_now() == want_roll  # healthy before the "crash"
-
-    # the never-replayed crash: batch 1's derived writes are gone while
-    # its facts remain; plus an orphan kv partition (facts never landed)
-    for t in ("events_hourly_rollup", "events_kv_postings", "events_kv_dfreq"):
-        shutil.rmtree(os.path.join(sink, t, "_batch_id=1"))
-    _write_idempotent(
-        spark.createDataFrame([("k=99", 999)], "kv string, event_id long"),
-        os.path.join(sink, "events_kv_postings"),
-        7,
-    )
-
-    assert rollup_now() != want_roll  # the silent undercount, visible here
-    report = audit_events_sink(sink)
-    assert report["rollup_missing"] == [1]
-    # batch 2 (zero-entry) also reads as missing until a repair
-    # CONFIRMS it derives nothing
-    assert report["kv_missing"] == [1, 2]
-    assert report["dfreq_missing"] == [1, 2]
-    assert report["orphans"] == {"events_kv_postings": [7]}
-
-    out = repair_events_sink(spark, sink)
-    assert out["rollup_repaired"] == [1]
-    assert out["kv_repaired"] == [1]
-    assert out["dfreq_repaired"] == [1]
-    assert out["orphans_removed"] == {"events_kv_postings": [7]}
-    # the confirmed-zero batch is recorded: later audits stop listing
-    # it and later repairs stop re-deriving it
-    assert audit_events_sink(sink)["kv_missing"] == []
-    assert audit_events_sink(sink)["dfreq_missing"] == []
-
-    assert rollup_now() == want_roll
-    assert (
-        sorted(tuple(r) for r in read_kv_postings(spark, sink).collect())
-        == want_post
-    )
-    assert {
-        r["kv"]: r["df"] for r in read_kv_dfreq(spark, sink).collect()
-    } == want_dfs
-
-    # a completed repair is a no-op
-    again = repair_events_sink(spark, sink)
-    assert again == {
-        "rollup_repaired": [],
-        "kv_repaired": [],
-        "dfreq_repaired": [],
-        "stale_repaired": [],
-        "orphans_removed": {},
-        "receipts_refreshed": [],
-    }
-
-    # review r8 pass-3 #5: a reused batch id (checkpoint loss) that
-    # re-lands WITH kv entries must invalidate its zero-entry sentinel
-    # — the audit sees its missing dfreq again and the repair heals it
-    # and scrubs the sentinel
-    from venus_spark.streaming import _read_zero_kv_batches
-
-    assert set(_read_zero_kv_batches(sink)) == {2}
-    reused = spark.createDataFrame(
-        [("type=buy", 6), ("?type", 6)], "kv string, event_id long"
-    )
-    _write_idempotent(reused, os.path.join(sink, "events_kv_postings"), 2)
-    assert audit_events_sink(sink)["dfreq_missing"] == [2]
-    # VERDICT r8 #1 upgraded this resolution: the batch's commit
-    # receipt (recorded kv fingerprint = absent) exposes the injected
-    # postings as STALE, and the default repair re-derives the batch
-    # from its FACTS — which derive zero entries — so the phantom
-    # postings are REMOVED and the zero sentinel re-confirmed at the
-    # current fingerprint (previously the repair trusted the present
-    # partition and only recounted dfreq from it).
-    assert audit_events_sink(sink)["stale"] == [2]
-    out3 = repair_events_sink(spark, sink)
-    assert out3["stale_repaired"] == [2]
-    assert set(_read_zero_kv_batches(sink)) == {2}
-    dfs3 = {r["kv"]: r["df"] for r in read_kv_dfreq(spark, sink).collect()}
-    assert dfs3.get("type=buy", 0) == want_dfs.get("type=buy", 0)
-
-    # review r8 pass-4 #1: a reused batch id that re-lands DIFFERENT
-    # facts but crashes BEFORE its kv write must void the zero
-    # confirmation via the facts fingerprint — without it, the one
-    # crash window this machinery exists to close becomes undetectable
-    zero_facts = spark.createDataFrame(
-        [(9, None, 3, None, 9.0, None)],
-        "event_id long, ts timestamp_ntz, user_id long, "
-        "event_type string, value double, props string",
-    )
-    _write_idempotent(zero_facts, os.path.join(sink, "events"), 9)
-    assert repair_events_sink(spark, sink)["kv_repaired"] == []
-    assert 9 in _read_zero_kv_batches(sink)  # confirmed zero
-    real_facts = spark.createDataFrame(
-        [(9, None, 4, "click", 9.0, None)],
-        "event_id long, ts timestamp_ntz, user_id long, "
-        "event_type string, value double, props string",
-    )
-    _write_idempotent(real_facts, os.path.join(sink, "events"), 9)
-    # facts rewritten, kv never landed (the crash): the audit must see
-    # batch 9 as missing again — AND, because the first repair recorded
-    # batch 9's commit receipt, the facts rewrite also flags it STALE,
-    # so the stale pass (which re-derives everything from the current
-    # facts) is the one that heals it; the per-table missing passes
-    # skip stale batches to avoid double work (review r9 pass-3 #3)
-    audit4 = audit_events_sink(sink)
-    assert 9 in audit4["kv_missing"] and 9 in audit4["stale"]
-    out4 = repair_events_sink(spark, sink)
-    assert out4["stale_repaired"] == [9] and out4["kv_repaired"] == []
-    assert 9 not in _read_zero_kv_batches(sink)
-    assert ("type=click", 9) in {
-        tuple(r) for r in read_kv_postings(spark, sink).collect()
-    }
-
-    # review r8 pass-5 #3: a reused batch id whose facts were rewritten
-    # AFTER its entry-bearing derived writes leaves PRESENT-but-stale
-    # partitions the partition-set audit cannot see — only deep
-    # (value-level) repair converges them
-    rewritten = spark.createDataFrame(
-        [(7, None, 7, "scroll", 7.0, None)],
-        "event_id long, ts timestamp_ntz, user_id long, "
-        "event_type string, value double, props string",
-    )
-    # a PRE-UPGRADE sink: no commit receipts, so the partition-set
-    # audit (and the receipt-driven stale pass) cannot see the rewrite
-    # — deep repair remains the only cure there. The receipt-present
-    # path is pinned by test_sink_fingerprint_guard_excludes_orphans.
-    os.remove(os.path.join(sink, "_batch_fingerprints.json"))
-    _write_idempotent(rewritten, os.path.join(sink, "events"), 0)
-    shallow = repair_events_sink(spark, sink)
-    assert shallow["kv_repaired"] == []  # the blind spot, by design
-    assert shallow["stale_repaired"] == []  # no receipts -> no claim
-    assert ("type=scroll", 7) not in {
-        tuple(r) for r in read_kv_postings(spark, sink).collect()
-    }
-    deep = repair_events_sink(spark, sink, deep=True)
-    assert sorted(deep["deep_rewritten"]) == audit_events_sink(sink)["events"]
-    facts_now = spark.read.parquet(os.path.join(sink, "events")).drop(
-        "_batch_id"
-    )
-    assert sorted(
-        tuple(r) for r in read_kv_postings(spark, sink).collect()
-    ) == sorted(
-        tuple(r)
-        for r in _events_kv_rows(
-            facts_now, allow_missing_props=True
-        ).collect()
-    )
-    got_roll = {
-        r["bucket_ts"]: (r["n"], r["total_value"])
-        for r in read_hourly_rollup(spark, sink).collect()
-    }
-    from venus_spark.functions import dsum as _dsum
-
-    want_roll2 = {
-        r["bucket_ts"]: (r["n"], r["total_value"])
-        for r in facts_now.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("bucket_ts")
-        )
-        .agg(F.count("*").alias("n"), _dsum("value").alias("total_value"))
-        .collect()
-    }
-    assert got_roll == want_roll2
-
-
 def test_streaming_kv_postings_empty_batch_and_reader_fallback(
     spark, tmp_path
 ):
-    """Review r7 pass-4 #1: a NON-empty batch can derive ZERO kv rows
-    (every key absent: null event_type, uid-absent users, no props) —
-    the kv write must be skipped (an empty dynamic-overwrite write
-    lands no data files and breaks schema inference), the reader must
-    serve an empty TYPED relation in the meantime, and the fact table
-    and rollup must land normally."""
+    """A NON-empty batch can derive ZERO kv rows (every key absent: null
+    event_type, uid-absent users, no props): the postings reader serves
+    an empty TYPED relation, the dfreq write is skipped, and the fact
+    table and rollup land normally."""
     import json as _json
 
     from venus_spark.streaming import (
+        events_sink_commits,
+        read_kv_dfreq,
         read_kv_postings,
-        read_sink_table,
+        read_sink_events,
         start_events_rollup_ingest,
     )
 
@@ -1019,10 +741,12 @@ def test_streaming_kv_postings_empty_batch_and_reader_fallback(
         trigger_seconds=None,
     )
     assert q.awaitTermination(180)
-    assert read_sink_table(spark, sink, "events").count() == 1
+    assert read_sink_events(spark, sink).count() == 1
     post = read_kv_postings(spark, sink)  # must not raise
     assert post.count() == 0
     assert [f.name for f in post.schema.fields] == ["kv", "event_id"]
+    assert events_sink_commits(sink)["0"]["events_kv_dfreq"] == []
+    assert read_kv_dfreq(spark, sink).count() == 0
 
     # the next batch's postings land and the reader switches over
     (landing / "b1.jsonl").write_text(
@@ -1043,734 +767,325 @@ def test_streaming_kv_postings_empty_batch_and_reader_fallback(
     assert got == [("?type", 2), ("?uid", 2), ("type=click", 2), ("uid=4", 2)]
 
 
-def test_sink_fingerprint_guard_excludes_orphans(spark, tmp_path, monkeypatch):
-    """VERDICT r8 #1 (the always-on orphan/stale guard): the key plans
-    answer from the postings with no fact-table recheck, and the sink's
-    kv-FIRST write ordering means a crash between the kv and facts
-    writes whose checkpoint is never replayed leaves ORPHAN presence
-    rows — which used to inflate json_key_discovery_live /
-    json_key_frequency_live until an explicit repair ran. The per-batch
-    commit receipt + partition listing now detect orphan AND stale kv
-    partitions at read time and exclude them; the repair heals both
-    permanently. The containment plan stays on the UNguarded read by
-    design (its recheck needs postings ⊇ landed facts)."""
-    import json as _json
+# ---------------------------------------------------------------------------
+# The events sink's commit manifest: a batch's four tables (facts, hourly
+# rollup, kv postings, dfreq) become visible together or not at all.
+# ---------------------------------------------------------------------------
+
+LIVE_EVENT_PLANS = (
+    "json_containment_indexed_live",
+    "json_key_discovery_live",
+    "json_key_frequency_live",
+)
+
+
+def _events_corpus(spark, tmp_path, monkeypatch) -> str:
+    """A corpus dir holding the sf0.001 base events, with its prepared
+    layouts built under ``tmp_path``."""
     import os
 
     from venus_spark import prepared
+
+    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
+    sf = str(tmp_path / "sf")
+    os.makedirs(sf)
+    for t in ("events", "documents", "embeddings"):
+        os.symlink(
+            os.path.join("/root/testdata/sf0.001", f"{t}.parquet"),
+            os.path.join(sf, f"{t}.parquet"),
+        )
+    return sf
+
+
+def _stream_batch(spark, first_id: int, n: int, kv: bool = True):
+    """``n`` props-bearing streamed events from ``first_id`` on. Each
+    derives kv entries (``k=7``, ``type=click``, and ``uid`` unless its
+    user id is a multiple of 3); with ``kv=False`` every key is absent
+    and the batch derives none."""
+    import datetime as dt
+
+    from venus_spark.streaming import EVENTS_STREAM_SCHEMA
+
+    rows = [
+        (
+            first_id + i,
+            dt.datetime(2024, 1, 1, 10 + i % 3, i),
+            7 + i if kv else 3 * (i + 1),
+            "click" if kv else None,
+            1.0 + i,
+            '{"k": 7}' if kv else None,
+        )
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, EVENTS_STREAM_SCHEMA)
+
+
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()))
+
+
+def _sink_view(spark, sf: str) -> dict:
+    """Everything a reader of the corpus's events sink sees: the four
+    sink readers and the live containment and key plans."""
     from venus_spark.plans import all_plans
     from venus_spark.plans import venus_surface as vs
     from venus_spark.streaming import (
-        EVENTS_STREAM_SCHEMA,
-        _write_idempotent,
-        audit_events_sink,
         events_stream_sink_dir,
+        read_hourly_rollup,
+        read_kv_dfreq,
         read_kv_postings,
-        read_kv_postings_guarded,
-        repair_events_sink,
-        sink_kv_exclusions,
-        start_events_rollup_ingest,
+        read_sink_events,
     )
 
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    src = "/root/testdata/sf0.001"
-    sf = str(tmp_path / "sf")
-    spark.read.parquet(os.path.join(src, "events.parquet")).write.parquet(
-        os.path.join(sf, "events.parquet")
-    )
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "b0.jsonl").write_text(
-        "\n".join(
-            _json.dumps(
-                {
-                    "event_id": 2_000_000 + i,
-                    "ts": f"2024-01-01 10:0{i}:00",
-                    "user_id": 7,
-                    "event_type": "click",
-                    "value": 1.0,
-                    "props": '{"k": 7}',
-                }
-            )
-            for i in (1, 2)
-        )
-    )
     sink = events_stream_sink_dir(sf)
-    q = start_events_rollup_ingest(
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA).json(str(landing)),
-        sink_dir=sink,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        trigger_seconds=None,
-    )
-    assert q.awaitTermination(180)
-    # the stream recorded the batch's commit receipt
-    assert os.path.exists(os.path.join(sink, "_batch_fingerprints.json"))
-
     plans = all_plans()
     vs._KV_DF_CACHE.clear()
-
-    def freqs():
-        return {
-            r["key"]: r["n_docs"]
-            for r in plans["json_key_frequency_live"].fn(spark, sf).collect()
-        }
-
-    def keys():
-        return {
-            r["key"]
-            for r in plans["json_key_discovery_live"].fn(spark, sf).collect()
-        }
-
-    healthy = freqs()
-    assert sink_kv_exclusions(sink) == set()
-
-    # THE CRASH: a batch's kv postings landed (kv-first), its facts
-    # never did, and the checkpoint that would replay them is lost —
-    # orphan presence rows for events that do not exist
-    _write_idempotent(
-        spark.createDataFrame(
-            [("?phantom", 9_000_001), ("phantom=1", 9_000_001)],
-            "kv string, event_id long",
-        ),
-        os.path.join(sink, "events_kv_postings"),
-        77,
-    )
-    # the raw (unguarded) postings DO contain the orphan rows — this is
-    # what used to inflate the key plans
-    assert ("?phantom", 9_000_001) in {
-        tuple(r) for r in read_kv_postings(spark, sink).collect()
+    view = {
+        "events": _rows(read_sink_events(spark, sink)),
+        "postings": _rows(read_kv_postings(spark, sink)),
+        "dfreq": _rows(read_kv_dfreq(spark, sink)),
+        "rollup": _rows(read_hourly_rollup(spark, sink)),
     }
-    # ...but the guard names the orphan batch and the guarded read and
-    # both live key plans exclude it
-    assert sink_kv_exclusions(sink) == {77}
-    assert ("?phantom", 9_000_001) not in {
-        tuple(r) for r in read_kv_postings_guarded(spark, sink).collect()
-    }
-    assert "phantom" not in keys()
-    assert freqs() == healthy
-    assert audit_events_sink(sink)["orphans"] == {
-        "events_kv_postings": [77]
-    }
-    # containment soundness is unaffected: the phantom needle rechecks
-    # against the facts and returns empty (never an invented row)
-    vs._KV_DF_CACHE.clear()
-    assert (
-        plans["json_containment_indexed_live"].fn(spark, sf).count() >= 0
-    )
-
-    # THE STALE REWRITE: a reused batch id (checkpoint loss) rewrites
-    # the streamed batch's kv partition — new file set ≠ the commit
-    # receipt — while its facts stay the landed generation
-    _write_idempotent(
-        spark.createDataFrame(
-            [("?phantom2", 9_000_002)], "kv string, event_id long"
-        ),
-        os.path.join(sink, "events_kv_postings"),
-        0,
-    )
-    excl = sink_kv_exclusions(sink)
-    assert excl == {0, 77}
-    assert "phantom2" not in keys()
-    # snapshot semantics: the stale batch's (legitimate) contributions
-    # drop out too until the repair — bounded under-report, never an
-    # invented key
-    assert freqs()["k"] <= healthy["k"]
-    assert audit_events_sink(sink)["stale"] == [0]
-
-    # the repair heals both permanently: orphan removed, stale batch
-    # re-derived from its facts, receipts refreshed
-    rep = repair_events_sink(spark, sink)
-    assert rep["orphans_removed"] == {"events_kv_postings": [77]}
-    assert rep["stale_repaired"] == [0]
-    assert sink_kv_exclusions(sink) == set()
-    vs._KV_DF_CACHE.clear()
-    assert freqs() == healthy
-    assert "phantom" not in keys() and "phantom2" not in keys()
+    for name in LIVE_EVENT_PLANS:
+        view[name] = _rows(plans[name].fn(spark, sf))
+    return view
 
 
-def test_malformed_receipt_entries_degrade_never_crash(tmp_path):
-    """Review r10 pass-3 #1: receipts are ADVISORY — a foreign or
-    hand-repaired entry shape (dict missing 'rows'/'files', non-list
-    files, the short-lived 'xor' field) must degrade to names-only /
-    conservative-stale, never raise into the query path or the
-    nightly audit. Pure-metadata test: no Spark session needed."""
-    import json as _json
+def _attempt_dirs(sink: str) -> set[tuple[str, str]]:
     import os
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    return {
+        (table, d)
+        for table in os.listdir(sink)
+        if os.path.isdir(os.path.join(sink, table))
+        for d in os.listdir(os.path.join(sink, table))
+    }
 
-    from venus_spark.streaming import (
-        _sink_receipt_divergence,
-        sink_kv_exclusions,
-    )
 
-    sink = str(tmp_path / "sink")
-    for table, bid in (("events", 0), ("events_kv_postings", 0)):
-        part = os.path.join(sink, table, f"_batch_id={bid}")
-        os.makedirs(part)
-        pq.write_table(
-            pa.table({"kv": ["k=1"], "event_id": [1]}),
-            os.path.join(part, "data.parquet"),
-        )
+def test_uncommitted_batch_is_invisible_until_retry(spark, tmp_path, monkeypatch):
+    """A crash inside a batch, after some of its table writes and before
+    its manifest commit (the checkpoint never replays it), leaves the
+    batch invisible to the containment plan, the key plans and the
+    rollup. The retry lands it exactly once."""
+    from venus_spark import prepared
+    from venus_spark import streaming as st
 
-    _UNSET = object()
+    sf = _events_corpus(spark, tmp_path, monkeypatch)
+    sink = st.events_stream_sink_dir(sf)
+    b0 = _stream_batch(spark, 2_000_000, 6)
+    b1 = _stream_batch(spark, 2_000_100, 6)
+    st.write_events_batch(b0, sink, 0)
+    before = _sink_view(spark, sf)
 
-    def write_record(entry, batch_level=_UNSET):
-        with open(os.path.join(sink, "_batch_fingerprints.json"), "w") as f:
-            # the events entry NAME-MATCHES the on-disk partition so
-            # the malformed kv entry is what drives classification —
-            # without it every case short-circuits to stale on the
-            # missing events claim and the code under test never runs
-            # (review r10 pass-4 #2: the first version of this test
-            # was vacuous exactly that way)
-            _json.dump(
-                {
-                    "0": batch_level
-                    if batch_level is not _UNSET
-                    else {
-                        "events": ["data.parquet"],
-                        "events_kv_postings": entry,
-                    }
-                },
-                f,
-            )
+    def crash(*_a, **_kw):
+        raise RuntimeError("crash")
 
-    # every malformed ENTRY shape: no crash, batch reads as stale
-    # (name-mismatch with no usable digest = conservative)
-    for entry in (
-        {"sum": 1},                               # missing files + rows
-        {"files": ["other.parquet"], "sum": 2},   # missing rows
-        {"files": ["other.parquet"], "rows": 1, "xor": 3},  # old field
-        {"files": "not-a-list", "rows": 1, "sum": 4},
-        None,
-        "garbage",
-    ):
-        write_record(entry)
-        stale, drift = _sink_receipt_divergence(sink)
-        assert stale == {0} and drift == set()
-        assert 0 in sink_kv_exclusions(sink)
+    # after the facts and rollup writes, before the postings write
+    with monkeypatch.context() as m:
+        m.setattr(prepared, "_events_kv_rows", crash)
+        with pytest.raises(RuntimeError):
+            st.write_events_batch(b1, sink, 1)
+    assert _sink_view(spark, sf) == before
+    # after all four writes, before the commit
+    with monkeypatch.context() as m:
+        m.setattr(st, "write_json_atomic", crash)
+        with pytest.raises(RuntimeError):
+            st.write_events_batch(b1, sink, 1)
+    assert _sink_view(spark, sf) == before
+    assert len({d for t, d in _attempt_dirs(sink) if t == "events"}) == 3
 
-    # malformed BATCH-level values (bid mapped to a non-dict) degrade
-    # the same way (review r10 pass-4 #1)
-    for batch_level in (["data.parquet"], None, "garbage", 7):
-        write_record(None, batch_level=batch_level)
-        stale, drift = _sink_receipt_divergence(sink)
-        assert stale == {0} and drift == set()
-        assert 0 in sink_kv_exclusions(sink)
-
-    # a well-formed digest entry at WRONG row count short-circuits to
-    # stale via the footer gate (no data pages read to prove it)
-    write_record({"files": ["other.parquet"], "rows": 99, "sum": 5})
-    stale, drift = _sink_receipt_divergence(sink)
-    assert stale == {0} and drift == set()
-
-    # and a well-formed entry whose names + digest MATCH reality is
-    # healthy — proving the loop really reaches the kv entry (the
-    # non-vacuity check for everything above)
-    from venus_spark.streaming import _partition_content_digest
-
-    good = _partition_content_digest(
-        sink, "events_kv_postings", 0, ["data.parquet"]
-    )
-    write_record({"files": ["data.parquet"], **good})
-    stale, drift = _sink_receipt_divergence(sink)
-    assert stale == set() and drift == set()
-    # same rows recorded under DIFFERENT names -> drift (digest clears)
-    write_record({"files": ["old-name.parquet"], **good})
-    stale, drift = _sink_receipt_divergence(sink)
-    assert stale == set() and drift == {0}
+    st.write_events_batch(b1, sink, 1)
+    after = _sink_view(spark, sf)
+    assert after["events"] == sorted(before["events"] + _rows(b1))
+    assert sum(r[1] for r in after["rollup"]) == 12
+    streamed = [
+        r[0] for r in after["json_containment_indexed_live"] if r[0] >= 2_000_000
+    ]
+    # k=7, click, uid present: user ids 7, 8, 10, 11 of each batch
+    assert streamed == [
+        b + i for b in (2_000_000, 2_000_100) for i in (0, 1, 3, 4)
+    ]
+    cold_type = dict(before["json_key_frequency_live"])["type"]
+    assert dict(after["json_key_frequency_live"])["type"] == cold_type + 6
 
 
 def test_replay_rewrite_same_rows_not_stale_phantom_excluded(
     spark, tmp_path, monkeypatch
 ):
-    """VERDICT r9 #1 (content-digest receipts close the r9 KNOWN
-    CONSERVATIVE WINDOW): a checkpoint REPLAY of a fully-landed batch
-    rewrites its partitions with fresh uuid file names but byte-
-    identical rows — a query running MID-replay (receipt not yet
-    refreshed) must KEEP the replayed batch's keys, because the
-    receipt's row-content digest distinguishes the replay from a
-    reused id's phantom injection, which must STAY excluded. Legacy
-    names-only receipts (pre-digest sinks) keep the conservative r9
-    behavior. Reference intent: GIN entries are MVCC-consistent with
-    their heap rows — a re-landed identical row serves identically
-    (migration 37716151a213 :37,52,73)."""
-    import json as _json
-    import os
+    """A replay that rewrites a committed batch with the same rows leaves
+    every reader's rows unchanged. A reused batch id with different rows
+    (a restart after checkpoint loss) shows only the new generation in
+    all four tables: no phantom posting, partial or fact row of the old
+    one stays visible to any reader."""
+    from venus_spark import streaming as st
 
-    from venus_spark import prepared
-    from venus_spark.plans import all_plans
-    from venus_spark.plans import venus_surface as vs
+    sf = _events_corpus(spark, tmp_path, monkeypatch)
+    sink = st.events_stream_sink_dir(sf)
+    st.write_events_batch(_stream_batch(spark, 2_000_000, 6), sink, 0)
+    st.write_events_batch(_stream_batch(spark, 2_000_100, 6), sink, 1)
+    view = _sink_view(spark, sf)
+
+    st.write_events_batch(_stream_batch(spark, 2_000_100, 6), sink, 1)
+    assert _sink_view(spark, sf) == view
+
+    st.write_events_batch(_stream_batch(spark, 2_000_500, 3), sink, 1)
+    new = _sink_view(spark, sf)
+    ids = {r[0] for r in new["events"]}
+    assert ids == set(range(2_000_000, 2_000_006)) | set(range(2_000_500, 2_000_503))
+    assert {r[1] for r in new["postings"]} == ids
+    assert sum(r[1] for r in new["rollup"]) == 9
+    assert dict(new["dfreq"])["type=click"] == 9
+    streamed = [
+        r[0] for r in new["json_containment_indexed_live"] if r[0] >= 2_000_000
+    ]
+    assert streamed == [2_000_000, 2_000_001, 2_000_003, 2_000_004, 2_000_500, 2_000_501]
+    assert dict(new["json_key_frequency_live"])["type"] == (
+        dict(view["json_key_frequency_live"])["type"] - 3
+    )
+
+
+def test_zero_entry_replay_clears_prior_generation_kv(spark, tmp_path):
+    """A reused batch id whose new generation derives ZERO kv entries
+    leaves no posting or dfreq partial of the old generation visible;
+    its facts and rollup are the new generation's alone."""
     from venus_spark.streaming import (
-        EVENTS_STREAM_SCHEMA,
-        _read_batch_fp_record,
-        _table_partition_fp,
-        _write_batch_fp_record,
-        _write_idempotent,
-        events_stream_sink_dir,
-        sink_kv_exclusions,
-        start_events_rollup_ingest,
+        read_hourly_rollup,
+        read_kv_dfreq,
+        read_kv_postings,
+        read_sink_events,
+        write_events_batch,
     )
 
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    src = "/root/testdata/sf0.001"
-    sf = str(tmp_path / "sf")
-    spark.read.parquet(os.path.join(src, "events.parquet")).write.parquet(
-        os.path.join(sf, "events.parquet")
-    )
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "b0.jsonl").write_text(
-        "\n".join(
-            _json.dumps(
-                {
-                    "event_id": 2_000_000 + i,
-                    "ts": f"2024-01-01 10:0{i}:00",
-                    "user_id": 7,
-                    "event_type": "click",
-                    "value": 1.0,
-                    "props": '{"k": 7}',
-                }
-            )
-            for i in (1, 2)
-        )
-    )
-    sink = events_stream_sink_dir(sf)
-    q = start_events_rollup_ingest(
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA).json(str(landing)),
-        sink_dir=sink,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        trigger_seconds=None,
-    )
-    assert q.awaitTermination(180)
-
-    plans = all_plans()
-
-    def freqs():
-        vs._KV_DF_CACHE.clear()
-        return {
-            r["key"]: r["n_docs"]
-            for r in plans["json_key_frequency_live"].fn(spark, sf).collect()
-        }
-
-    healthy = freqs()
-    assert sink_kv_exclusions(sink) == set()
-    rec0 = _read_batch_fp_record(sink)[0]
-    assert isinstance(rec0["events_kv_postings"], dict)  # digest-bearing
-
-    # THE MID-REPLAY STATE: both the kv and facts partitions rewritten
-    # with the SAME rows under fresh names (and a different file
-    # layout), the end-of-batch receipt refresh not yet run
-    for table in ("events_kv_postings", "events"):
-        part = os.path.join(sink, table, "_batch_id=0")
-        rows = spark.read.parquet(part)
-        _write_idempotent(
-            rows.repartition(2), os.path.join(sink, table), 0
-        )
-    assert (
-        _table_partition_fp(sink, "events_kv_postings", 0)
-        != rec0["events_kv_postings"]["files"]
-    )  # names DID change — only the digest can clear the batch
-    # NOT stale: the digest matches, the batch's keys stay served
-    assert sink_kv_exclusions(sink) == set()
-    assert freqs() == healthy
-
-    # ...but the audit names the drift and the repair refreshes the
-    # receipt (review r10 #2: without this, a replay that crashed
-    # before its own receipt refresh would leave every future check
-    # re-paying the digest read forever)
-    from venus_spark.streaming import audit_events_sink, repair_events_sink
-
-    audit = audit_events_sink(sink)
-    assert audit["receipt_drift"] == [0] and audit["stale"] == []
-    rep0 = repair_events_sink(spark, sink)
-    assert rep0["receipts_refreshed"] == [0]
-    audit = audit_events_sink(sink)
-    assert audit["receipt_drift"] == [] and audit["stale"] == []
-    assert sink_kv_exclusions(sink) == set()
-    assert freqs() == healthy
-
-    # THE PHANTOM: the same reused id re-lands DIFFERENT kv rows —
-    # digest mismatch, excluded exactly as before
-    _write_idempotent(
-        spark.createDataFrame(
-            [("?phantom", 9_000_009)], "kv string, event_id long"
-        ),
-        os.path.join(sink, "events_kv_postings"),
-        0,
-    )
-    assert sink_kv_exclusions(sink) == {0}
-    assert "phantom" not in freqs()
-
-    # LEGACY receipt (names-only, pre-digest sink): restore the real
-    # rows + receipt, then downgrade the receipt format — a same-rows
-    # fresh-name rewrite now reads as stale (the conservative r9 rule;
-    # absent a digest the record cannot clear it)
-    from venus_spark.streaming import _record_batch_fps
-
-    facts0 = spark.read.parquet(os.path.join(sink, "events", "_batch_id=0"))
-    from venus_spark.prepared import _events_kv_rows
-
-    _write_idempotent(
-        _events_kv_rows(facts0, allow_missing_props=True),
-        os.path.join(sink, "events_kv_postings"),
-        0,
-    )
-    _record_batch_fps(sink, [0])
-    assert sink_kv_exclusions(sink) == set()
-    legacy = {
-        bid: {
-            t: (rec["files"] if isinstance(rec, dict) else rec)
-            for t, rec in fps.items()
-        }
-        for bid, fps in _read_batch_fp_record(sink).items()
-    }
-    _write_batch_fp_record(sink, legacy)
-    part = os.path.join(sink, "events_kv_postings", "_batch_id=0")
-    _write_idempotent(
-        spark.read.parquet(part).repartition(2),
-        os.path.join(sink, "events_kv_postings"),
-        0,
-    )
-    assert sink_kv_exclusions(sink) == {0}
+    sink = str(tmp_path / "sink")
+    write_events_batch(_stream_batch(spark, 100, 4), sink, 0)
+    assert read_kv_postings(spark, sink).count() > 0
+    write_events_batch(_stream_batch(spark, 200, 3, kv=False), sink, 0)
+    assert read_kv_postings(spark, sink).count() == 0
+    assert read_kv_dfreq(spark, sink).count() == 0
+    assert [r[0] for r in _rows(read_sink_events(spark, sink))] == [200, 201, 202]
+    assert sum(r["n"] for r in read_hourly_rollup(spark, sink).collect()) == 3
 
 
-def test_maintain_auto_heals_sink_divergence(spark, tmp_path, monkeypatch, capsys):
-    """VERDICT r8 #5: the nightly (`maintain auto`) runs the sink
-    audit+repair step — it heals the lost-checkpoint orphan end-to-end
-    and reports 'consistent' on the healthy re-run."""
-    import json as _json
-    import os
-
-    from venus_spark import prepared
-    from venus_spark.__main__ import main
-    from venus_spark.streaming import (
-        EVENTS_STREAM_SCHEMA,
-        _write_idempotent,
-        events_stream_sink_dir,
-        sink_kv_exclusions,
-        start_events_rollup_ingest,
-    )
-
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    src = "/root/testdata/sf0.001"
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    for t in ("events", "documents", "embeddings"):
-        os.symlink(
-            os.path.join(src, f"{t}.parquet"),
-            os.path.join(sf, f"{t}.parquet"),
-        )
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "b0.jsonl").write_text(
-        _json.dumps(
-            {
-                "event_id": 2_000_001,
-                "ts": "2024-01-01 10:01:00",
-                "user_id": 7,
-                "event_type": "click",
-                "value": 1.0,
-                "props": '{"k": 7}',
-            }
-        )
-    )
-    sink = events_stream_sink_dir(sf)
-    q = start_events_rollup_ingest(
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA).json(str(landing)),
-        sink_dir=sink,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        trigger_seconds=None,
-    )
-    assert q.awaitTermination(180)
-    # the crash-window orphan
-    _write_idempotent(
-        spark.createDataFrame(
-            [("?phantom", 9_000_001)], "kv string, event_id long"
-        ),
-        os.path.join(sink, "events_kv_postings"),
-        55,
-    )
-    assert sink_kv_exclusions(sink) == {55}
-    rc = main(["maintain", "auto", "--sf", sf])
-    out = capsys.readouterr().out
-    assert rc == 0, out
-    assert "sink-repair repaired" in out and "orphans=1" in out
-    assert sink_kv_exclusions(sink) == set()
-    assert not os.path.isdir(
-        os.path.join(sink, "events_kv_postings", "_batch_id=55")
-    )
-    # healthy re-run: the step reports consistency, nothing to do
-    rc2 = main(["maintain", "auto", "--sf", sf])
-    assert "sink-repair consistent" in capsys.readouterr().out
-    assert rc2 == 0
-
-
-def test_zero_entry_replay_clears_prior_generation_kv(
-    spark, tmp_path, monkeypatch
+def test_maintain_auto_sweeps_unreferenced_attempts(
+    spark, tmp_path, monkeypatch, capsys
 ):
-    """Review r9 pass-4 #1: a REUSED batch id (checkpoint loss) whose
-    new generation derives ZERO kv entries used to skip the kv write
-    and leave the prior generation's kv/dfreq partitions behind — and
-    the end-of-batch commit receipt then fingerprinted those stale
-    files as current, certifying phantom postings invisibly to the
-    guard, the audit, AND the default repair. The zero-entry branch
-    now removes its own bid's leftover partitions before the receipt."""
-    import json as _json
-    import os
+    """The nightly (``maintain auto``) deletes exactly the sink's attempt
+    dirs no manifest entry names (a crashed attempt and a generation a
+    reused batch id superseded), no reader's result changes, and a
+    second run deletes nothing."""
+    from venus_spark import streaming as st
+    from venus_spark.__main__ import main
+
+    sf = _events_corpus(spark, tmp_path, monkeypatch)
+    sink = st.events_stream_sink_dir(sf)
+    st.write_events_batch(_stream_batch(spark, 2_000_000, 6), sink, 0)
+    st.write_events_batch(_stream_batch(spark, 2_000_100, 6), sink, 1)
+    live = _attempt_dirs(sink)
+    # superseded: batch 1 lands a new generation
+    st.write_events_batch(_stream_batch(spark, 2_000_200, 4), sink, 1)
+    superseded = {(t, d) for t, d in live if d.startswith("1-")}
+    live = _attempt_dirs(sink) - superseded
+
+    def crash(*_a, **_kw):
+        raise RuntimeError("crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(st, "write_json_atomic", crash)
+        with pytest.raises(RuntimeError):
+            st.write_events_batch(_stream_batch(spark, 2_000_300, 4), sink, 2)
+    crashed = _attempt_dirs(sink) - live - superseded
+    assert len(superseded) == 4 and len(crashed) == 4
+    view = _sink_view(spark, sf)
+
+    assert main(["maintain", "auto", "--sf", sf]) == 0
+    assert "sink-sweep 8 dir(s)" in capsys.readouterr().out
+    assert _attempt_dirs(sink) == live
+    assert _sink_view(spark, sf) == view
+
+    assert main(["maintain", "auto", "--sf", sf]) == 0
+    assert "sink-sweep 0 dir(s)" in capsys.readouterr().out
+    assert _attempt_dirs(sink) == live
+
+
+def test_reader_during_a_batch_sees_all_of_it_or_none(spark, tmp_path, monkeypatch):
+    """A reader planned while a micro-batch is half written (paused after
+    its facts write, before its rollup write) sees the batch in all four
+    tables or in none: the rollup's total count equals the fact count,
+    and the postings name exactly the fact ids."""
+    import threading
 
     from venus_spark import prepared
-    from venus_spark.plans import all_plans
-    from venus_spark.plans import venus_surface as vs
     from venus_spark.streaming import (
-        EVENTS_STREAM_SCHEMA,
-        audit_events_sink,
-        events_stream_sink_dir,
-        sink_kv_exclusions,
+        read_hourly_rollup,
+        read_kv_postings,
+        read_sink_events,
         start_events_rollup_ingest,
     )
 
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    src = "/root/testdata/sf0.001"
-    sf = str(tmp_path / "sf")
-    spark.read.parquet(os.path.join(src, "events.parquet")).write.parquet(
-        os.path.join(sf, "events.parquet")
-    )
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    write_jsonl(landing / "b0.jsonl", [event(i, "2024-01-01 10:00:00", user=4) for i in (1, 2, 3)])
+    write_jsonl(landing / "b1.jsonl", [event(i, "2024-01-01 11:00:00", user=4) for i in (4, 5, 6)])
+    sink = str(tmp_path / "sink")
 
-    def run_stream(landing, ckpt):
-        q = start_events_rollup_ingest(
-            spark.readStream.schema(EVENTS_STREAM_SCHEMA).json(str(landing)),
-            sink_dir=sink,
-            checkpoint_dir=str(ckpt),
-            trigger_seconds=None,
-        )
+    paused, resume = threading.Event(), threading.Event()
+    partials = prepared._hourly_partial_rows
+    calls = []
+
+    def pausing(batch):
+        calls.append(batch)
+        if len(calls) == 2:  # the second batch, after its facts landed
+            paused.set()
+            resume.wait(120)
+        return partials(batch)
+
+    monkeypatch.setattr(prepared, "_hourly_partial_rows", pausing)
+    q = start_events_rollup_ingest(
+        read_event_stream(spark, landing),
+        sink_dir=sink,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        trigger_seconds=None,
+    )
+    try:
+        assert paused.wait(180), "the second batch never reached its rollup write"
+        ids = {r["event_id"] for r in read_sink_events(spark, sink).collect()}
+        n = sum(r["n"] for r in read_hourly_rollup(spark, sink).collect())
+        posted = {r["event_id"] for r in read_kv_postings(spark, sink).collect()}
+    finally:
+        resume.set()
         assert q.awaitTermination(180)
-
-    # generation 1 of batch id 0: entry-bearing (phantom-to-be)
-    landing1 = tmp_path / "landing1"
-    landing1.mkdir()
-    (landing1 / "b0.jsonl").write_text(
-        _json.dumps(
-            {
-                "event_id": 9_000_001,
-                "ts": "2024-01-01 10:01:00",
-                "user_id": 7,
-                "event_type": "click",
-                "value": 1.0,
-                "props": '{"k": 7}',
-            }
-        )
-    )
-    sink = events_stream_sink_dir(sf)
-    run_stream(landing1, tmp_path / "ckpt1")
-    assert os.path.isdir(os.path.join(sink, "events_kv_postings", "_batch_id=0"))
-
-    # THE CRASH: checkpoint lost; the restarted stream reuses batch id
-    # 0 for DIFFERENT rows that derive zero kv entries (null type,
-    # uid-absent user, null props)
-    landing2 = tmp_path / "landing2"
-    landing2.mkdir()
-    (landing2 / "b0.jsonl").write_text(
-        _json.dumps(
-            {
-                "event_id": 9_000_009,
-                "ts": "2024-01-01 11:01:00",
-                "user_id": 3,
-                "event_type": None,
-                "value": 2.0,
-                "props": None,
-            }
-        )
-    )
-    run_stream(landing2, tmp_path / "ckpt2")
-
-    # the prior generation's kv/dfreq partitions are GONE — no phantom
-    # postings for event 9_000_001 (whose facts no longer exist)
-    for t in ("events_kv_postings", "events_kv_dfreq"):
-        assert not os.path.isdir(os.path.join(sink, t, "_batch_id=0")), t
-    # and therefore: nothing for the guard or the audit to flag, and
-    # the live key plans report base-only keys
-    assert sink_kv_exclusions(sink) == set()
-    audit = audit_events_sink(sink)
-    assert audit["stale"] == [] and audit["orphans"] == {}
-    plans = all_plans()
-    vs._KV_DF_CACHE.clear()
-    live = {
-        r["key"]: r["n_docs"]
-        for r in plans["json_key_frequency_live"].fn(spark, sf).collect()
-    }
-    cold = {
-        r["key"]: r["n_docs"]
-        for r in plans["json_key_frequency"].fn(spark, sf).collect()
-    }
-    assert live == cold  # the streamed generation-2 batch derives nothing
+    assert ids in ({1, 2, 3}, {1, 2, 3, 4, 5, 6})
+    assert n == len(ids)
+    assert posted == ids
 
 
-def test_maintain_auto_heals_orphan_only_sink(spark, tmp_path, monkeypatch, capsys):
-    """Review r9 pass-6 #2: a first-ever batch that crashed between the
-    kv-first write and the facts write (checkpoint lost) leaves a sink
-    holding ONLY orphan kv partitions — no events table at all. The
-    nightly's sink-repair gate must still fire and heal it."""
-    import json as _json
-    import os
-
-    from venus_spark import prepared
-    from venus_spark.__main__ import main
-    from venus_spark.streaming import _write_idempotent, events_stream_sink_dir
-
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    src = "/root/testdata/sf0.001"
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf)
-    for t in ("events", "documents", "embeddings"):
-        os.symlink(
-            os.path.join(src, f"{t}.parquet"),
-            os.path.join(sf, f"{t}.parquet"),
-        )
-    sink = events_stream_sink_dir(sf)
-    _write_idempotent(
-        spark.createDataFrame(
-            [("?phantom", 9_000_001)], "kv string, event_id long"
-        ),
-        os.path.join(sink, "events_kv_postings"),
-        0,
-    )
-    assert not os.path.isdir(os.path.join(sink, "events"))
-    rc = main(["maintain", "auto", "--sf", sf])
-    out = capsys.readouterr().out
-    assert rc == 0, out
-    assert "sink-repair repaired" in out and "orphans=1" in out
-    assert not os.path.isdir(
-        os.path.join(sink, "events_kv_postings", "_batch_id=0")
-    )
-
-
-def _drift_receipt_sink(tmp_path) -> str:
-    """A sink whose batch 0 carries a DRIFT receipt: the kv partition's
-    file names differ from the receipt's but its rows digest-match (a
-    replay that crashed after its rewrite, before its receipt
-    refresh)."""
-    import json as _json
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from venus_spark import streaming as st
-
-    sink = str(tmp_path / "sink")
-    for table in ("events", "events_kv_postings"):
-        part = os.path.join(sink, table, "_batch_id=0")
-        os.makedirs(part)
-        pq.write_table(
-            pa.table({"kv": ["k=1"], "event_id": [1]}),
-            os.path.join(part, "data.parquet"),
-        )
-    good = st._partition_content_digest(
-        sink, "events_kv_postings", 0, ["data.parquet"]
-    )
-    with open(os.path.join(sink, "_batch_fingerprints.json"), "w") as f:
-        _json.dump(
-            {
-                "0": {
-                    "events": ["data.parquet"],
-                    # drifted names, matching digest: the replay state
-                    "events_kv_postings": {
-                        "files": ["old-name.parquet"],
-                        **good,
-                    },
-                }
-            },
-            f,
-        )
-    return sink
-
-
-def test_drift_receipt_served_on_every_check_and_none_digest_stale(
-    tmp_path, monkeypatch
+def test_events_batch_and_live_plans_start_no_more_jobs(
+    spark, tmp_path, monkeypatch, jobs_in_group
 ):
-    """ADVICE r10 #3 / review r10 #2: a drift batch classifies as drift
-    (served, flagged for a receipt refresh), never stale, on every
-    check until the repair refreshes the receipt. A None digest
-    (unreadable partition, a rewrite's commit instant) makes no claim:
-    the batch reads as stale."""
-    from venus_spark import streaming as st
+    """Spark jobs, each call counted in its own job group, stay at or
+    under the counts of the sink design that wrote its four tables in
+    order and probed the postings for emptiness with a count: 9 jobs
+    for a batch that derives kv entries and 5 for one that derives
+    none; 11 for ``json_containment_indexed_live`` and 3 for
+    ``json_key_discovery_live`` (warm, construction plus collect) over
+    a 2-batch sink. The manifest sink runs 6, 4, 8 and 2."""
+    from venus_spark.plans import all_plans
+    from venus_spark.plans import venus_surface as vs
+    from venus_spark.streaming import events_stream_sink_dir, write_events_batch
 
-    sink = _drift_receipt_sink(tmp_path)
-    for _ in range(3):
-        stale, drift = st._sink_receipt_divergence(sink)
-        assert stale == set() and drift == {0}
+    sf = _events_corpus(spark, tmp_path, monkeypatch)
+    sink = events_stream_sink_dir(sf)
+    b0 = _stream_batch(spark, 2_000_000, 20)
+    b1 = _stream_batch(spark, 2_000_100, 20, kv=False)
+    assert jobs_in_group("pin-batch-kv", lambda: write_events_batch(b0, sink, 0)) <= 9
+    assert jobs_in_group("pin-batch-nokv", lambda: write_events_batch(b1, sink, 1)) <= 5
 
-    monkeypatch.setattr(
-        st, "_partition_content_digest", lambda *a, **kw: None
-    )
-    for _ in range(2):
-        stale, drift = st._sink_receipt_divergence(sink)
-        assert stale == {0} and drift == set()
-
-
-def test_drift_checks_write_nothing_into_the_sink(spark, tmp_path):
-    """The query-side guard and the audit only READ the sink: on a
-    drift receipt, neither the guarded kv read nor the audit adds,
-    removes or rewrites a file under the sink directory."""
-    import os
-
-    from venus_spark.streaming import audit_events_sink, read_kv_postings_guarded
-
-    sink = _drift_receipt_sink(tmp_path)
-
-    def listing() -> list[tuple[str, int]]:
-        paths = [os.path.join(d, f) for d, _, fs in os.walk(sink) for f in fs]
-        return sorted((os.path.relpath(p, sink), os.stat(p).st_mtime_ns) for p in paths)
-
-    before = listing()
-    rows = read_kv_postings_guarded(spark, sink).collect()
-    assert [(r["kv"], r["event_id"]) for r in rows] == [("k=1", 1)]
-    assert audit_events_sink(sink)["receipt_drift"] == [0]
-    assert listing() == before
-
-
-def test_audit_receipt_drift_excludes_orphaned_batches(tmp_path):
-    """ADVICE r10 #2: a drift batch whose EVENTS partition vanished is
-    an orphan — it must be reported in the orphans class only, not
-    also in receipt_drift (one batch, one audit class; the repair's
-    orphan removal + receipt prune handles it)."""
-    import json as _json
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from venus_spark import streaming as st
-
-    sink = str(tmp_path / "sink")
-    # kv partition exists; events partition does NOT -> orphan
-    part = os.path.join(sink, "events_kv_postings", "_batch_id=0")
-    os.makedirs(part)
-    pq.write_table(
-        pa.table({"kv": ["k=1"], "event_id": [1]}),
-        os.path.join(part, "data.parquet"),
-    )
-    good = st._partition_content_digest(
-        sink, "events_kv_postings", 0, ["data.parquet"]
-    )
-    with open(os.path.join(sink, "_batch_fingerprints.json"), "w") as f:
-        _json.dump(
-            {
-                "0": {
-                    "events": [],
-                    # drifted names, digest-matched: would classify as
-                    # drift — but the facts are gone, so it's an orphan
-                    "events_kv_postings": {
-                        "files": ["old-name.parquet"],
-                        **good,
-                    },
-                }
-            },
-            f,
-        )
-    audit = st.audit_events_sink(sink)
-    assert audit["receipt_drift"] == []
-    assert audit["stale"] == []
-    assert audit["orphans"] == {"events_kv_postings": [0]}
+    plans = all_plans()
+    for name, bound in (
+        ("json_containment_indexed_live", 11),
+        ("json_key_discovery_live", 3),
+    ):
+        plans[name].fn(spark, sf).collect()  # builds the prepared layouts
+        vs._KV_DF_CACHE.clear()
+        got = jobs_in_group(f"pin-{name}", lambda: plans[name].fn(spark, sf).collect())
+        assert got <= bound, (name, got)

@@ -287,12 +287,12 @@ def cmd_maintain(args) -> int:
             )
     elif args.op == "auto":
         # The whole nightly in one invocation, ordered so each step
-        # feeds the next: fold pending index lists (autovacuum), heal
-        # the streaming sink's derived partitions (audit + repair —
-        # the stream is stopped by definition in a maintenance window,
-        # VERDICT r8 #5), make deletes physical, retrain the vector
-        # artifacts if the deletes drifted them, restore sorted-pruning
-        # on the postings layouts, re-ZORDER the events table. Every
+        # feeds the next: fold pending index lists (autovacuum), sweep
+        # the events sink's uncommitted attempt dirs (the stream is
+        # stopped by definition in a maintenance window), make deletes
+        # physical, retrain the vector artifacts if the deletes
+        # drifted them, restore sorted-pruning on the postings
+        # layouts, re-ZORDER the events table. Every
         # step is a guarded no-op on layouts this sf_dir never built
         # (the retrain guard keys on the PREPARED layout, never the raw
         # embeddings table — a nightly must not side-effect-build an
@@ -303,6 +303,8 @@ def cmd_maintain(args) -> int:
         # half-deleted sink must not turn the nightly into a crash loop
         # that never compacts or reclusters).
         import os as _os
+
+        from venus_spark.streaming import events_stream_sink_dir, sweep_events_sink
 
         spark = _spark()
         steps: list[str] = []
@@ -328,52 +330,10 @@ def cmd_maintain(args) -> int:
             lambda: f"{_merge_all_pending(spark, args.sf)} file(s)",
         )
 
-        def sink_repair() -> str:
-            from venus_spark.streaming import (
-                audit_events_sink,
-                events_stream_sink_dir,
-                repair_events_sink,
-            )
-
-            sink = events_stream_sink_dir(args.sf)
-            # gate on ANY sink table, not just facts: a first-ever
-            # batch that crashed between the kv-first write and the
-            # facts write (checkpoint lost) leaves a sink with ONLY
-            # orphan kv/dfreq partitions — exactly a state the repair
-            # heals (review r9 pass-6 #2)
-            if not any(
-                _os.path.isdir(_os.path.join(sink, t))
-                for t in (
-                    "events",
-                    "events_hourly_rollup",
-                    "events_kv_postings",
-                    "events_kv_dfreq",
-                )
-            ):
-                return "no sink"
-            audit = audit_events_sink(sink)
-            diverged = (
-                audit["rollup_missing"]
-                or audit["kv_missing"]
-                or audit["dfreq_missing"]
-                or audit["orphans"]
-                or audit.get("stale")
-                or audit.get("receipt_drift")
-            )
-            if not diverged:
-                return "consistent"
-            rep = repair_events_sink(spark, sink)
-            return (
-                f"repaired rollup={len(rep['rollup_repaired'])} "
-                f"kv={len(rep['kv_repaired'])} "
-                f"dfreq={len(rep['dfreq_repaired'])} "
-                f"stale={len(rep.get('stale_repaired', []))} "
-                f"receipts={len(rep.get('receipts_refreshed', []))} "
-                "orphans="
-                + str(sum(len(v) for v in rep["orphans_removed"].values()))
-            )
-
-        step("sink-repair", sink_repair)
+        step(
+            "sink-sweep",
+            lambda: f"{sweep_events_sink(events_stream_sink_dir(args.sf))} dir(s)",
+        )
         step(
             "vacuum-deletes",
             lambda: f"{_vacuum_all_deletes(spark, args.sf)} row(s)",

@@ -14,7 +14,7 @@ first instance; pass 9/10 hoisted the fix here so every walk-based
 probe shares ONE strict implementation.
 
 One atomic JSON writer for every small bookkeeping file (manifests,
-receipts, pointers, markers): ``write_json_atomic``.
+pointers, markers): ``write_json_atomic``.
 """
 
 from __future__ import annotations

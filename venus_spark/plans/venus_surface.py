@@ -386,21 +386,17 @@ def json_key_discovery_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     are an INDEX maintained with every batch, not planner estimates
     (the stats-vs-index lesson of :func:`json_containment_indexed`).
 
-    Crash-window honesty (review r8 pass-6 #1, closed r9): unlike the
-    containment plans, the key plans have no fact-table recheck, so
-    they trust the postings as-is. The streaming sink's kv-FIRST write
-    ordering — load-bearing for the containment plans' index-proven
-    emptiness — can leave ORPHAN presence rows for events that never
-    landed (crash between the kv and facts writes, checkpoint never
-    replayed); the LIVE twins therefore read the sink through the
-    always-on orphan/stale guard
-    (:func:`venus_spark.streaming.read_kv_postings_guarded`), which
-    excludes exactly those partitions, and ``repair_events_sink``
-    removes them permanently. This prepared-only plan reads the base
-    layout, whose append path lands kv rows and fact rows under ONE
-    batch manifest. Duplicated rows can never inflate the report
-    (countDistinct in the frequency twin; DISTINCT here). The key
-    universe here is the composed document's (k/type/uid);
+    Crash-window honesty: unlike the containment plans, the key plans
+    have no fact-table recheck, so they trust the postings as-is. The
+    LIVE twins read the streaming sink's postings through its commit
+    manifest (:func:`venus_spark.streaming.read_kv_postings`), which
+    names a batch's postings only together with its facts, so a batch
+    that crashed mid-write contributes no presence row. This
+    prepared-only plan reads the base layout, whose append path lands
+    kv rows and fact rows under ONE batch manifest. Duplicated rows
+    can never inflate the report (countDistinct in the frequency twin;
+    DISTINCT here). The key universe here is the composed document's
+    (k/type/uid);
     ``json_key_discovery`` remains the raw-payload twin."""
     from venus_spark.prepared import events_kv_postings
 
@@ -418,21 +414,16 @@ def _kv_presence_postings_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans. The prefix filter applies to BOTH sides before the union so
     each parquet scan gets the pushed StringStartsWith.
 
-    The sink side reads through the GUARDED postings view
-    (:func:`venus_spark.streaming.read_kv_postings_guarded`, VERDICT r8
-    #1): these plans have no fact-table recheck, so an ORPHAN kv
-    partition (kv landed, facts never did — the kv-first ordering's
-    never-replayed crash window) or a STALE one (reused batch id's
-    partial rewrite, caught by the per-batch commit receipt) would
-    report keys/counts for events that never landed. The guard excludes
-    exactly those partitions at O(listdir) cost — healthy sinks add no
-    filter at all — closing what was the repo's one
-    wrong-data-under-failure read path."""
+    The sink side reads the postings its commit manifest names
+    (:func:`venus_spark.streaming.read_kv_postings`): these plans have
+    no fact-table recheck, and the manifest names a batch's postings
+    only together with its facts, so no presence row of an event that
+    never landed is reported."""
     from venus_spark.prepared import events_kv_postings
     from venus_spark.streaming import (
-        _sink_table_has_data,
+        events_sink_commits,
         events_stream_sink_dir,
-        read_kv_postings_guarded,
+        read_kv_postings,
     )
 
     def presence(post: DataFrame) -> DataFrame:
@@ -442,8 +433,9 @@ def _kv_presence_postings_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out = presence(events_kv_postings(spark, sf_dir))
     sink = events_stream_sink_dir(sf_dir)
-    if _sink_table_has_data(sink, "events_kv_postings"):
-        out = out.unionByName(presence(read_kv_postings_guarded(spark, sink)))
+    commits = events_sink_commits(sink)
+    if commits:
+        out = out.unionByName(presence(read_kv_postings(spark, sink, commits)))
     return out
 
 
@@ -1208,11 +1200,11 @@ def json_containment_indexed_live(spark: SparkSession, sf_dir: str) -> DataFrame
     tests, the same split as every other live read path."""
     from venus_spark.prepared import events_kv_postings
     from venus_spark.streaming import (
-        _sink_table_has_data,
+        events_sink_commits,
         events_stream_sink_dir,
         read_kv_dfreq,
         read_kv_postings,
-        read_sink_table,
+        read_sink_events,
     )
 
     need = list(_CONTAIN_NEEDLES)
@@ -1220,22 +1212,24 @@ def json_containment_indexed_live(spark: SparkSession, sf_dir: str) -> DataFrame
     post = events_kv_postings(spark, sf_dir)
     ev = load_table(spark, sf_dir, "events")
     sink = events_stream_sink_dir(sf_dir)
-    sink_live = _sink_table_has_data(sink, "events")
-    if sink_live:
+    # one manifest read: the facts, postings and statistics of the sink
+    # come from the same set of committed batches
+    commits = events_sink_commits(sink)
+    if commits:
         ev = ev.unionByName(
-            read_sink_table(spark, sink, "events"), allowMissingColumns=True
+            read_sink_events(spark, sink, commits), allowMissingColumns=True
         )
-        post = post.unionByName(read_kv_postings(spark, sink))
+        post = post.unionByName(read_kv_postings(spark, sink, commits))
         for r in (
-            read_kv_dfreq(spark, sink)
+            read_kv_dfreq(spark, sink, commits)
             .filter(F.col("kv").isin(need))
             .collect()
         ):
             dfs[r["kv"]] = dfs.get(r["kv"], 0) + int(r["df"])
     # dedup only when a sink actually contributes: without one, overlap
     # is impossible and the degraded path must be byte-identical in
-    # shape to the prepared plan (review r8 pass-3 #8)
-    return _serve_containment(ev, post, need, dfs, dedup_ids=sink_live)
+    # shape to the prepared plan
+    return _serve_containment(ev, post, need, dfs, dedup_ids=bool(commits))
 
 
 # --------------------------------------------------------------------------

@@ -91,7 +91,7 @@ def trigram_bloom(grams_expr: str) -> Column:
 
 def needle_masks(grams: list[str]) -> list[int]:
     """Driver-side bloom masks for a needle's trigram set — the exact
-    two's-complement longs the :func:`trigram_bloom_word` columns would
+    two's-complement longs the :func:`trigram_bloom` columns would
     hold, so ``bloom_w & mask_w == mask_w`` over the non-zero words is a
     sound containment probe."""
     masks = [0] * BLOOM_WORDS

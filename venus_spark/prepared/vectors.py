@@ -753,7 +753,7 @@ def retrain_vector_artifacts_if_drifted(
 
     Maintenance op (``maintain retrain-vectors``): run it beside vacuum
     on the delete path, not per query — the swap families all assume a
-    single maintenance writer, and like ``repair_events_sink`` it MUST
+    single maintenance writer, and like ``sweep_events_sink`` it MUST
     run with the embeddings ingest stream stopped: the re-encode scans
     a point-in-time file set and carries a pre-staging manifest
     snapshot, so a batch appended mid-retrain would be either absent
