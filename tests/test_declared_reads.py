@@ -63,3 +63,24 @@ def test_every_layout_declares_what_spark_infers(spark, sf_dir):
     for name in names:
         inferred = spark.read.parquet(os.path.join(root, name)).schema
         assert prepared.layout_schema(name).simpleString() == inferred.simpleString(), name
+
+
+def test_spark_ltz_timestamp_footer_reads_as_timestamp(spark, tmp_path):
+    """Spark writes a local-time-zone timestamp as INT96 by default,
+    which pyarrow reports as ``timestamp[ns]`` like a TIMESTAMP(NANOS)
+    column. Its footer schema is ``timestamp``, not the nanos bigint, so
+    a read declaring it serves the values Spark wrote."""
+    from venus_spark.sources import _footer_schema, read_parquet
+
+    path = str(tmp_path / "ltz")
+    df = spark.sql(
+        "SELECT 1L AS id, "
+        "CAST('2024-03-01 12:34:56.789' AS TIMESTAMP_LTZ) AS ts"
+    )
+    df.write.parquet(path)
+    first = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))[0]
+    leaves = pq.ParquetFile(os.path.join(path, first)).schema
+    assert leaves.column(1).physical_type == "INT96"  # Spark's default
+    schema = _footer_schema(path, os.stat(path).st_mtime_ns)
+    assert schema.simpleString() == "struct<id:bigint,ts:timestamp>"
+    assert read_parquet(spark, schema, path).collect() == df.collect()

@@ -117,31 +117,20 @@ def test_write_json_atomic_bytes_and_torn_rename(tmp_path, monkeypatch):
 
 def test_every_json_rename_uses_the_shared_writer():
     """AST-level pin: no ``os.replace(`` call in ``venus_spark`` outside
-    ``fsutil.py`` and ``prepared/core.py:_restamp_atomic`` (its pid/uuid
-    tmp name and stray sweep under the heal flock are a different
-    contract)."""
+    ``fsutil.py``."""
     root = os.path.join(os.path.dirname(__file__), "..", "venus_spark")
-    core = os.path.join("prepared", "core.py")
     offenders = []
     for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
         rel = os.path.relpath(path, root)
         if rel == "fsutil.py":
             continue
-        tree = ast.parse(open(path).read())
-        funcs = [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)]
-        for node in ast.walk(tree):
-            if not (
+        for node in ast.walk(ast.parse(open(path).read())):
+            if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
                 and node.func.attr == "replace"
                 and isinstance(node.func.value, ast.Name)
                 and node.func.value.id == "os"
             ):
-                continue
-            owners = {
-                f.name for f in funcs if f.lineno <= node.lineno <= f.end_lineno
-            }
-            if rel == core and "_restamp_atomic" in owners:
-                continue
-            offenders.append(f"{rel}:{node.lineno}")
+                offenders.append(f"{rel}:{node.lineno}")
     assert not offenders, offenders

@@ -1978,6 +1978,13 @@ def test_vector_retrain_on_delete_drift(spark, tmp_path, monkeypatch):
     assert not os.path.exists(cb_old)
     assert os.path.exists(os.path.join(cb_path, "_probe2"))  # live intact
 
+    # every swap above (vacuum, retrain commit, recoveries) took the one
+    # prepared-swap lock
+    root = os.path.dirname(cb_path)
+    assert [f for f in os.listdir(root) if f.endswith(".lock")] == [
+        "_prep_swap.lock"
+    ]
+
 
 def test_compact_kv_postings_noop_without_layout(spark, tmp_path, monkeypatch):
     """Review r7 #4: the OPTIMIZE op must compact only what exists — on
@@ -2153,87 +2160,64 @@ def test_kv_rows_candidate_intersection_equals_direct_predicate(spark):
         assert cand == want, (need, cand, want)
 
 
-def test_vector_ensure_aside_window_does_not_rebuild(
-    spark, tmp_path, monkeypatch
+@pytest.mark.parametrize("family", ["vector", "doc"])
+def test_ensure_aside_window_does_not_rebuild(
+    spark, tmp_path, monkeypatch, family
 ):
-    """ADVICE r8 #4 (TOCTOU in the lock-free fast path): a reader whose
-    unlocked pending check passed just before a vacuum's locked swap
-    can observe the ASIDE WINDOW — the live path briefly absent between
-    the two renames — and its unlocked _is_built then concludes the
-    layout is unbuilt, starting a destructive from-base rebuild
-    (rmtree of the sibling centroids) that races the swap. The rebuild
-    decision must be re-confirmed under the swap lock, where no swap
-    can be mid-aside. Simulated deterministically: the fast-path
-    recovery is no-opped (= it ran before the swap began), the layout
-    is put exactly into the aside state, and the ensure must RESTORE
-    the displaced generation instead of rebuilding."""
+    """A reader whose unlocked pending check passed just before a
+    vacuum's locked swap can observe the ASIDE WINDOW — the live path
+    briefly absent between the two renames — and its unlocked
+    _is_built then reads the layout as unbuilt. A from-base rebuild
+    taken on that would rmtree a live generation (the IVF centroids) or
+    refuse spuriously (a document index with absorbed batches), so the
+    decision is re-confirmed under the swap lock, where no swap can be
+    mid-aside. Simulated deterministically: the fast-path recovery is
+    no-opped (= it ran before the swap began), the layout is put
+    exactly into the aside state, and the ensure must RESTORE the
+    displaced generation instead of rebuilding."""
     import os
     import shutil
 
     from venus_spark import prepared
 
     monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    src = "/root/testdata/sf0.001"
-    sf = str(tmp_path / "sf")
-    spark.read.parquet(os.path.join(src, "embeddings.parquet")).write.parquet(
-        os.path.join(sf, "embeddings.parquet")
-    )
-    prepared.embeddings_ivf(spark, sf)
-    vec_path = prepared.prepared_path(sf, "embeddings_ivf.parquet")
-    cent_path = prepared.prepared_path(sf, "embeddings_ivf_centroids.parquet")
-    # generation markers: a rebuild rmtrees both dirs and loses them
-    with open(os.path.join(cent_path, "_gen_probe"), "w") as f:
-        f.write("g1")
+    if family == "vector":
+        sf = str(tmp_path / "sf")
+        spark.read.parquet(
+            os.path.join("/root/testdata/sf0.001", "embeddings.parquet")
+        ).write.parquet(os.path.join(sf, "embeddings.parquet"))
+        ensure = lambda: prepared.embeddings_ivf(spark, sf)[0]  # noqa: E731
+        path = prepared.prepared_path(sf, "embeddings_ivf.parquet")
+        # a sibling a rebuild would rmtree with the layout
+        sibling = prepared.prepared_path(sf, "embeddings_ivf_centroids.parquet")
+    else:
+        sf = _mk_doc_sf(spark, tmp_path)
+        ensure = lambda: prepared.documents_minhash(spark, sf)  # noqa: E731
+        path = prepared.prepared_path(sf, "documents_minhash.parquet")
+        sibling = None
+    ensure()
+    # generation markers: a rebuild loses them
+    if sibling is not None:
+        with open(os.path.join(sibling, "_gen_probe"), "w") as f:
+            f.write("g1")
     # the aside window of a vacuum swap: staging already promoted to
     # tmp, live path moved to old, tmp not yet renamed in
-    shutil.copytree(vec_path, vec_path + ".vacuum.tmp")
-    with open(os.path.join(vec_path + ".vacuum.tmp", "_gen_probe"), "w") as f:
+    shutil.copytree(path, path + ".vacuum.tmp")
+    with open(os.path.join(path + ".vacuum.tmp", "_gen_probe"), "w") as f:
         f.write("g1")
-    os.rename(vec_path, vec_path + ".vacuum.old")
+    os.rename(path, path + ".vacuum.old")
     # the reader's fast-path recovery already ran (before the swap):
     monkeypatch.setattr(
-        prepared, "_recover_vector_layouts", lambda *a, **k: None
+        prepared.core, "_recover_prepared_swaps", lambda *a, **k: None
     )
-    vecs, cents = prepared.embeddings_ivf(spark, sf)
-    assert vecs.count() > 0 and cents.count() > 0
+    assert ensure().count() > 0
     # recovery, not rebuild: the staged generation (with its probe) is
-    # live and the centroids were never rmtree'd
-    assert os.path.exists(os.path.join(vec_path, "_gen_probe"))
-    assert os.path.exists(os.path.join(cent_path, "_gen_probe"))
-    assert not os.path.exists(vec_path + ".vacuum.tmp")
-    assert not os.path.exists(vec_path + ".vacuum.old")
-
-
-def test_doc_ensure_aside_window_does_not_rebuild(
-    spark, tmp_path, monkeypatch
-):
-    """The document-family twin of the vector TOCTOU fix: an unlocked
-    _is_built observing a vacuum swap's aside window must not trigger a
-    from-base rebuild of a document index (which would silently drop
-    mode-appended/merged-streamed rows the refuse-rebuild guard exists
-    to protect — here it would refuse loudly, still a spurious
-    failure). The locked re-check restores the displaced generation."""
-    import os
-    import shutil
-
-    from venus_spark import prepared
-
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    sf = _mk_doc_sf(spark, tmp_path)
-    prepared.documents_minhash(spark, sf)
-    mh_path = prepared.prepared_path(sf, "documents_minhash.parquet")
-    shutil.copytree(mh_path, mh_path + ".vacuum.tmp")
-    with open(os.path.join(mh_path + ".vacuum.tmp", "_gen_probe"), "w") as f:
-        f.write("g1")
-    os.rename(mh_path, mh_path + ".vacuum.old")
-    monkeypatch.setattr(
-        prepared, "_recover_prepared_swaps", lambda *a, **k: None
-    )
-    got = prepared.documents_minhash(spark, sf)
-    assert got.count() > 0
-    assert os.path.exists(os.path.join(mh_path, "_gen_probe"))
-    assert not os.path.exists(mh_path + ".vacuum.tmp")
-    assert not os.path.exists(mh_path + ".vacuum.old")
+    # live and the sibling was never rmtree'd
+    assert os.path.exists(os.path.join(path, "_gen_probe"))
+    if sibling is not None:
+        assert os.path.exists(os.path.join(sibling, "_gen_probe"))
+    assert not os.path.exists(path + ".vacuum.tmp")
+    assert not os.path.exists(path + ".vacuum.old")
 
 
 def test_doc_vacuum_stages_invisibly_to_reader_recovery(
@@ -2529,13 +2513,11 @@ def test_swap_in_locked_refuses_torn_staging(spark, tmp_path, monkeypatch):
 
 
 def test_ivf_centroids_round_discipline_stamp(spark, tmp_path, monkeypatch):
-    """Review r11 pass-8 #1: the IVF centroid table bakes davg-ROUNDED
-    values, so it carries the rounding-discipline meta stamp — a layout
-    built under a different rounding rule (the pre-r11 built-in ROUND)
-    must rebuild instead of being silently served against oracles that
-    recompute centroids with the current rule. Pins: (a) the build
-    stamps; (b) a stale/absent stamp triggers a rebuild on next ensure;
-    (c) a current stamp does NOT rebuild (mtime-stable)."""
+    """The IVF centroid table bakes davg-ROUNDED values, so it carries
+    the rounding-discipline meta stamp. Pins: (a) the build stamps;
+    (c) a current stamp does NOT rebuild (same _SUCCESS inode). A
+    stale stamp is (b) of
+    :func:`test_stale_round_stamp_rebuilds_or_refuses`."""
     import json
     import os
 
@@ -2547,242 +2529,85 @@ def test_ivf_centroids_round_discipline_stamp(spark, tmp_path, monkeypatch):
     spark.read.parquet(os.path.join(src, "embeddings.parquet")).write.parquet(
         os.path.join(sf, "embeddings.parquet")
     )
-    vecs, cents = prepared.embeddings_ivf(spark, sf)
-    n = cents.count()
+    prepared.embeddings_ivf(spark, sf)
     cent_path = prepared.prepared_path(sf, "embeddings_ivf_centroids.parquet")
-    stamp = os.path.join(cent_path, "_prep_meta.json")
-    with open(stamp) as f:
+    # (a) the build stamps the current discipline
+    with open(os.path.join(cent_path, "_prep_meta.json")) as f:
         assert json.load(f) == prepared._IVF_CENT_META
     # (c) current stamp: ensure is a no-op (same _SUCCESS inode)
     marker = os.path.join(cent_path, "_SUCCESS")
     ino = os.stat(marker).st_ino
     prepared.embeddings_ivf(spark, sf)
     assert os.stat(marker).st_ino == ino
-    # (b) a pre-r11 generation (no stamp / foreign stamp) HEALS:
-    # centroids recomputed from the existing vec layout and restamped,
-    # the partitioned VECTOR layout untouched (metadata-only
-    # migration, review r11 pass-9 #2) — and the heal must work even
-    # with absorbed streamed batches on the vec layout, where the
-    # full-rebuild path would refuse and brick every IVF read
-    # (review r11 pass-9 #1).
-    vec_path = prepared.prepared_path(sf, "embeddings_ivf.parquet")
-    prepared._mark_appended(vec_path)
-    prepared._write_abatch_manifest(vec_path, {7})
-    vec_ino = os.stat(os.path.join(vec_path, "_SUCCESS")).st_ino
-    # pin the SHARED drift baseline: the heal must PRESERVE it (it
-    # also gates the PQ codebook retrain — review r11 pass-10 #1)
-    prepared._write_train_meta(cent_path, 5, 4321)
-    with open(stamp, "w") as f:
-        json.dump({"centroid": "davg", "round": "half-up-builtin"}, f)
-    vecs2, cents2 = prepared.embeddings_ivf(spark, sf)  # must not raise
-    assert cents2.count() == n
-    assert os.stat(os.path.join(vec_path, "_SUCCESS")).st_ino == vec_ino
-    with open(stamp) as f:
-        assert json.load(f) == prepared._IVF_CENT_META
-    kept = prepared._read_train_meta(cent_path)
-    assert kept["tb_at_train"] == 5 and kept["trained_n"] == 4321
-    # crash-window retry: cent dir gone, staged tmp left behind — the
-    # leftover holds the ONLY copy of the drift baseline, which the
-    # re-entered heal must recover before sweeping (review r11
-    # pass-11 #2), not re-seed from fresh counts
-    import shutil as _sh
-
-    _sh.copytree(cent_path, cent_path + ".restamp.crashed.tmp")
-    _sh.rmtree(cent_path)
-    vecs3, cents3 = prepared.embeddings_ivf(spark, sf)
-    assert cents3.count() == n
-    assert not os.path.exists(cent_path + ".restamp.crashed.tmp")
-    kept3 = prepared._read_train_meta(cent_path)
-    assert kept3["tb_at_train"] == 5 and kept3["trained_n"] == 4321
 
 
-def test_postings_round_stamp_heals_not_bricks(spark, tmp_path, monkeypatch):
-    """ADVICE r12 #1: adding the parity-rounding key to _POSTINGS_META
-    invalidates every pre-existing postings/dfreq/stats stamp, and on a
-    deployment whose postings have absorbed streamed batches the
-    rebuild path's absorbed-batches refusal would raise FOREVER —
-    bricking every BM25/phrase/prepared read. Only the 1-row stats
-    table bakes a rounded value (avgdl); postings/dfreq are raw counts,
-    so the heal rewrites JUST the stats row from its own stored
-    counters and restamps. Pins: (a) old-stamped layout with absorbed
-    batches heals instead of raising; (b) postings/dfreq rows untouched
-    (_SUCCESS inode stable); (c) avgdl recomputed under the current
-    rule from the stored counters; (d) the delete-adjustment sidecar —
-    the exactly-once marker of a committed delete — survives the stats
-    rewrite; (e) a crash mid-heal (stats healed, postings/dfreq still
-    old-stamped) completes on retry; (f) any OTHER meta key differing
-    still routes to the refusal (semantic change, not heal-eligible)."""
-    import json
-    import os
-
-    from venus_spark import prepared
-
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    sf = _mk_doc_sf(spark, tmp_path, name="heal_sf")
-    post, dfreq, stats = prepared.documents_postings(spark, sf)
-    want_stats = stats.first()
-    want_post = post.count()
-    post_path = prepared.prepared_path(sf, "documents_postings.parquet")
-    dfreq_path = prepared.prepared_path(sf, "documents_dfreq.parquet")
-    stats_path = prepared.prepared_path(sf, "documents_stats.parquet")
-    paths = (post_path, dfreq_path, stats_path)
-
-    # arm the refusal: absorbed streamed batches on the postings layout
-    prepared._mark_appended(post_path)
-    # a committed delete's exactly-once sidecar must survive the heal
-    with open(os.path.join(stats_path, prepared._DELETE_ADJ_SIDECAR), "w") as f:
-        json.dump([41], f)
-    pre_round = {
-        k: v for k, v in prepared._POSTINGS_META.items() if k != "round"
-    }
-    for p in paths:
-        with open(os.path.join(p, "_prep_meta.json"), "w") as f:
-            json.dump(pre_round, f)
-    inodes = {
-        p: os.stat(os.path.join(p, "_SUCCESS")).st_ino
-        for p in (post_path, dfreq_path)
-    }
-
-    post2, dfreq2, stats2 = prepared.documents_postings(spark, sf)  # no raise
-    assert post2.count() == want_post
-    got = stats2.first()
-    assert (got["n_docs"], got["dl_sum"], got["avgdl"]) == (
-        want_stats["n_docs"], want_stats["dl_sum"], want_stats["avgdl"]
-    )
-    for p in (post_path, dfreq_path):
-        assert os.stat(os.path.join(p, "_SUCCESS")).st_ino == inodes[p]
-    for p in paths:
-        with open(os.path.join(p, "_prep_meta.json")) as f:
-            assert json.load(f) == prepared._POSTINGS_META
-    assert prepared._read_delete_adj_applied(stats_path) == {41}
-
-    # (e) crash window: stats already healed, postings/dfreq old — the
-    # retry must stay on the heal fork and finish the restamps
-    for p in (post_path, dfreq_path):
-        with open(os.path.join(p, "_prep_meta.json"), "w") as f:
-            json.dump(pre_round, f)
-    prepared.documents_postings(spark, sf)
-    for p in paths:
-        with open(os.path.join(p, "_prep_meta.json")) as f:
-            assert json.load(f) == prepared._POSTINGS_META
-
-    # (f) a SEMANTIC meta change (different tokenizer) is NOT
-    # heal-eligible: with absorbed batches present the refusal must
-    # still protect the streamed rows
-    bad = dict(prepared._POSTINGS_META, tokens="bpe")
-    with open(os.path.join(post_path, "_prep_meta.json"), "w") as f:
-        json.dump(bad, f)
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="appended/streamed"):
-        prepared.documents_postings(spark, sf)
-
-
-def test_ivf_heal_swap_survives_concurrent_staging_sweep(
-    spark, tmp_path, monkeypatch
+@pytest.mark.parametrize("family", ["ivf", "postings"])
+def test_stale_round_stamp_rebuilds_or_refuses(
+    spark, tmp_path, monkeypatch, family
 ):
-    """ADVICE r12 #2: the heal's prologue sweep runs UNLOCKED by
-    design, so a concurrent healer can rmtree this attempt's staged tmp
-    at any point before the locked install. The old sequence rmtree'd
-    cent_path BEFORE renaming tmp in — tmp vanishing in that window
-    destroyed the only on-disk copy of the preserved drift baseline and
-    the next heal silently re-seeded fresh counts. Pins: with tmp swept
-    at the last possible moment, (a) the install fails LOUDLY, (b)
-    cent_path survives intact with its baseline, (c) the retry heals
-    and still preserves the baseline."""
+    """A layout stamped under an older rounding discipline (no current
+    ``round`` key) is stale like any other stamp mismatch: with no
+    absorbed batch the next ensure rebuilds it from base — current
+    stamp, same rows; once the layout holds an absorbed batch the
+    ensure refuses loudly and leaves it on disk, because a from-base
+    rebuild would drop the batch's rows."""
     import json
     import os
-    import shutil as _sh
-
-    import pytest as _pytest
 
     from venus_spark import prepared
 
     monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    src = "/root/testdata/sf0.001"
-    sf = str(tmp_path / "emb_sf")
-    spark.read.parquet(os.path.join(src, "embeddings.parquet")).write.parquet(
-        os.path.join(sf, "embeddings.parquet")
-    )
-    prepared.embeddings_ivf(spark, sf)
-    cent_path = prepared.prepared_path(sf, "embeddings_ivf_centroids.parquet")
-    stamp = os.path.join(cent_path, "_prep_meta.json")
-    prepared._write_train_meta(cent_path, 5, 4321)  # pinned baseline
-    with open(stamp, "w") as f:
-        json.dump({"centroid": "davg", "round": "half-up-builtin"}, f)
+    if family == "ivf":
+        sf = str(tmp_path / "emb_sf")
+        spark.read.parquet(
+            os.path.join("/root/testdata/sf0.001", "embeddings.parquet")
+        ).write.parquet(os.path.join(sf, "embeddings.parquet"))
+        ensure = lambda: prepared.embeddings_ivf(spark, sf)  # noqa: E731
+        meta = prepared._IVF_CENT_META
+        absorbing = prepared.prepared_path(sf, "embeddings_ivf.parquet")
+        stamped = [prepared.prepared_path(sf, "embeddings_ivf_centroids.parquet")]
+    else:
+        sf = _mk_doc_sf(spark, tmp_path, name="stale_sf")
+        ensure = lambda: prepared.documents_postings(spark, sf)  # noqa: E731
+        meta = prepared._POSTINGS_META
+        absorbing = prepared.prepared_path(sf, "documents_postings.parquet")
+        stamped = [
+            prepared.prepared_path(sf, n)
+            for n in (
+                "documents_postings.parquet",
+                "documents_dfreq.parquet",
+                "documents_stats.parquet",
+            )
+        ]
 
-    orig = prepared._write_train_meta
+    def rows():
+        return [sorted(map(tuple, df.collect())) for df in ensure()]
 
-    def sweep_after_last_tmp_write(path, tb, n):
-        orig(path, tb, n)
-        if ".restamp." in path and path.endswith(".tmp"):
-            _sh.rmtree(path, ignore_errors=True)  # the concurrent sweep
+    def stale_stamps():
+        stale = {k: v for k, v in meta.items() if k != "round"}
+        for p in stamped:
+            with open(os.path.join(p, "_prep_meta.json"), "w") as f:
+                json.dump(stale, f)
 
-    monkeypatch.setattr(
-        prepared.vectors, "_write_train_meta", sweep_after_last_tmp_write
-    )
-    with _pytest.raises(OSError):
-        prepared.embeddings_ivf(spark, sf)
-    # the displaced old generation was restored, baseline intact
-    assert os.path.exists(os.path.join(cent_path, "_SUCCESS"))
-    kept = prepared._read_train_meta(cent_path)
-    assert kept["tb_at_train"] == 5 and kept["trained_n"] == 4321
-
-    monkeypatch.setattr(prepared.vectors, "_write_train_meta", orig)
-    prepared.embeddings_ivf(spark, sf)  # retry heals
-    with open(stamp) as f:
-        assert json.load(f) == prepared._IVF_CENT_META
-    kept2 = prepared._read_train_meta(cent_path)
-    assert kept2["tb_at_train"] == 5 and kept2["trained_n"] == 4321
-
-
-def test_postings_heal_concurrent_callers_serialize(
-    spark, tmp_path, monkeypatch
-):
-    """The heal runs on the ENSURE path where several callers can
-    enter concurrently (the exact hazard class review r11 pass-11 #1
-    fixed for the IVF heal): racing callers must serialize on the heal
-    flock — no torn stats generation, no spurious refusal, identical
-    results, stamps current. Four threads race documents_postings on a
-    stale-stamped layout with absorbed batches armed."""
-    import json
-    import os
-    import threading
-    import traceback
-
-    from venus_spark import prepared
-
-    monkeypatch.setattr(prepared, "PREPARED_ROOT", str(tmp_path / "prep"))
-    sf = _mk_doc_sf(spark, tmp_path, name="conc_heal_sf")
-    prepared.documents_postings(spark, sf)
-    post = prepared.prepared_path(sf, "documents_postings.parquet")
-    dfreq = prepared.prepared_path(sf, "documents_dfreq.parquet")
-    stats = prepared.prepared_path(sf, "documents_stats.parquet")
-    prepared._mark_appended(post)
-    pre = {k: v for k, v in prepared._POSTINGS_META.items() if k != "round"}
-    for p in (post, dfreq, stats):
-        with open(os.path.join(p, "_prep_meta.json"), "w") as f:
-            json.dump(pre, f)
-
-    errs, results = [], []
-
-    def worker(i):
-        try:
-            pdf, _d, s = prepared.documents_postings(spark, sf)
-            results.append((pdf.count(), s.first()["avgdl"]))
-        except Exception:
-            errs.append(traceback.format_exc())
-
-    ts = [threading.Thread(target=worker, args=(i,)) for i in range(4)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    assert not errs, errs[0]
-    assert len(set(results)) == 1
-    for p in (post, dfreq, stats):
+    want = rows()
+    # (b) no absorbed batch: rebuilt from base (the generation probe
+    # goes with the old directory)
+    stale_stamps()
+    for p in stamped:
+        open(os.path.join(p, "_gen_probe"), "w").close()
+    assert rows() == want
+    for p in stamped:
+        assert not os.path.exists(os.path.join(p, "_gen_probe"))
         with open(os.path.join(p, "_prep_meta.json")) as f:
-            assert json.load(f) == prepared._POSTINGS_META
+            assert json.load(f) == meta
+    # (f) an absorbed batch: refused, the layout left as it was
+    prepared._write_abatch_manifest(absorbing, {7})
+    stale_stamps()
+    with pytest.raises(RuntimeError, match="appended/streamed"):
+        ensure()
+    for p in stamped:
+        assert os.path.exists(os.path.join(p, "_SUCCESS"))
+    assert prepared._read_abatch_manifest(absorbing) == {7}
 
 
 def test_colocated_live_agrees_with_live_on_streamed_corpus(

@@ -87,3 +87,32 @@ def test_internal_crash_points_stay_patchable():
         assert vectors._write_train_meta is probe
     finally:
         vectors._write_train_meta = orig_w
+
+
+def test_one_exclusive_flock_call_site():
+    """Every lock in the package — the prepared-swap lock and the
+    warehouse bucket lock — goes through the one ``flock`` body,
+    ``core._swap_flock``: ``venus_spark/`` holds exactly one
+    ``fcntl.flock(..., fcntl.LOCK_EX)`` call."""
+    import ast
+    import glob
+
+    import venus_spark
+
+    root = os.path.dirname(venus_spark.__file__)
+    sites = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        for node in ast.walk(ast.parse(open(path).read())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "flock"
+                and any(
+                    isinstance(a, ast.Attribute) and a.attr == "LOCK_EX"
+                    for a in node.args
+                )
+            ):
+                sites.append(f"{os.path.relpath(path, root)}:{node.lineno}")
+    assert len(sites) == 1 and sites[0].startswith(
+        os.path.join("prepared", "core.py") + ":"
+    ), sites

@@ -40,8 +40,6 @@ from venus_spark.prepared.core import (  # noqa: F401
     side_by_side,
     _is_built,
     _stamp,
-    _restamp_atomic,
-    _stamp_only_round_mismatch,
     _compact_existing_sorted,
     _holds_batch_files,
     _compact_sorted_swap,
@@ -59,9 +57,6 @@ from venus_spark.prepared.core import (  # noqa: F401
     _PREP_SWAP_LOCK,
     _PREP_SWAP_LOCKFILE,
     _prep_swap_flock,
-    _PREP_HEAL_LOCK,
-    _PREP_HEAL_LOCKFILE,
-    _prep_heal_flock,
     _recover_prepared_swaps,
     _prepared_built_under_lock,
     sweep_stale_stagings,
@@ -123,8 +118,6 @@ from venus_spark.prepared.postings import (  # noqa: F401
     documents_postings,
     _build_postings_live,
     _postings_tables,
-    _read_postings_tables,
-    _heal_postings_round_stamp,
     _postings_rows,
     _doclen_counters,
     _write_dfreq,
@@ -178,7 +171,6 @@ from venus_spark.prepared.vectors import (  # noqa: F401
     _PQ_CODES,
     _PQ_CODEBOOK,
     embeddings_ivf,
-    _heal_ivf_centroids,
     embeddings_pq,
     _pq_code_rows,
     _codebook_rows,
@@ -192,11 +184,6 @@ from venus_spark.prepared.vectors import (  # noqa: F401
     vacuum_embedding_tombstones,
     _VEC_TRAIN_META,
     _VEC_RETRAIN_MARKER,
-    _VEC_RETRAIN_LOCK,
-    _VEC_RETRAIN_LOCKFILE,
-    _vec_swap_flock,
-    _recover_vector_layouts,
-    _vector_built_under_lock,
     _read_train_meta,
     _write_train_meta,
     _VEC_RETRAIN_NAMES,

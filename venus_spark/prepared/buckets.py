@@ -41,7 +41,7 @@ from contextlib import contextmanager
 from pyspark.sql import SparkSession
 
 from venus_spark.sources import load_table
-from venus_spark.prepared import docs as _docs
+from venus_spark.prepared import core as _core, docs as _docs
 
 N_BUCKETS = 32
 
@@ -59,23 +59,12 @@ def _warehouse_dir(spark: SparkSession) -> str:
 @contextmanager
 def _bkt_flock(spark: SparkSession):
     """Cross-process + cross-thread exclusion for warehouse bucketed
-    (re)builds: an OS ``flock`` on ``<warehouse>/_bkt_swap.lock``
-    (kernel-released on crash) behind a module lock so one process's
-    threads queue in user space. NOT reentrant — helpers never nest.
-    Same recipe as ``core._swap_flock`` but anchored to the warehouse
-    directory, which is what the tables actually share across
-    processes."""
-    import fcntl
-
-    wh = _warehouse_dir(spark)
-    os.makedirs(wh, exist_ok=True)
-    with _BKT_LOCK:
-        with open(os.path.join(wh, "_bkt_swap.lock"), "w") as fd:
-            fcntl.flock(fd, fcntl.LOCK_EX)
-            try:
-                yield
-            finally:
-                fcntl.flock(fd, fcntl.LOCK_UN)
+    (re)builds: :func:`_core._swap_flock` on
+    ``<warehouse>/_bkt_swap.lock``, anchored to the warehouse directory
+    because that is what the tables actually share across processes."""
+    lockfile = os.path.join(_warehouse_dir(spark), "_bkt_swap.lock")
+    with _core._swap_flock(lockfile, _BKT_LOCK):
+        yield
 
 
 def _adopt(spark: SparkSession, name: str, loc: str, meta: dict) -> None:

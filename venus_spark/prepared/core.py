@@ -1,7 +1,7 @@
 """Prepared-artifact infrastructure: roots and paths, build
-stamps, flock'd swap/heal/staging machinery, sorted-run compaction,
-and the pending-list (GIN fastupdate-style) union/merge kernel shared
-by every index family."""
+stamps, the staged swaps and their recoveries under one flock,
+sorted-run compaction, and the pending-list (GIN fastupdate-style)
+union/merge kernel shared by every index family."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import os
 import re
 import shutil
 import threading
-import uuid
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
@@ -183,55 +182,6 @@ def _stamp(path: str, meta: dict) -> None:
     with open(os.path.join(path, "_prep_meta.json"), "w") as f:
         json.dump(meta, f)
 
-def _restamp_atomic(path: str, meta: dict) -> None:
-    """Replace a LIVE directory's stamp (the heal paths' restamp step).
-    Unlike :func:`_stamp` — which only ever writes into unpublished
-    build/staging dirs — this targets a directory concurrent readers
-    are probing with :func:`_is_built`, so the json must never be
-    observable torn: a reader seeing a half-written stamp reads
-    ``_is_built`` False and can take a DESTRUCTIVE rebuild/refusal
-    fork. tmp + ``os.replace`` keeps every observable state a complete
-    json (ADVICE r12 #1)."""
-    p = os.path.join(path, "_prep_meta.json")
-    # sweep crashed prior attempts' strays first — safe because every
-    # caller holds the heal flock (writers of these names are
-    # serialized), and hidden-underscore names are invisible to
-    # parquet readers either way; without this a crash between the
-    # tmp write and the replace would leak one stray per attempt
-    # forever (nothing else matches the name).
-    base = os.path.basename(p) + "."
-    try:
-        for n in os.listdir(path):
-            if n.startswith(base) and n.endswith(".tmp"):
-                os.unlink(os.path.join(path, n))
-    except OSError:
-        pass
-    tmp = f"{p}.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, p)
-
-def _stamp_only_round_mismatch(path: str, meta: dict) -> bool:
-    """True iff the artifact is COMPLETE (``_SUCCESS`` present) and its
-    stored stamp differs from ``meta`` ONLY on the parity-rounding key
-    — the metadata-only migration case a heal can close without
-    touching the rows (ADVICE r12 #1; the postings twin of the IVF
-    centroid heal's fork). An already-current stamp also qualifies, so
-    a crash mid-heal (some artifacts restamped, some not) stays
-    heal-eligible on retry. Any OTHER key differing (tokenizer, norm,
-    layout) is a semantic change the heal cannot paper over — the
-    caller falls back to the rebuild/refusal fork."""
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        return False
-    try:
-        with open(os.path.join(path, "_prep_meta.json")) as f:
-            stored = json.load(f)
-    except (OSError, ValueError):
-        return False
-    if not isinstance(stored, dict):
-        return False
-    return {**stored, "round": meta.get("round")} == meta
-
 def _compact_existing_sorted(
     spark: SparkSession,
     sf_dir: str,
@@ -293,9 +243,8 @@ def _compact_sorted_swap(
 ) -> None:
     """Rewrite a range-sorted layout from its own CURRENT contents back
     into one globally range-partitioned, sorted file set — the shared
-    body of the postings OPTIMIZE jobs. Crash-safe staged swap with the
-    vector family's race posture (ADVICE r8 #1 applied family-wide):
-    the Spark rewrite stages OUTSIDE the lock under a recovery-invisible
+    body of the postings OPTIMIZE jobs. Crash-safe staged swap: the
+    Spark rewrite stages OUTSIDE the lock under a recovery-invisible
     ``.compact_staging`` name (a concurrent reader's locked recovery
     never sees it, so it cannot rmtree the stage mid-write), and the
     three-rename swap runs under :func:`_prep_swap_flock` so no reader
@@ -305,8 +254,8 @@ def _compact_sorted_swap(
     mode-append marker (appended rows are still base-absent after
     absorption) all survive the rewrite. ``rows_fn`` is a FACTORY, not
     a DataFrame: a parquet relation pins its file listing at creation,
-    and the manifest snapshot must happen BEFORE that pin (review r9
-    pass-4 #2) — snapshot-then-list means a batch landed in the window
+    and the manifest snapshot must happen BEFORE that pin —
+    snapshot-then-list means a batch landed in the window
     is at worst double-landed by its retry (absorbed rows + re-landed
     abatch files under a contract-violating concurrent append), never
     silently LOST the way list-then-snapshot loses it (id carried,
@@ -473,19 +422,19 @@ def _write_abatch_manifest(dest: str, ids: set[int]) -> None:
     write_json_atomic(os.path.join(dest, _ABATCH_MANIFEST), sorted(ids))
 
 @contextmanager
-def _swap_flock(sf_dir: str, lockfile: str, module_lock: threading.Lock):
-    """Shared body of the per-family swap locks (see
-    :func:`_vec_swap_flock` for the full race posture): an OS-level
-    exclusive ``flock`` — across processes AND across threads, since
-    each acquisition opens its own descriptor — released by the kernel
-    on crash, with a module lock in front so a process's threads queue
-    in user space. NOT reentrant: locked helpers must never nest."""
+def _swap_flock(lockfile: str, module_lock: threading.Lock):
+    """Exclusive lock on the file ``lockfile``: an OS-level ``flock``,
+    exclusive across processes and across threads (each acquisition
+    opens its own descriptor), released by the kernel on crash, with
+    ``module_lock`` in front so a process's threads queue in user
+    space. NOT reentrant: a holder must never call another taker. The
+    one ``flock`` body; :func:`_prep_swap_flock` and the warehouse
+    bucket lock are its two lock files."""
     import fcntl
 
-    root = os.path.dirname(prepared_path(sf_dir, lockfile))
-    os.makedirs(root, exist_ok=True)
+    os.makedirs(os.path.dirname(lockfile), exist_ok=True)
     with module_lock:
-        with open(prepared_path(sf_dir, lockfile), "w") as fd:
+        with open(lockfile, "w") as fd:
             fcntl.flock(fd, fcntl.LOCK_EX)
             try:
                 yield
@@ -498,41 +447,15 @@ _PREP_SWAP_LOCKFILE = "_prep_swap.lock"
 
 @contextmanager
 def _prep_swap_flock(sf_dir: str):
-    """Mutual exclusion for the prepared-layout rewrite swaps and their
-    recoveries (the document-vacuum and sorted-compaction families —
-    ADVICE r8 #1 applied the vector family's recipe here): rewrites
-    stage OUTSIDE the lock under a recovery-invisible ``*_staging``
-    name, the three-rename swap and every ``.vacuum``/``.compact``
-    recovery run inside it, so a reader's recovery can never rmtree an
-    in-flight stage or interleave a swap's aside window."""
-    with _swap_flock(sf_dir, _PREP_SWAP_LOCKFILE, _PREP_SWAP_LOCK):
-        yield
-
-_PREP_HEAL_LOCK = threading.Lock()
-
-_PREP_HEAL_LOCKFILE = "_prep_heal.lock"
-
-@contextmanager
-def _prep_heal_flock(sf_dir: str):
-    """Serializes the ENSURE-path stamp-migration heals (currently the
-    postings family, ADVICE r12 #1). A separate lockfile from
-    :func:`_prep_swap_flock` because the heal body CALLS the
-    swap-locked helpers (``_staged_refresh`` → ``_swap_in_locked``) and
-    the swap flock is not reentrant; lock order is always
-    heal → swap, never the reverse, so the pair cannot deadlock. Why
-    the heal needs its own exclusion at all: ``_staged_refresh`` stages
-    under one FIXED ``*_staging`` name on the assumption of a single
-    maintenance writer, but the ensure path admits several concurrent
-    processes — healer B's rmtree-and-rewrite of A's in-flight staging
-    could hand A a staging that has Spark's ``_SUCCESS`` but not yet
-    the stamp/sidecar, which ``_swap_in_locked`` would install as a
-    live stats generation whose missing stamp then routes the next
-    ensure into the destructive rebuild/refusal fork — the exact
-    bricking class the heal exists to prevent (the same
-    concurrent-healer hazard review r11 pass-11 #1 fixed for the IVF
-    heal with unique staging names; here one small flock is simpler
-    because the staging name is shared with the merge cadence)."""
-    with _swap_flock(sf_dir, _PREP_HEAL_LOCKFILE, _PREP_HEAL_LOCK):
+    """The one lock for every prepared-layout swap and its recovery:
+    the document and embedding vacuums, the sorted compactions, the
+    ``.refresh`` df and ``.deladj`` stats swaps, the events recluster
+    and retention, and the vector retrain's marker-driven commit. Rewrites
+    stage OUTSIDE it under a recovery-invisible ``*_staging`` name; the
+    renames and every recovery run inside it, so a reader's recovery
+    can never rmtree an in-flight stage, interleave a swap's aside
+    window, or resurrect a displaced generation into it."""
+    with _swap_flock(prepared_path(sf_dir, _PREP_SWAP_LOCKFILE), _PREP_SWAP_LOCK):
         yield
 
 def _recover_prepared_swaps(sf_dir: str, path: str, *tags: str) -> None:
@@ -542,9 +465,9 @@ def _recover_prepared_swaps(sf_dir: str, path: str, *tags: str) -> None:
     few listdir stats; when anything IS pending, the recovery runs
     under :func:`_prep_swap_flock` so it cannot race a rewrite's swap.
     A ``.trash`` leftover (a swap's displaced generation whose
-    out-of-lock delete was killed mid-rmtree, review r9 pass-4 #3) is
-    unconditional garbage — removed here so it cannot leak a full old
-    generation of the layout until the next rewrite."""
+    out-of-lock delete was killed mid-rmtree) is unconditional garbage
+    — removed here so it cannot leak a full old generation of the
+    layout until the next rewrite."""
     if not any(
         os.path.exists(f"{path}{tag}{suffix}")
         for tag in tags
@@ -554,9 +477,9 @@ def _recover_prepared_swaps(sf_dir: str, path: str, *tags: str) -> None:
     with _prep_swap_flock(sf_dir):
         for tag in tags:
             _recover_swap(path, tag)
-    # trash is recovery-invisible garbage: delete it OUTSIDE the lock
-    # (review r9 pass-5 #3 — a multi-GB displaced generation's rmtree
-    # under the process-wide lock would stall every swap/recovery);
+    # trash is recovery-invisible garbage: delete it OUTSIDE the lock,
+    # since a large displaced generation's rmtree under the
+    # process-wide lock would stall every swap and recovery;
     # ignore_errors because _swap_in_locked and concurrent readers may
     # be deleting the same leftover
     for tag in tags:
@@ -566,25 +489,26 @@ def _prepared_built_under_lock(
     sf_dir: str, recoveries: tuple[tuple[str, str], ...], probe
 ) -> bool:
     """Authoritative built-check for a prepared layout that a rewrite
-    swap can displace (the document-family twin of
-    :func:`_vector_built_under_lock`, ADVICE r8 #4's TOCTOU): an
-    unlocked ``_is_built`` returning False can be a concurrent swap's
-    aside window — the path briefly absent between the two renames —
-    and a rebuild decision taken on it would rmtree a live generation.
-    Re-run the recovery and the probe under :func:`_prep_swap_flock`,
-    where no swap of this family can be mid-aside: a False here means
-    genuinely unbuilt/stale, so the caller's rebuild is safe (rewrites
-    only ever operate on BUILT layouts, so none can start against the
-    rebuild after the lock is released). The documents-family
-    dfreq/stats refreshes go through :func:`_staged_refresh` for
-    exactly this reason (review r9 pass-6 #1 — they run on the live
-    merge cadence); the EVENTS kv dfreq keeps its documented plain
-    overwrite because its ensure re-derives from the postings without
-    any refuse/rebuild hazard and its statistics are planning-only. ``recoveries`` lists EVERY
-    (path, tag) swap that can displace an artifact the probe reads —
-    a multi-artifact probe (postings + stats) must name each family
-    (review r9 pass-2 #1: recovering only the postings' ``.compact``
-    left the stats' ``.deladj`` aside window open)."""
+    swap can displace, the one every family's ensure confirms a rebuild
+    with: an unlocked ``_is_built`` returning False can be a concurrent
+    swap's aside window — the path briefly absent between the two
+    renames — and a rebuild decision taken on it would rmtree a live
+    generation. Re-run the recovery and the probe under
+    :func:`_prep_swap_flock`, where no swap can be mid-aside: a False
+    here means genuinely unbuilt/stale, so the caller's rebuild is safe
+    (rewrites only ever operate on BUILT layouts, so none can start
+    against the rebuild after the lock is released). ``probe`` runs
+    with the lock held, so it may finish other locked recoveries first
+    (the vector ensures complete a committed retrain there) but must
+    not take the lock itself. ``recoveries`` lists EVERY (path, tag)
+    swap that can displace an artifact the probe reads — a
+    multi-artifact probe (postings + stats) must name each family, or
+    the unnamed one's aside window stays open. Small derived artifacts
+    refreshed on the live merge cadence (the documents dfreq/stats) go
+    through :func:`_staged_refresh` so they are never torn for this
+    probe; the events kv dfreq keeps its plain overwrite because its
+    ensure re-derives it from the postings without any refuse/rebuild
+    hazard and its statistics are planning-only."""
     with _prep_swap_flock(sf_dir):
         for path, tag in recoveries:
             _recover_swap(path, tag)
@@ -613,35 +537,31 @@ def sweep_stale_stagings(sf_dir: str) -> int:
     return n
 
 def _staged_refresh(
-    sf_dir: str,
-    path: str,
-    write_fn,
-    tag: str = ".refresh",
-    recover_tags: tuple[str, ...] | None = None,
+    sf_dir: str, path: str, write_fn, tag: str = ".refresh"
 ) -> None:
     """Reader-safe replacement for a small derived artifact's
-    ``mode("overwrite")`` refresh (the documents dfreq/stats tables —
-    review r9 pass-6 #1): the plain overwrite left the directory
-    torn/unstamped for the duration of a Spark job, and a query racing
-    the LIVE merge cadence (``start_documents_ingest(merge_every=...)``
-    runs :func:`merge_postings_pending`, which refreshes df, while
-    queries serve) would see ``_is_built`` False and spuriously refuse
+    ``mode("overwrite")`` refresh (the documents dfreq table, and the
+    stats table under the ``.deladj`` tag): the plain overwrite left
+    the directory torn/unstamped for the duration of a Spark job, and a
+    query racing the LIVE merge cadence
+    (``start_documents_ingest(merge_every=...)`` runs
+    :func:`merge_postings_pending`, which refreshes df, while queries
+    serve) would see ``_is_built`` False and spuriously refuse
     (absorbed batches present) or start a racing rebuild.
     ``write_fn(target)`` must write the COMPLETE new generation — rows,
     stamp, sidecars — into ``target``. A fresh build (live path absent)
     writes directly (ensure-owned); otherwise the generation stages
     under a recovery-invisible name and commits through
-    :func:`_swap_in_locked` (``.refresh`` tag, recovered by
-    ``_postings_tables``' locked-when-pending reader recovery), so a
-    reader only ever observes a complete stamped generation."""
-    # recover EVERY swap family that can displace this artifact before
-    # the exists probe (review r9 pass-7 #1, widened by pass-8 #6 for
-    # two-family artifacts like stats — .deladj AND .refresh): a crash
-    # inside a prior swap's aside window leaves the path absent with a
-    # complete tmp — deciding "fresh build" on that state would
-    # plain-overwrite the live dir (torn for the whole Spark job) and
-    # race the recovery that restores the tmp.
-    _recover_prepared_swaps(sf_dir, path, *(recover_tags or (tag,)))
+    :func:`_swap_in_locked` (recovered by ``_postings_tables``'
+    locked-when-pending reader recovery), so a reader only ever
+    observes a complete stamped generation. ``tag`` is the one swap
+    family that rewrites ``path``."""
+    # recover a crashed prior swap before the exists probe: a crash
+    # inside its aside window leaves the path absent with a complete
+    # tmp — deciding "fresh build" on that state would plain-overwrite
+    # the live dir (torn for the whole Spark job) and race the
+    # recovery that restores the tmp.
+    _recover_prepared_swaps(sf_dir, path, tag)
     if not os.path.exists(path):
         write_fn(path)
         return
@@ -653,15 +573,16 @@ def _staged_refresh(
 
 def _swap_in_locked(sf_dir: str, path: str, tag: str, staging: str) -> None:
     """The commit tail shared by every prepared-family rewrite
-    (compaction, document vacuum, recluster, retention, deladj):
-    resolve any crashed prior swap (restore-never-delete), promote the
-    recovery-invisible staged dir through the three-rename swap, and
-    move the displaced generation to a ``{tag}.trash`` name INSIDE the
-    lock but delete it OUTSIDE — rmtree of a large displaced layout can
-    take minutes, and holding the process-wide swap lock for it would
-    block every other family's recovery and locked built-check (review
-    r9 pass-2 #5). The trash name is recovery-invisible; a crash
-    leftover is cleared by the next rewrite's own prologue here."""
+    (compaction, document and embedding vacuum, recluster, retention,
+    deladj, refresh): resolve any crashed prior swap
+    (restore-never-delete), promote the recovery-invisible staged dir
+    through the three-rename swap, and move the displaced generation to
+    a ``{tag}.trash`` name INSIDE the lock but delete it OUTSIDE —
+    rmtree of a large displaced layout can take minutes, and holding
+    the process-wide swap lock for it would block every other family's
+    recovery and locked built-check. The trash name is
+    recovery-invisible; a crash leftover is cleared by the next
+    rewrite's own prologue here."""
     tmp, old = f"{path}{tag}.tmp", f"{path}{tag}.old"
     trash = f"{path}{tag}.trash"
     # ignore_errors: a reader's locked recovery may be deleting the
@@ -669,10 +590,10 @@ def _swap_in_locked(sf_dir: str, path: str, tag: str, staging: str) -> None:
     shutil.rmtree(trash, ignore_errors=True)
     if not os.path.exists(os.path.join(staging, "_SUCCESS")):
         # the complete-generation-wins rule _recover_swap enforces for
-        # tmps, applied at the source (review r9 pass-7 #4): a torn
-        # staging — a writer bug or a contract-violating concurrent
-        # writer clobbering the shared staging name — must fail LOUDLY
-        # here, never be renamed in as the live generation
+        # tmps, applied at the source: a torn staging — a writer bug or
+        # a contract-violating concurrent writer clobbering the shared
+        # staging name — must fail LOUDLY here, never be renamed in as
+        # the live generation
         raise RuntimeError(
             f"staged rewrite at {staging} is incomplete (no _SUCCESS); "
             "refusing to swap it in. A concurrent writer may have "
@@ -724,11 +645,12 @@ def _write_pending(
     )
 
 def _pending_bids_with_data(pend: str) -> set[int]:
-    """Pending batch ids whose partition holds at least one data file.
+    """Batch ids whose ``_batch_id=`` partition under ``pend`` holds at
+    least one data file — a pending list's or a streaming-sink table's.
     A merge that crashed between its last file-move and the partition
-    rmtree leaves a DATA-LESS ``_batch_id=`` directory; reading the
-    pending area through Spark would then fail schema inference, so
-    every pending reader keys off this listing instead of bare
+    rmtree, or a torn sink write, leaves a DATA-LESS ``_batch_id=``
+    directory; reading it through Spark would then fail schema
+    inference, so every reader keys off this listing instead of bare
     directory existence."""
     if not os.path.isdir(pend):
         return set()
@@ -737,7 +659,9 @@ def _pending_bids_with_data(pend: str) -> set[int]:
         if not d.startswith("_batch_id="):
             continue
         p = os.path.join(pend, d)
-        if any(f.endswith(".parquet") for f in os.listdir(p)):
+        if os.path.isdir(p) and any(
+            f.endswith(".parquet") for f in os.listdir(p)
+        ):
             out.add(int(d.split("=", 1)[1]))
     return out
 

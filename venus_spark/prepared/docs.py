@@ -357,13 +357,12 @@ def _scrub_postings_delete(
     post_path = _core.prepared_path(sf_dir, _postings._POSTINGS_INDEX)
     dfreq_path = _core.prepared_path(sf_dir, "documents_dfreq.parquet")
     stats_path = _core.prepared_path(sf_dir, "documents_stats.parquet")
-    # every swap family that can displace an artifact this path reads
-    # (review r9 pass-7 #2: a heal's crashed stats .refresh swap
-    # would otherwise leave the sidecar read below seeing a missing
-    # dir — DELETE down until an unrelated query recovered it;
-    # pass-9 #2 added the postings' own .compact family)
+    # every swap family that can displace an artifact this path reads:
+    # a crashed stats swap would otherwise leave the sidecar read below
+    # seeing a missing dir — DELETE down until an unrelated query
+    # recovered it
     _core._recover_prepared_swaps(sf_dir, post_path, ".compact")
-    _core._recover_prepared_swaps(sf_dir, stats_path, ".deladj", ".refresh")
+    _core._recover_prepared_swaps(sf_dir, stats_path, ".deladj")
     _core._recover_prepared_swaps(sf_dir, dfreq_path, ".refresh")
     applied = _read_delete_adj_applied(stats_path)
     if batch_id not in applied:
@@ -411,13 +410,7 @@ def _scrub_postings_delete(
             with open(os.path.join(target, _DELETE_ADJ_SIDECAR), "w") as f:
                 json.dump(sorted(applied | {batch_id}), f)
 
-        _core._staged_refresh(
-            sf_dir,
-            stats_path,
-            _adjusted_stats,
-            tag=".deladj",
-            recover_tags=(".deladj", ".refresh"),
-        )
+        _core._staged_refresh(sf_dir, stats_path, _adjusted_stats, tag=".deladj")
     # Scrub the postings rows (idempotent: a retry removes nothing) and
     # re-derive df from the survivors. The join moves its key column
     # first — re-select the stored column order so the rewritten layout

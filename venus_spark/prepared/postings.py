@@ -1,13 +1,11 @@
 """Word-postings index over documents (tf/df/stats counters) —
-build, heal, pending writes, live union, delete scrubs, and merge."""
+build, pending writes, live union, delete scrubs, and merge."""
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,8 +38,7 @@ def compact_documents_postings(spark: SparkSession, sf_dir: str) -> bool:
     )
 
 # "round" covers the stored avgdl: it is a ROUNDED value, so a change
-# to the parity rounding discipline (review r11 pass-6 — built-in ROUND
-# replaced by the deterministic FLOOR form) must rebuild stale stats.
+# to the parity rounding discipline must rebuild stale stats.
 _POSTINGS_META = {"norm": "lower", "tokens": "ws", "layout": "range(term)",
                   "stats": "counters", "positions": "0-based",
                   "round": "floor-half-up-6"}
@@ -96,57 +93,27 @@ def _postings_tables(
     post_path = _core.prepared_path(sf_dir, "documents_postings.parquet")
     dfreq_path = _core.prepared_path(sf_dir, "documents_dfreq.parquet")
     stats_path = _core.prepared_path(sf_dir, "documents_stats.parquet")
-    _core._recover_prepared_swaps(sf_dir, post_path, ".compact")  # locked when pending
-    _core._recover_prepared_swaps(sf_dir, dfreq_path, ".refresh")  # df refresh swap
-    _core._recover_prepared_swaps(sf_dir, stats_path, ".deladj", ".refresh")
-    # (an interrupted delete's stats adjustment / heal's stats refresh)
-    # The heal-vs-rebuild fork is decided by the LOCKED probe, not an
-    # unlocked re-check (the IVF heal's review r11 pass-10 #2 lesson):
-    # during a compact/refresh swap's aside window an artifact is
-    # briefly absent, so an unlocked stamp-only check would read "not
-    # complete" and misroute a metadata-only migration into the
-    # destructive rebuild — whose absorbed-batches refusal then bricks
-    # every postings read path on an upgraded deployment.
+    # finish an interrupted compaction, df refresh, or delete's stats
+    # adjustment — locked when pending
+    _core._recover_prepared_swaps(sf_dir, post_path, ".compact")
+    _core._recover_prepared_swaps(sf_dir, dfreq_path, ".refresh")
+    _core._recover_prepared_swaps(sf_dir, stats_path, ".deladj")
     paths = (post_path, dfreq_path, stats_path)
-    state = {"stamp_only": False}
 
-    def _probe() -> bool:
-        if all(_core._is_built(p, meta) for p in paths):
-            return True
-        state["stamp_only"] = all(
-            _core._stamp_only_round_mismatch(p, meta) for p in paths
-        )
-        return False
+    def built() -> bool:
+        return all(_core._is_built(p, meta) for p in paths)
 
-    if not _probe() and not _core._prepared_built_under_lock(
+    if not built() and not _core._prepared_built_under_lock(
         sf_dir,
         (
             (post_path, ".compact"),
             (dfreq_path, ".refresh"),
             (stats_path, ".deladj"),
-            (stats_path, ".refresh"),
         ),
-        _probe,
+        built,
     ):
-        if state["stamp_only"]:
-            # ONLY the parity-rounding stamp key is stale (a layout
-            # built before review r11 pass-6's rounding discipline):
-            # postings and dfreq hold RAW counts/positions that do not
-            # depend on any rounding rule — only the one-row stats
-            # table bakes a rounded value (avgdl), and it stores the
-            # exact integer counters it was rounded from. Rewrite just
-            # the stats row and restamp, instead of the from-base
-            # rebuild — which would both drop absorbed streamed batches
-            # and hit the refusal, permanently bricking every
-            # BM25/phrase/prepared read path on an upgraded deployment
-            # (ADVICE r12 #1 — the postings twin of
-            # :func:`_heal_ivf_centroids`).
-            _heal_postings_round_stamp(
-                spark, sf_dir, post_path, dfreq_path, stats_path
-            )
-            return _read_postings_tables(spark, paths)
         _core._refuse_rebuild_with_absorbed_batches(post_path, "inverted index")
-        for p in (post_path, dfreq_path, stats_path):
+        for p in paths:
             if os.path.exists(p):
                 shutil.rmtree(p)
         live_docs = _docs._anti_tombstones(
@@ -161,82 +128,11 @@ def _postings_tables(
         _write_dfreq(spark, post_path, dfreq_path)
         n_docs, dl_sum = _doclen_counters(live_docs)
         _write_stats(spark, stats_path, n_docs, dl_sum)
-        for p in (post_path, dfreq_path, stats_path):
+        for p in paths:
             _core._stamp(p, meta)
-    return _read_postings_tables(spark, paths)
-
-def _read_postings_tables(
-    spark: SparkSession, paths: tuple[str, str, str]
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Declared reads of the (postings, dfreq, stats) layouts at ``paths``."""
     return tuple(
-        _core.read_layout(spark, name, p)
-        for name, p in zip(
-            (_POSTINGS_INDEX, "documents_dfreq.parquet", "documents_stats.parquet"),
-            paths,
-        )
+        _core.read_layout(spark, os.path.basename(p), p) for p in paths
     )
-
-def _heal_postings_round_stamp(
-    spark: SparkSession,
-    sf_dir: str,
-    post_path: str,
-    dfreq_path: str,
-    stats_path: str,
-) -> None:
-    """Non-destructive stamp migration for a postings family built
-    under an older parity-rounding rule (ADVICE r12 #1; the postings
-    twin of :func:`_heal_ivf_centroids`). Rows are untouched —
-    postings/dfreq are raw counts, so absorbed streamed batches stay
-    served and no refusal applies; the ONE baked rounded value (the
-    stats row's avgdl) is recomputed under the current rule from the
-    exact integer counters the same row stores, an O(1) job that never
-    touches the corpus. The delete-adjustment sidecar — the
-    exactly-once marker of :func:`_scrub_postings_delete` — is carried
-    across the rewrite like every row-set-preserving stats refresh
-    carries it (review r7 #1: losing it double-subtracts a delete's
-    retry).
-
-    Crash-ordering: stats (the only content change) commits FIRST via
-    the reader-safe staged swap, then postings/dfreq restamp
-    atomically. A crash between any two steps leaves every artifact
-    either old-stamped (heal-eligible: ``_stamp_only_round_mismatch``
-    accepts current stamps too) or fully healed — the retry completes
-    the rest, and no observable state routes to the destructive fork.
-    The whole body serializes on :func:`_prep_heal_flock` because
-    ``_staged_refresh``'s fixed staging name assumes one writer (see
-    the lock's docstring for the torn-stats-installed hazard);
-    restamps run under the swap flock after a recovery so the target
-    dir cannot be mid-aside."""
-    with _core._prep_heal_flock(sf_dir):
-        paths = (post_path, dfreq_path, stats_path)
-        if all(_core._is_built(p, _POSTINGS_META) for p in paths):
-            return  # a concurrent healer won
-        _core._recover_prepared_swaps(sf_dir, stats_path, ".deladj", ".refresh")
-        old = _core.read_layout(spark, "documents_stats.parquet", stats_path).first()
-        n_docs, dl_sum = int(old["n_docs"]), int(old["dl_sum"])
-        adj_applied = _docs._read_delete_adj_applied(stats_path)
-
-        def _healed_stats(target: str) -> None:
-            _write_stats(spark, target, n_docs, dl_sum)
-            if adj_applied:
-                with open(
-                    os.path.join(target, _docs._DELETE_ADJ_SIDECAR), "w"
-                ) as f:
-                    json.dump(sorted(adj_applied), f)
-            _core._stamp(target, _POSTINGS_META)
-
-        _core._staged_refresh(
-            sf_dir,
-            stats_path,
-            _healed_stats,
-            recover_tags=(".refresh", ".deladj"),
-        )
-        with _core._prep_swap_flock(sf_dir):
-            _core._recover_swap(post_path, ".compact")
-            _core._recover_swap(dfreq_path, ".refresh")
-            for p in (post_path, dfreq_path):
-                _core._restamp_atomic(p, _POSTINGS_META)
 
 def _postings_rows(docs: DataFrame) -> DataFrame:
     """(term, doc_id, dl, tf, pos) postings for a batch of documents —

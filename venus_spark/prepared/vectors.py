@@ -6,31 +6,25 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
-import threading
-import time
-import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from venus_spark.fsutil import write_json_atomic
-from venus_spark.functions import dround
 from venus_spark.sources import load_table
 from venus_spark.prepared import core as _core
 
 # The IVF centroid table BAKES davg-rounded values (the one stored
 # artifact besides the postings stats' avgdl that does), so it carries
-# the rounding-discipline rev: a layout built under the old built-in
-# ROUND rule would otherwise be silently served against oracles that
-# recompute centroids with the FLOOR rule — the exact divergence class
-# dround eliminates, re-entering through storage (review r11 pass-8
-# #1). The vector/codes tables are raw rows and PQ codebooks are raw
-# coreset samples — no rounding stored, no round stamp needed. One
-# constant shared by the build and the retrain staging so the two
-# writers cannot drift.
+# the rounding-discipline rev: a table built under another rounding
+# rule is stale and goes the way of every stale stamp — rebuilt from
+# base, or refused when the vector layout holds absorbed batches —
+# instead of being served against oracles that recompute centroids
+# with the FLOOR rule (``dround``). The vector/codes tables are raw
+# rows and PQ codebooks are raw coreset samples — no rounding stored,
+# no round stamp needed. One constant shared by the build and the
+# retrain staging so the two writers cannot drift.
 _IVF_CENT_META = {"centroid": "davg", "round": "floor-half-up-6"}
 
 _IVF = "embeddings_ivf.parquet"
@@ -50,192 +44,57 @@ def embeddings_ivf(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     centroid aggregation on every search."""
     vec_path = _core.prepared_path(sf_dir, "embeddings_ivf.parquet")
     cent_path = _core.prepared_path(sf_dir, "embeddings_ivf_centroids.parquet")
-    # cross-process visibility (r14): a foreign process's streamed
-    # abatch append, vacuum swap, or retrain must not stay hidden
-    # behind this session's cached listings — same guard as the
-    # document-side live views (core._refresh_on_external_change)
+    # cross-process visibility: a foreign process's streamed abatch
+    # append, vacuum swap, or retrain must not stay hidden behind this
+    # session's cached listings — same guard as the document-side live
+    # views (core._refresh_on_external_change), scoped per layout dir:
+    # appends/vacuum touch vec_path, a retrain swap touches both
     _core._refresh_paths_on_change(
         spark,
         vec_path,
-        # scoped per layout dir (r15): each gated on its own mtime —
-        # appends/vacuum touch vec_path, a retrain swap touches both
         (((vec_path,), vec_path), ((cent_path,), cent_path)),
     )
     # finish any interrupted vacuum swap + committed retrain, locked
-    _recover_vector_layouts(sf_dir, (vec_path,))
-    # The heal-vs-rebuild fork must be decided by the LOCKED probe, not
-    # an unlocked re-check after the lock drops (review r11 pass-10
-    # #2): a concurrent vacuum's aside window — vec_path briefly
-    # renamed away — would misroute a live built layout into the
-    # destructive from-base rebuild, and the absorbed-batches refusal
-    # reads an empty manifest from the absent dir, so the streamed
-    # rows would be silently rebuilt away. The probe records which
-    # state held WHILE the lock was held.
-    state = {"vec_ok": False}
+    _core._recover_prepared_swaps(sf_dir, vec_path, ".vacuum")
+    _recover_vector_retrain(sf_dir)
 
-    def _probe() -> bool:
-        state["vec_ok"] = _core._is_built(vec_path)
-        return state["vec_ok"] and _core._is_built(cent_path, _IVF_CENT_META)
+    def built() -> bool:
+        return _core._is_built(vec_path) and _core._is_built(cent_path, _IVF_CENT_META)
 
-    if not _probe() and not _vector_built_under_lock(
-        sf_dir, (vec_path,), _probe
+    def built_locked() -> bool:
+        # a retrain swap's aside window must not read as unbuilt either
+        _recover_vector_retrain_locked(sf_dir)
+        return built()
+
+    if not built() and not _core._prepared_built_under_lock(
+        sf_dir, ((vec_path, ".vacuum"),), built_locked
     ):
-        if state["vec_ok"]:
-            # ONLY the centroid stamp is stale/absent (a layout built
-            # before the rounding-discipline stamp, or a crash mid-heal):
-            # this is a METADATA-ONLY migration — recompute the
-            # broadcast-sized centroid table from the existing vec rows
-            # (the retrain recipe) instead of rmtree-ing the partitioned
-            # vector layout for a full from-base rebuild, which would
-            # also hit the absorbed-batches refusal and permanently
-            # brick every IVF read path on an upgraded deployment
-            # (review r11 pass-9 #1/#2).
-            _heal_ivf_centroids(spark, sf_dir, vec_path, cent_path)
-        else:
-            _core._refuse_rebuild_with_absorbed_batches(
-                vec_path, "IVF vector layout"
-            )
-            for p in (vec_path, cent_path):
-                if os.path.exists(p):
-                    shutil.rmtree(p)
-            from venus_spark.operators.similarity import centroid_arrays
+        _core._refuse_rebuild_with_absorbed_batches(vec_path, "IVF vector layout")
+        for p in (vec_path, cent_path):
+            if os.path.exists(p):
+                shutil.rmtree(p)
+        from venus_spark.operators.similarity import centroid_arrays
 
-            emb = _anti_vec_tombstones(
-                spark, sf_dir, load_table(spark, sf_dir, "embeddings")
-            )
-            _core.layout_rows(emb, _IVF).write.partitionBy("label").parquet(vec_path)
-            _core.layout_rows(centroid_arrays(emb), _IVF_CENT).write.parquet(cent_path)
-            _core._stamp(cent_path, _IVF_CENT_META)
-            # drift baseline for retrain_vector_artifacts_if_drifted:
-            # the build trained on the live set, so outstanding
-            # tombstones are already reflected
-            tb = embedding_tombstones(spark, sf_dir)
-            _write_train_meta(
-                cent_path,
-                0 if tb is None else tb.count(),
-                _core.read_layout(spark, _IVF, vec_path).count(),
-            )
+        emb = _anti_vec_tombstones(
+            spark, sf_dir, load_table(spark, sf_dir, "embeddings")
+        )
+        _core.layout_rows(emb, _IVF).write.partitionBy("label").parquet(vec_path)
+        _core.layout_rows(centroid_arrays(emb), _IVF_CENT).write.parquet(cent_path)
+        _core._stamp(cent_path, _IVF_CENT_META)
+        # drift baseline for retrain_vector_artifacts_if_drifted:
+        # the build trained on the live set, so outstanding
+        # tombstones are already reflected
+        tb = embedding_tombstones(spark, sf_dir)
+        _write_train_meta(
+            cent_path,
+            0 if tb is None else tb.count(),
+            _core.read_layout(spark, _IVF, vec_path).count(),
+        )
     # outstanding (not yet vacuumed) vector deletes filter at read
     return (
         _anti_vec_tombstones(spark, sf_dir, _core.read_layout(spark, _IVF, vec_path)),
         _core.read_layout(spark, _IVF_CENT, cent_path),
     )
-
-def _heal_ivf_centroids(
-    spark: SparkSession, sf_dir: str, vec_path: str, cent_path: str
-) -> None:
-    """Recompute ONLY the centroid table from the existing (live,
-    anti-tombstoned) vec layout and stamp it with the current rounding
-    discipline — the non-destructive migration for a centroid table
-    whose stamp predates :data:`_IVF_CENT_META` (review r11 pass-9
-    #1/#2). The vec rows are raw and untouched, so absorbed streamed
-    batches stay served and no refusal applies.
-
-    The Spark work stages OUTSIDE the lock (the vacuum's own
-    discipline — the swap flock must not be held across corpus-sized
-    jobs, review r11 pass-10 #4); only the re-probe + swap run locked.
-    A vacuum swapping vec_path mid-stage fails the staging job LOUDLY
-    (whole-dir rename) — retryable, never silent. The existing drift
-    baseline (``_vec_train_meta.json``) is PRESERVED, not re-seeded:
-    it is the SHARED baseline that also gates the PQ codebook retrain,
-    and resetting it on a centroids-only heal would silently erase the
-    codebook's accumulated delete drift (review r11 pass-10 #1) —
-    fresh counts are seeded only when no readable baseline exists.
-    Crash-safe: a crash between the rmtree and the rename leaves
-    cent_path absent with vec built, which re-enters this heal on the
-    next ensure — and the leftover staging then holds the ONLY copy of
-    the preserved baseline, so it is read BEFORE the sweep (review r11
-    pass-11 #2). Staging names are per-attempt unique: the heal runs
-    on the ensure path where several processes can enter concurrently,
-    and a fixed tmp name let healer B rmtree/overwrite healer A's
-    in-flight staging into a mixed directory that a later rename would
-    serve with a valid stamp (review r11 pass-11 #1) — with unique
-    names the loser's staging at worst dies loudly when the winner
-    sweeps it, and its locked re-probe then sees the healed table."""
-    from venus_spark.operators.similarity import centroid_arrays
-
-    def _valid(m) -> bool:
-        return (
-            isinstance(m, dict) and "tb_at_train" in m and "trained_n" in m
-        )
-
-    # baseline FIRST: cent_path's copy, else a crashed staging's
-    keep = _read_train_meta(cent_path)
-    parent = os.path.dirname(cent_path)
-    base = os.path.basename(cent_path) + ".restamp."
-    leftovers = (
-        [
-            os.path.join(parent, n)
-            for n in os.listdir(parent)
-            if n.startswith(base)
-        ]
-        if os.path.isdir(parent)
-        else []
-    )
-    for p in leftovers:
-        if not _valid(keep):
-            keep = _read_train_meta(p)
-    for p in leftovers:
-        shutil.rmtree(p, ignore_errors=True)  # crashed prior attempts
-    live = _anti_vec_tombstones(spark, sf_dir, _core.read_layout(spark, _IVF, vec_path))
-    fallback = None
-    if not _valid(keep):
-        # only when NO baseline survives anywhere (pre-r7 layout or
-        # triple crash) — two corpus-sized jobs, skipped in the common
-        # preserved-baseline case (review r11 pass-11 #3)
-        tb = embedding_tombstones(spark, sf_dir)
-        fallback = (0 if tb is None else tb.count(), live.count())
-    tmp = f"{cent_path}.restamp.{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp"
-    _core.layout_rows(centroid_arrays(live), _IVF_CENT).write.parquet(tmp)
-    _core._stamp(tmp, _IVF_CENT_META)
-    with _vec_swap_flock(sf_dir):
-        _core._recover_swap(vec_path, ".vacuum")
-        _recover_vector_retrain_locked(sf_dir)
-        if _core._is_built(cent_path, _IVF_CENT_META):
-            shutil.rmtree(tmp, ignore_errors=True)  # a concurrent win
-            return
-        if not _core._is_built(vec_path):
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(
-                f"IVF vector layout at {vec_path} disappeared while "
-                "healing its centroid stamp — out-of-band deletion; "
-                "re-run the ensure after restoring or rebuilding it."
-            )
-        keep2 = _read_train_meta(cent_path)  # freshest, lock-held
-        if _valid(keep2):
-            vals = (keep2["tb_at_train"], keep2["trained_n"])
-        elif _valid(keep):
-            vals = (keep["tb_at_train"], keep["trained_n"])
-        else:
-            vals = fallback
-        _write_train_meta(tmp, *vals)
-        # Install via ASIDE-rename, never rmtree-then-rename (ADVICE
-        # r12 #2): the prologue sweep runs UNLOCKED by design, so a
-        # concurrent healer can delete this attempt's tmp between the
-        # checks above and the install — rmtree-ing cent_path first
-        # would then fail the rename AFTER the only on-disk copy of the
-        # preserved drift baseline was destroyed, and the next heal
-        # would silently re-seed fresh counts (erasing the PQ
-        # codebook's accumulated delete drift). With the aside, a
-        # failed install restores cent_path intact and fails loudly —
-        # retryable, nothing lost; the aside name shares the
-        # ``.restamp.`` prefix so a crash between the renames leaves it
-        # baseline-readable and sweepable by the next heal's prologue.
-        aside = None
-        if os.path.exists(cent_path):
-            aside = (
-                f"{cent_path}.restamp."
-                f"{os.getpid()}-{uuid.uuid4().hex[:8]}.aside"
-            )
-            os.rename(cent_path, aside)
-        try:
-            os.rename(tmp, cent_path)
-        except OSError:
-            if aside is not None and not os.path.exists(cent_path):
-                os.rename(aside, cent_path)  # restore the displaced old
-            raise
-        if aside is not None:
-            shutil.rmtree(aside, ignore_errors=True)
 
 def embeddings_pq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """The PQ index as write-time artifacts: ``(codes, codebook)``.
@@ -263,21 +122,25 @@ def embeddings_pq(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFram
     }
     codes_path = _core.prepared_path(sf_dir, "embeddings_pq_codes.parquet")
     cb_path = _core.prepared_path(sf_dir, "embeddings_pq_codebook.parquet")
-    # cross-process visibility (r14) — see embeddings_ivf
+    # cross-process visibility, scoped per layout dir — see embeddings_ivf
     _core._refresh_paths_on_change(
         spark,
         codes_path,
-        # scoped per layout dir (r15) — see embeddings_ivf
         (((codes_path,), codes_path), ((cb_path,), cb_path)),
     )
     # finish any interrupted vacuum swap + committed retrain, locked
-    _recover_vector_layouts(sf_dir, (codes_path,))
-    if not (_core._is_built(codes_path, meta) and _core._is_built(cb_path, meta)) and not (
-        _vector_built_under_lock(
-            sf_dir,
-            (codes_path,),
-            lambda: _core._is_built(codes_path, meta) and _core._is_built(cb_path, meta),
-        )
+    _core._recover_prepared_swaps(sf_dir, codes_path, ".vacuum")
+    _recover_vector_retrain(sf_dir)
+
+    def built() -> bool:
+        return _core._is_built(codes_path, meta) and _core._is_built(cb_path, meta)
+
+    def built_locked() -> bool:
+        _recover_vector_retrain_locked(sf_dir)  # see embeddings_ivf
+        return built()
+
+    if not built() and not _core._prepared_built_under_lock(
+        sf_dir, ((codes_path, ".vacuum"),), built_locked
     ):
         _core._refuse_rebuild_with_absorbed_batches(codes_path, "PQ codes layout")
         for p in (codes_path, cb_path):
@@ -456,16 +319,17 @@ def vacuum_embedding_tombstones(spark: SparkSession, sf_dir: str) -> int:
     and the PQ codes table (label-partitioned writes preserved, stamps
     carried, same crash-safe swap + retained-tombstone semantics as the
     document vacuum). Returns rows removed."""
-    # resolve any COMMITTED retrain and interrupted vacuum swaps first
-    # (review r8 pass-3 #4): this vacuum rewrites the codes table, and
-    # racing a reader's marker recovery could reinstall pre-retrain
-    # codes over the retrained generation while the retrained codebook
-    # stays live
     paths = tuple(
         _core.prepared_path(sf_dir, n)
         for n in ("embeddings_ivf.parquet", "embeddings_pq_codes.parquet")
     )
-    _recover_vector_layouts(sf_dir, paths)
+    # resolve any interrupted vacuum swap and COMMITTED retrain first:
+    # this vacuum rewrites the codes table, and staging it from
+    # pre-retrain codes would reinstall them over the retrained
+    # generation while the retrained codebook stays live
+    for path in paths:
+        _core._recover_prepared_swaps(sf_dir, path, ".vacuum")
+    _recover_vector_retrain(sf_dir)
     tb = embedding_tombstones(spark, sf_dir)
     if tb is None:
         return 0
@@ -483,18 +347,12 @@ def vacuum_embedding_tombstones(spark: SparkSession, sf_dir: str) -> int:
             meta = None
         manifest = _core._read_abatch_manifest(path)
         marked = _core._has_append_marker(path)
-        tmp, old = path + ".vacuum.tmp", path + ".vacuum.old"
-        # STAGE under a name no recovery path ever touches (review r8
-        # pass-5 #1): this Spark rewrite runs OUTSIDE the lock (it can
-        # take seconds and must not block readers), and a reader's
-        # locked recovery observing path+.vacuum.tmp both present would
-        # rmtree the freshly staged tmp mid-write. The staged dir
-        # becomes the real tmp atomically INSIDE the lock, so the tmp
-        # never exists outside a locked section.
+        # stage outside the lock under a recovery-invisible name, then
+        # swap in under the one prepared-swap lock — the document
+        # vacuum's recipe (docs.vacuum_document_tombstones)
         staging = path + ".vacuum_staging"
-        for stale in (tmp, old, staging):
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
+        if os.path.exists(staging):
+            shutil.rmtree(staging)  # our own crashed prior staging
         (
             cur.join(F.broadcast(tb), "vec_id", "left_anti")
             .write.partitionBy("label")
@@ -510,22 +368,7 @@ def vacuum_embedding_tombstones(spark: SparkSession, sf_dir: str) -> int:
             _core._write_abatch_manifest(staging, manifest)
         if marked:
             _core._mark_appended(staging)
-        # the swap holds the shared vector-swap lock (review r8 pass-4
-        # #3): this aside window is exactly where a concurrent
-        # recovery's strand-heal could resurrect a stale .retrain.old
-        # into the briefly-missing path
-        with _vec_swap_flock(sf_dir):
-            os.rename(staging, tmp)
-            os.rename(path, old)
-            try:
-                os.rename(tmp, path)
-            except OSError:
-                # an unlocked reader's _recover_swap completed the swap
-                # inside our aside window — the end state is the one we
-                # wanted; anything else is a real failure
-                if not os.path.exists(os.path.join(path, "_SUCCESS")):
-                    raise
-            shutil.rmtree(old, ignore_errors=True)
+        _core._swap_in_locked(sf_dir, path, ".vacuum", staging)
         removed += n_dead
     return removed
 
@@ -542,76 +385,6 @@ def vacuum_embedding_tombstones(spark: SparkSession, sf_dir: str) -> int:
 _VEC_TRAIN_META = "_vec_train_meta.json"
 
 _VEC_RETRAIN_MARKER = "_vec_retrain_commit.json"
-
-_VEC_RETRAIN_LOCK = threading.Lock()
-
-_VEC_RETRAIN_LOCKFILE = "_vec_retrain.lock"
-
-@contextmanager
-def _vec_swap_flock(sf_dir: str):
-    """Mutual exclusion for every swap OR swap-recovery that can
-    displace a vector artifact (retrain recovery, vacuum recovery, and
-    the vacuum's own swap): an OS-level ``flock`` — exclusive across
-    processes AND across threads here, since each acquisition opens its
-    own descriptor and flock locks conflict between open file
-    descriptions — released by the kernel on crash. The module lock in
-    front keeps a process's threads queueing in user space instead of
-    the kernel and makes the critical section explicit; it is NOT
-    reentrant, so locked helpers must never nest. Review r8 passes 4-5:
-    bare-rename protocols between unsynchronized swappers kept leaving
-    one interleaving that stranded or resurrected a generation; under
-    one shared lock a swap either completes or fails LOUDLY with no
-    racer to blame. (A real cluster filesystem would use a lakehouse
-    table format's commit log here instead — the documented production
-    seam.)"""
-    with _core._swap_flock(sf_dir, _VEC_RETRAIN_LOCKFILE, _VEC_RETRAIN_LOCK):
-        yield
-
-def _recover_vector_layouts(sf_dir: str, vacuum_paths: tuple[str, ...]) -> None:
-    """ONE locked recovery entry point for the vector layouts' ensure
-    paths: finish any interrupted ``.vacuum`` swap AND any committed
-    retrain, under the shared lock (review r8 pass-5 #1: a reader
-    running ``_recover_swap('.vacuum')`` unlocked could rmtree a
-    vacuum's freshly staged tmp or complete its swap mid-aside).
-    Lock-free fast path when nothing is pending anywhere — the common
-    case for every query."""
-    pending = os.path.exists(
-        _core.prepared_path(sf_dir, _VEC_RETRAIN_MARKER)
-    ) or any(
-        os.path.exists(_core.prepared_path(sf_dir, n) + ".retrain.old")
-        for n in _VEC_RETRAIN_NAMES
-    ) or any(
-        os.path.exists(p + tag)
-        for p in vacuum_paths
-        for tag in (".vacuum.tmp", ".vacuum.old")
-    )
-    if not pending:
-        return
-    with _vec_swap_flock(sf_dir):
-        for p in vacuum_paths:
-            _core._recover_swap(p, ".vacuum")
-        _recover_vector_retrain_locked(sf_dir)
-
-def _vector_built_under_lock(
-    sf_dir: str, vacuum_paths: tuple[str, ...], probe
-) -> bool:
-    """Authoritative built-check for the vector ensure paths (ADVICE r8
-    #4, the TOCTOU in the lock-free fast path): an unlocked
-    ``_is_built`` returning False can be a concurrent vacuum/retrain
-    swap's ASIDE WINDOW — the path is briefly absent between the two
-    renames — and deciding to rebuild on that observation would rmtree
-    a live generation's sibling artifacts mid-swap. Before any
-    destructive rebuild, re-run the recovery AND the built probe under
-    the shared swap lock, where no swap can be mid-aside: a False here
-    means genuinely unbuilt (every displacer holds this lock), so the
-    caller's rebuild is safe — new maintenance only ever operates on
-    BUILT layouts, so nothing can start a swap against the rebuild
-    after the lock is released."""
-    with _vec_swap_flock(sf_dir):
-        for p in vacuum_paths:
-            _core._recover_swap(p, ".vacuum")
-        _recover_vector_retrain_locked(sf_dir)
-        return probe()
 
 def _read_train_meta(cent_path: str) -> dict | None:
     try:
@@ -637,32 +410,28 @@ def _recover_vector_retrain(sf_dir: str) -> None:
     artifacts must change TOGETHER (codes encoded against one codebook,
     ADC-decoded against the other would compute wrong distances), so
     the retrain stages BOTH tmps completely, writes a commit marker,
-    then swaps — and this recovery, called from every PQ ensure path,
-    force-completes both swaps whenever the marker exists.
+    then swaps — and this recovery, called from every vector ensure
+    path, force-completes both swaps whenever the marker exists.
 
     STRICTLY marker-driven: without the marker this performs no swap.
     Read paths call it concurrently with a maintenance process that may
     be mid-staging, and an eager "clean up stale tmps" here would
-    destroy the in-flight stage (review r8 #1: a reader-side rmtree
-    racing the codes write could yield a mixed-generation commit).
-    Uncommitted leftovers from a crashed retrain are cleaned by the
-    next retrain itself — the single-maintenance-writer discipline all
-    the swap families share.
+    destroy the in-flight stage and could yield a mixed-generation
+    commit. Uncommitted leftovers from a crashed retrain are cleaned by
+    the next retrain itself — the single-maintenance-writer discipline
+    all the swap families share.
 
-    RACE POSTURE (review r8 pass-2 #1, pass-3 #1/#2/#7, pass-4
-    #1-#4): every swap that can displace a vector artifact — this
-    recovery AND the embeddings vacuum — runs under ONE exclusive lock
-    (:func:`_vec_swap_flock`: flock across processes, module lock
-    across threads), so there is no concurrent swapper to race: the
-    bare-rename protocols of the earlier passes each left one
-    interleaving that stranded or resurrected a generation. Under the
-    lock, the strand-heal prologue (restore a complete artifact
-    displaced to ``.retrain.old`` while its live path is missing — a
-    crashed swap) cannot fire inside another swap's aside window, a
-    stale ``.retrain.old`` is cleared before the aside-rename so
-    ENOTEMPTY cannot wedge a committed swap, and any rename failure is
-    now a REAL filesystem failure — raised loudly with the marker left
-    in place, never a half-swapped generation silently committed."""
+    Race posture: this recovery runs under :func:`_core._prep_swap_flock`,
+    the lock every other swap of a vector artifact (the embeddings
+    vacuum) and every prepared recovery holds, so there is no
+    concurrent swapper to race. Under the lock, the strand-heal
+    prologue (restore a complete artifact displaced to ``.retrain.old``
+    while its live path is missing — a crashed swap) cannot fire inside
+    another swap's aside window, a stale ``.retrain.old`` is cleared
+    before the aside-rename so ENOTEMPTY cannot wedge a committed swap,
+    and any rename failure is a REAL filesystem failure — raised loudly
+    with the marker left in place, never a half-swapped generation
+    silently committed."""
     marker = _core.prepared_path(sf_dir, _VEC_RETRAIN_MARKER)
     # lock-free fast path: nothing pending, nothing stranded
     if not os.path.exists(marker) and not any(
@@ -670,12 +439,12 @@ def _recover_vector_retrain(sf_dir: str) -> None:
         for n in _VEC_RETRAIN_NAMES
     ):
         return
-    with _vec_swap_flock(sf_dir):
+    with _core._prep_swap_flock(sf_dir):
         _recover_vector_retrain_locked(sf_dir)
 
 def _recover_vector_retrain_locked(sf_dir: str) -> None:
     """Body of :func:`_recover_vector_retrain`; caller MUST hold
-    :func:`_vec_swap_flock` (the lock is not reentrant)."""
+    :func:`_core._prep_swap_flock` (the lock is not reentrant)."""
     marker = _core.prepared_path(sf_dir, _VEC_RETRAIN_MARKER)
     # strand-heal first: a complete artifact displaced while the
     # live path is missing is a crashed swap — restore, never delete
@@ -689,8 +458,7 @@ def _recover_vector_retrain_locked(sf_dir: str) -> None:
         elif os.path.exists(path) and os.path.exists(old):
             # a lingering .retrain.old beside a LIVE path is garbage —
             # clearing it here keeps the lock-free fast path usable
-            # (review r8 pass-5 #4: otherwise every future query pays
-            # this lock round-trip forever)
+            # (otherwise every future query pays this lock round-trip)
             shutil.rmtree(old, ignore_errors=True)
     if not os.path.exists(marker):
         return  # another locker finished the recovery meanwhile
@@ -715,7 +483,6 @@ def vector_artifact_drift(spark: SparkSession, sf_dir: str) -> float:
     never rebuilds anything. A pre-baseline deployment (sidecar absent)
     initializes conservatively: every outstanding tombstone counts as
     post-training drift."""
-    _recover_vector_retrain(sf_dir)
     vecs, _cent = embeddings_ivf(spark, sf_dir)
     cent_path = _core.prepared_path(sf_dir, "embeddings_ivf_centroids.parquet")
     tb = embedding_tombstones(spark, sf_dir)

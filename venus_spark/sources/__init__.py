@@ -63,8 +63,11 @@ def _footer_schema(path: str, _mtime_ns: int) -> T.StructType | None:
     first data file of a directory), read from the footer on the driver
     with pyarrow — no Spark job. Cached per path and mtime (the mtime is
     part of the key only); ``None`` when the directory holds no data
-    file. Parquet TIMESTAMP(NANOS) maps to bigint, as
-    ``spark.sql.legacy.parquet.nanosAsLong`` reads it."""
+    file. An INT96 column — how Spark writes a (local-time-zone)
+    timestamp by default — maps to timestamp; any other parquet
+    TIMESTAMP(NANOS) maps to bigint, as
+    ``spark.sql.legacy.parquet.nanosAsLong`` reads it. pyarrow reports
+    both as ``timestamp[ns]``, so the physical type tells them apart."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_type
@@ -80,10 +83,19 @@ def _footer_schema(path: str, _mtime_ns: int) -> T.StructType | None:
         if not data:
             return None
         first = data[0]
+    with pq.ParquetFile(first) as pf:
+        arrow, leaves = pf.schema_arrow, pf.schema
+    int96 = {
+        leaves.column(i).path
+        for i in range(len(leaves))
+        if leaves.column(i).physical_type == "INT96"
+    }
     fields = []
-    for field in pq.read_schema(first):
+    for field in arrow:
         t = field.type
-        if pa.types.is_timestamp(t) and t.unit == "ns":
+        if field.name in int96:
+            dt = T.TimestampType()
+        elif pa.types.is_timestamp(t) and t.unit == "ns":
             dt = T.LongType()
         else:
             try:

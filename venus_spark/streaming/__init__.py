@@ -222,10 +222,14 @@ def pending_vector_batches(sf_dir: str, layout_file: str) -> tuple[str, list[int
     non-empty, so the torn window over-serves nothing. Quiescent dirs
     return an empty list and the live plans degrade to the prepared
     path."""
-    from venus_spark.prepared import _read_abatch_manifest, prepared_path
+    from venus_spark.prepared import (
+        _pending_bids_with_data,
+        _read_abatch_manifest,
+        prepared_path,
+    )
 
     sink = _resolve_sink_dir(sf_dir, _EMB_SINK_POINTER, embeddings_stream_sink_dir)
-    sink_ids = _sink_batch_ids(os.path.join(sink, "embeddings"))
+    sink_ids = _pending_bids_with_data(os.path.join(sink, "embeddings"))
     if not sink_ids:
         return sink, []
     committed = _read_abatch_manifest(prepared_path(sf_dir, layout_file))
@@ -351,26 +355,6 @@ def _sink_table_has_data(sink_dir: str, table: str) -> bool:
     existence."""
     p = os.path.join(sink_dir, table)
     return os.path.isdir(p) and _dir_has_parquet(p)
-
-
-def _sink_batch_ids(table_dir: str) -> set[int]:
-    """Batch ids whose ``_batch_id=`` partition holds at least one data
-    file in a streaming-sink table — the sink twin of
-    ``prepared._pending_bids_with_data`` (a torn write can leave a
-    data-less partition directory that must read as absent)."""
-    if not os.path.isdir(table_dir):
-        return set()
-    out = set()
-    for d in os.listdir(table_dir):
-        if not d.startswith("_batch_id="):
-            continue
-        p = os.path.join(table_dir, d)
-        if os.path.isdir(p) and any(
-            f.endswith(".parquet") for f in os.listdir(p)
-        ):
-            out.add(int(d.split("=", 1)[1]))
-    return out
-
 
 
 def read_log_stream(
