@@ -555,9 +555,9 @@ def vacuum_document_tombstones(spark: SparkSession, sf_dir: str) -> int:
         if not os.path.exists(path):
             continue
         # snapshot the carried bookkeeping BEFORE the parquet listing
-        # pins (review r9 pass-4 #2): under a contract-violating
-        # concurrent append, snapshot-then-list double-lands the
-        # batch's retry instead of silently losing its rows
+        # pins: under a contract-violating concurrent append,
+        # snapshot-then-list double-lands the batch's retry instead of
+        # silently losing its rows
         meta = _core._read_meta(path)
         manifest = _core._read_abatch_manifest(path)
         merged = _core._read_merged(path)
@@ -566,10 +566,10 @@ def vacuum_document_tombstones(spark: SparkSession, sf_dir: str) -> int:
         n_dead = cur.join(F.broadcast(tb), "doc_id", "left_semi").count()
         if n_dead == 0:
             continue  # already physical for this index
-        # STAGE under a name no recovery path ever touches (ADVICE r8
-        # #1 — the same recipe as vacuum_embedding_tombstones): the
-        # Spark rewrite runs OUTSIDE the lock (it can take seconds and
-        # must not block readers), and a reader's recovery observing
+        # STAGE under a name no recovery path ever touches (the same
+        # recipe as vacuum_embedding_tombstones): the Spark rewrite
+        # runs OUTSIDE the lock (it can take seconds and must not
+        # block readers), and a reader's recovery observing
         # path + .vacuum.tmp both present would rmtree a directly-
         # staged tmp mid-write. The staged dir becomes the real tmp
         # atomically INSIDE the lock, so the tmp never exists outside
@@ -599,7 +599,7 @@ def vacuum_document_tombstones(spark: SparkSession, sf_dir: str) -> int:
         # interleave the aside window (path briefly absent between the
         # two renames) or resurrect the displaced old generation; the
         # shared tail resolves any crashed prior swap first
-        # (restore-never-delete, review r9 #1)
+        # (restore-never-delete)
         _core._swap_in_locked(sf_dir, path, ".vacuum", staging)
         removed += n_dead
     return removed

@@ -552,7 +552,7 @@ def retrain_vector_artifacts_if_drifted(
         # unreachable when the drift check's recovery succeeded (it
         # raises on failure), but staging fresh tmps under a LIVE
         # marker would hand a concurrent recovery a half-generation to
-        # commit (review r8 pass-4 #2) — refuse outright
+        # commit — refuse outright
         raise RuntimeError(
             f"pending retrain commit at {marker} was not resolved; "
             "refusing to stage a new retrain over it."
@@ -561,8 +561,8 @@ def retrain_vector_artifacts_if_drifted(
     tb = embedding_tombstones(spark, sf_dir)
     n_tb = 0 if tb is None else tb.count()
     trained_n = vecs.count()
-    # Manifest/marker snapshot BEFORE the staging writes (review r8
-    # pass-6 #6, the vacuum's own ordering): a batch appended DURING
+    # Manifest/marker snapshot BEFORE the staging writes (the
+    # vacuum's own ordering): a batch appended DURING
     # the re-encode is not in the staged rows, so carrying its id
     # would make the retry a no-op and silently drop its codes — a
     # pre-staging snapshot leaves such a batch un-manifested and the
@@ -595,7 +595,7 @@ def retrain_vector_artifacts_if_drifted(
     # the drift baseline travels INSIDE the staged centroids dir: a
     # crash between the marker and the swap then still delivers it with
     # the recovery, instead of leaving fresh artifacts that read as
-    # 100%-drifted and trigger a spurious full retrain (review r8 #2)
+    # 100%-drifted and trigger a spurious full retrain
     _write_train_meta(cent_path + ".retrain.tmp", n_tb, trained_n)
     _codebook_rows(spark, codebook).write.parquet(cb_path + ".retrain.tmp")
     _core._stamp(cb_path + ".retrain.tmp", pq_meta)
